@@ -6,9 +6,14 @@ The engine replaces that with explicit, validated scans: Parquet for
 the star-schema fixtures (column-pruned + predicate-pushdown for
 free), JSON-with-declared-schema for GeoJSON fixtures (never
 inferred), and a corrupt-record column instead of blind trust.
+
+It also owns the layout of versioned state dirs (``committed_versions``,
+``version_path``) that the stateful sinks and streams share.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -97,3 +102,23 @@ def read_geojson(spark: SparkSession, path: str, schema) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .json(path)
     )
+
+
+def committed_versions(state_dir: str, prefix: str) -> list[int]:
+    """Ascending numbers of the complete ``{prefix}NNNNNN`` versions
+    under ``state_dir``. A version counts once Spark's ``_SUCCESS``
+    marker, written last by the parquet commit, is in it: a dir left
+    by a crashed write is ignored, and the next write of that number
+    overwrites it. Recovery reads this listing, never driver memory."""
+    if not os.path.isdir(state_dir):
+        return []
+    return sorted(
+        int(name[len(prefix):])
+        for name in os.listdir(state_dir)
+        if name.startswith(prefix)
+        and os.path.exists(os.path.join(state_dir, name, "_SUCCESS"))
+    )
+
+
+def version_path(state_dir: str, prefix: str, version: int) -> str:
+    return os.path.join(state_dir, f"{prefix}{version:06d}")

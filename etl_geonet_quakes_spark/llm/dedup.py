@@ -1633,15 +1633,8 @@ def containment_candidates(
     join (SCALE.md round-8 curve: the measured fix for the round-7
     ×1,425 candidate blowup; capped counts pinned in
     tests/test_scale_curve.py)."""
-    # r15 close-out: spread_single_split_scan was applied here
-    # mid-round and REMOVED on re-measurement — the 6-rep quiet-window
-    # same-process toggle reads it min-ratio 1.008 / med-ratio 1.121
-    # (off [2.28..2.57] vs on [2.30..2.95] s ignoring one 5.5 s
-    # outlier): the containment pipeline's exploded-token stream is
-    # shuffled by t for the df table immediately anyway, so the extra
-    # round-robin exchange of the text rows only adds work. The
-    # sibling prefix_filter_candidates keeps the spread (its toggle
-    # reads 0.85–0.94).
+    # No spread_single_split_scan: removed in r15 on re-measurement
+    # (OPTIMIZATION_r15.md, "q180_dedup_containment: spread REMOVED").
     s = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     ).select("doc_id", shingles_str(F.col("text"), 3).alias("sh"))

@@ -2828,13 +2828,13 @@ def media_warc_stream_upsert_expiry(spark: SparkSession, sf_dir: str) -> DataFra
     crawl 1 is the full corpus, crawl 2 a re-crawl from which every
     doc_id % 10 == 0 document has vanished. Each crawl publishes one
     snapshot keyed by doc id; the sink diffs id sets across publishes
-    WITHOUT any driver collect (anti-join + scratch parquet), so the
-    expiry computation is a distributed plan that scales with
-    executors, not driver memory. One publish == one COMPLETED crawl:
-    availableNow over the shard set feeds a single foreachBatch call
-    (no maxFilesPerTrigger split), which is the correct snapshot
-    grain — diffing partial shards against a full crawl would expire
-    everything not yet re-seen.
+    WITHOUT any driver collect (an anti-join of two durable id-set
+    versions), so the expiry computation is a distributed plan that
+    scales with executors, not driver memory. One publish == one
+    COMPLETED crawl: availableNow over the shard set feeds a single
+    foreachBatch call (no maxFilesPerTrigger split), which is the
+    correct snapshot grain — diffing partial shards against a full
+    crawl would expire everything not yet re-seen.
 
     Result: the ids crawl 2 expired, each with the live-corpus size
     the second publish reported — both facts the oracle rebuilds

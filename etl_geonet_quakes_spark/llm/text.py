@@ -1135,16 +1135,8 @@ def duplicate_ngram_rate(spark: SparkSession, sf_dir: str,
     it is bounded by doc count, not shingle count."""
     from etl_geonet_quakes_spark.llm.dedup import shingles_str
 
-    # r15 close-out: spread_single_split_scan was applied here
-    # mid-round and REMOVED on re-measurement — two independent
-    # quiet-window same-process toggles (4- and 6-rep alternating)
-    # read the spread at min-ratio 1.20–1.25 / med-ratio 1.16–1.19
-    # (off [0.81..1.02] vs on [0.97..1.28] s): this query's only
-    # corpus-scale stage is already the map-side PARTIAL agg of the
-    # (shingle, df, min-doc) stream, and the added round-robin
-    # exchange of the raw text rows costs more than the parallel
-    # shingle build saves. The helper stays on the passes where the
-    # toggle reads it a win (q39/q40/q216/q268 — see dedup.py).
+    # No spread_single_split_scan: removed in r15 on re-measurement
+    # (OPTIMIZATION_r15.md, "q243_duplicate_ngram_rate: spread REMOVED").
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     ).select("doc_id", "source", shingles_str(F.col("text"), n).alias("sh"))

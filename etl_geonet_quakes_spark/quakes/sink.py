@@ -10,58 +10,52 @@ expires it. Two adapters re-express that:
   by id so the envelope is byte-stable (distributed row order is not,
   SURVEY §7.4). Payloads here are O(100) rows by contract.
 - ``SnapshotDiffSink`` — the scale path: each trigger/batch publishes
-  a full snapshot keyed by id and diffs against the previous
-  snapshot's id set to emit explicit ``expired`` ids. This turns the
-  reference's implicit platform-side state into engine-visible state
-  that works under ``foreachBatch`` in streaming or per-run in batch.
+  a full snapshot keyed by id and diffs its id set against the
+  previous publish's to emit explicit ``expired`` ids. The id sets
+  are an append-only series of committed versions on disk
+  (``ids_000001``, ``ids_000002``, ...), each written once; the diff
+  is a lazy anti-join of two of them. This turns the reference's
+  implicit platform-side state into engine-visible state that works
+  under ``foreachBatch`` in streaming or per-run in batch.
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import shutil
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from etl_geonet_quakes_spark.io import committed_versions, version_path
+
+_IDS = "ids_"
 
 
 def to_feature_collection(df: DataFrame) -> dict:
     """Envelope rows as {'type': 'FeatureCollection', 'features': [...]}
-    (task.ts:251-254). Driver-side by design — REST handoff only."""
-    rows = df.orderBy("id").toJSON().collect()
-    return {"type": "FeatureCollection", "features": [json.loads(r) for r in rows]}
+    (task.ts:251-254). Driver-side by design — REST handoff only. The
+    sort by id runs on the collected features: Python orders ``str`` by
+    code point, which is Spark's binary order on valid UTF-8 strings."""
+    features = [json.loads(r) for r in df.toJSON().collect()]
+    features.sort(key=lambda f: f["id"])
+    return {"type": "FeatureCollection", "features": features}
 
 
 class SnapshotDiffSink:
     """Upsert-by-id + expiry-by-omission over snapshot publishes.
 
-    State is a parquet directory of the previously-published ids —
-    durable, partition-parallel, and tiny relative to the data (ids
-    only). ``publish`` returns (upserted_count, expired_ids_df).
+    State is one parquet dir of deduplicated ids per publish
+    (``ids_000001``, ``ids_000002``, ...) under ``state_dir``, tiny
+    relative to the data. A version counts once its ``_SUCCESS``
+    marker is written, and the last committed version on disk is the
+    previous snapshot: a new sink on an existing ``state_dir`` diffs
+    against it, and a publish that crashed mid-write is ignored and
+    overwritten by the next one. ``publish`` returns
+    (upserted_count, expired_ids_df).
     """
 
     def __init__(self, state_dir: str) -> None:
         self.state_dir = state_dir
-        self._ids_path = os.path.join(state_dir, "published_ids")
-        # resume the sequence across restarts so a rerun never reuses a
-        # scratch dir an earlier return value may still reference
-        existing = sorted(glob.glob(os.path.join(state_dir, "_expired_scratch_*")))
-        self._publish_seq = (
-            int(existing[-1].rsplit("_", 1)[-1]) if existing else 0
-        )
-
-    def _prune_scratch(self, keep_last: int) -> None:
-        dirs = sorted(glob.glob(os.path.join(self.state_dir, "_expired_scratch_*")))
-        for d in dirs[:-keep_last]:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def _previous_ids(self, spark) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self._ids_path)
-        except Exception:
-            return None  # first publish
 
     def publish(self, snapshot: DataFrame) -> tuple[int, DataFrame]:
         """Publish a full snapshot (must carry an ``id`` column).
@@ -70,49 +64,30 @@ class SnapshotDiffSink:
         expired by omission (present previously, absent now).
 
         .. warning:: **The returned ``expired`` DataFrame is valid for
-           ONE further ``publish()`` cycle only.** It lazily reads a
-           per-publish scratch parquet; scratch dirs older than the
-           last ``keep_last`` (2) publishes are pruned, so consuming
-           the return after two more ``publish()`` calls raises
-           FileNotFound at action time. Materialize it (``.collect()``,
-           write, or ``.localCheckpoint()``) before publishing again if
-           it must outlive the next cycle.
+           ONE further ``publish()`` cycle only.** It lazily reads the
+           previous and the new id-set versions; each publish prunes
+           all but the last three versions, so consuming the return
+           after two more ``publish()`` calls raises FileNotFound at
+           action time. Materialize it (``.collect()`` or a write)
+           before publishing again if it must outlive the next cycle.
         """
         spark = snapshot.sparkSession
-        # r14 (guide §2.4/§5): materialize the id set ONCE. Three
-        # consumers follow (the expiry anti-join, the upsert count,
-        # the state overwrite), and each action on a lazy `ids` would
-        # re-execute the ENTIRE snapshot plan — for a WARC/codec
-        # pipeline (q392) that meant three full mapInPandas
-        # encode+decode passes per publish. The id set is tiny by
-        # construction (ids only), so the checkpoint is cheap at any
-        # scale; results are identical, only execution count changes.
-        ids = snapshot.select("id").dropDuplicates(["id"]).localCheckpoint()
-        prev = self._previous_ids(spark)
-        if prev is not None:
+        versions = committed_versions(self.state_dir, _IDS)
+        path = version_path(self.state_dir, _IDS, versions[-1] + 1 if versions else 1)
+        # the snapshot's plan runs once, in this write; the count and
+        # the diff read the durable id sets
+        snapshot.select("id").dropDuplicates(["id"]).write.mode("overwrite").parquet(path)
+        ids = spark.read.parquet(path)
+        if versions:
+            prev = spark.read.parquet(version_path(self.state_dir, _IDS, versions[-1]))
             expired = prev.join(ids, "id", "left_anti")
         else:
             expired = ids.limit(0)
-        # Materialize expiry BEFORE overwriting state — but WITHOUT a
-        # driver collect (a large shrinking snapshot would otherwise
-        # buffer every expired id in driver memory). A scratch parquet
-        # write breaks the lineage durably; the re-read below no longer
-        # references published_ids, so the overwrite is safe. The
-        # scratch path is UNIQUE per publish — a shared path would
-        # silently repoint the previously returned (lazy) expired
-        # DataFrame at the next publish's data. Scratch dirs are tiny
-        # (ids only); stale ones are pruned on the next publish, which
-        # keeps the previous return valid for one full cycle.
-        self._publish_seq += 1
-        scratch = os.path.join(
-            self.state_dir, f"_expired_scratch_{self._publish_seq:06d}"
-        )
-        expired.write.mode("overwrite").parquet(scratch)
-        expired = spark.read.parquet(scratch)
-        self._prune_scratch(keep_last=2)
-        n = ids.count()
-        ids.write.mode("overwrite").parquet(self._ids_path)
-        return n, expired
+        # keep the new version and the two before it: the expired set
+        # returned by the previous publish reads those two
+        for v in versions[:-2]:
+            shutil.rmtree(version_path(self.state_dir, _IDS, v), ignore_errors=True)
+        return ids.count(), expired
 
     def foreach_batch(self, handler=None):
         """Adapter for streaming: ``writeStream.foreachBatch(sink.foreach_batch(fn))``

@@ -29,10 +29,12 @@ tests/test_quake_stream.py-style equivalence in test_llm_ops.py).
 
 Scale shape: per-batch cost is |batch| signatures + an equi-join
 whose left side is batch-sized; the accumulated index is touched only
-on the (band, bucket) keys the batch populates. The scratch-parquet
-materialization before state append mirrors ``SnapshotDiffSink``
-(quakes/sink.py): break lineage durably BEFORE mutating the state the
-lazy result reads.
+on the (band, bucket) keys the batch populates. Each batch's pairs are
+written as the next committed version (``pairs_000001``, ...; the
+versioned-dir layout of ``io.committed_versions`` that
+``SnapshotDiffSink`` also uses) BEFORE the state append, because their
+lazy plan reads the state the append grows. Numbering resumes from
+disk, so a restarted index never overwrites an earlier run's pairs.
 """
 
 from __future__ import annotations
@@ -42,10 +44,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_geonet_quakes_spark.io import committed_versions, version_path
 from etl_geonet_quakes_spark.llm.dedup import band_buckets, shingles_str
 
 _BUCKET_SCHEMA = "doc_id long, band int, bucket long"
 _DOC_SCHEMA = "doc_id long, text string"
+_PAIRS = "pairs_"
 
 
 class StreamingMinHashIndex:
@@ -54,8 +58,8 @@ class StreamingMinHashIndex:
     ``process_batch(batch_df)`` ingests one micro-batch of
     (doc_id, text) rows (doc_ids unique across the stream — the
     upsert-key contract) and returns the VERIFIED near-dup pairs that
-    involve at least one batch document, materialized to scratch
-    parquet so the result survives the state append. ``foreach_batch``
+    involve at least one batch document, written as the next pairs
+    version so the result survives the state append. ``foreach_batch``
     adapts it to ``writeStream.foreachBatch``.
     """
 
@@ -72,7 +76,6 @@ class StreamingMinHashIndex:
         self.threshold = threshold
         self._buckets_path = os.path.join(state_dir, "bucket_index")
         self._docs_path = os.path.join(state_dir, "doc_store")
-        self._seq = 0
 
     def _state(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
         try:
@@ -148,18 +151,17 @@ class StreamingMinHashIndex:
             F.col("jaccard") >= self.threshold
         )
 
-        # materialize the result BEFORE appending state (the lazy plan
-        # reads the doc store; appending first would double-read the
-        # batch docs into their own verify join) — SnapshotDiffSink's
-        # scratch pattern, unique path per batch
-        self._seq += 1
-        scratch = os.path.join(self.state_dir, f"_pairs_scratch_{self._seq:06d}")
-        pairs.write.mode("overwrite").parquet(scratch)
+        # write the result BEFORE appending state (the lazy plan reads
+        # the doc store; appending first would double-read the batch
+        # docs into their own verify join)
+        done = committed_versions(self.state_dir, _PAIRS)
+        out = version_path(self.state_dir, _PAIRS, done[-1] + 1 if done else 1)
+        pairs.write.mode("overwrite").parquet(out)
         nb.write.mode("append").parquet(self._buckets_path)
         new_docs.write.mode("append").parquet(self._docs_path)
         nb.unpersist()
         new_docs.unpersist()
-        return spark.read.parquet(scratch)
+        return spark.read.parquet(out)
 
     def foreach_batch(self, handler=None):
         """Adapter: ``writeStream.foreachBatch(idx.foreach_batch(fn))``
@@ -236,7 +238,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark write (``streaming.feed.write_micro_batch_feed`` —
     hash-repartitioned by batch id, metadata-only renames into the
     flat feed dir), and the result is the Spark-side union of the
-    per-batch pair-scratch parquets the index already durably writes
+    per-batch pair versions the index already durably writes
     — no ``collect()`` anywhere in the path, so the same adapter
     works when ``documents`` is corpus-sized."""
     import tempfile
@@ -250,6 +252,6 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(base, "state")
     run_dedup_stream(spark, feed, state)
     out = spark.read.schema("doc_a long, doc_b long, jaccard double").parquet(
-        os.path.join(state, "_pairs_scratch_*")
+        os.path.join(state, _PAIRS + "*")
     )
     return out.orderBy("doc_a", "doc_b")

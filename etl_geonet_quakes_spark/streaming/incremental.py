@@ -14,8 +14,9 @@ aggregation — which is exactly what the registered query's SQL oracle
 computes. The cross-engine hash gate therefore certifies the
 INCREMENTAL path end to end, not a weaker rows-only check.
 
-State discipline mirrors ``SnapshotDiffSink``/``StreamingMinHashIndex``
-and adds epoch idempotence: state versions are keyed BY EPOCH ID
+State is the versioned-dir layout ``SnapshotDiffSink`` and
+``StreamingMinHashIndex`` also use (``io.committed_versions``), plus
+epoch idempotence: state versions are keyed BY EPOCH ID
 (``e{epoch_id}`` durable parquet, ``_SUCCESS`` as the commit marker),
 the previous version is discovered from DISK (max committed epoch <
 current), and a replayed/retried micro-batch whose epoch is already
@@ -36,30 +37,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_geonet_quakes_spark.io import load_table
+from etl_geonet_quakes_spark.io import committed_versions, load_table, version_path
 from etl_geonet_quakes_spark.llm.text import tokens
 from etl_geonet_quakes_spark.streaming.feed import write_micro_batch_feed
 
 _STATE_SCHEMA = "tok string, n long"
-
-
-def _committed_epochs(state_dir: str) -> list[int]:
-    """Epoch ids with a complete (``_SUCCESS``-marked) state version
-    on disk — the recovery source of truth; driver memory holds no
-    state pointers."""
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("e") and os.path.exists(
-            os.path.join(state_dir, name, "_SUCCESS")
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _epoch_path(state_dir: str, epoch_id: int) -> str:
-    return os.path.join(state_dir, f"e{epoch_id:06d}")
+_EPOCH = "e"
 
 
 def run_versioned_merge_stream(
@@ -83,20 +66,20 @@ def run_versioned_merge_stream(
     state_dir = os.path.join(base, "state")
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        path = _epoch_path(state_dir, epoch_id)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
+        committed = committed_versions(state_dir, _EPOCH)
+        if epoch_id in committed:
             return  # replay/retry of a committed epoch: no-op
         sp = batch_df.sparkSession
         cur = partial_fn(batch_df)
-        prior = [e for e in _committed_epochs(state_dir) if e < epoch_id]
+        prior = [e for e in committed if e < epoch_id]
         if prior:
             prev = sp.read.schema(state_schema).parquet(
-                _epoch_path(state_dir, prior[-1])
+                version_path(state_dir, _EPOCH, prior[-1])
             )
             cur = merge_fn(prev, cur)
         # overwrite clears a crashed attempt's partial files; the
         # _SUCCESS marker written last IS the commit point
-        cur.write.mode("overwrite").parquet(path)
+        cur.write.mode("overwrite").parquet(version_path(state_dir, _EPOCH, epoch_id))
 
     stream = (
         spark.readStream.schema(input_schema)
@@ -113,10 +96,10 @@ def run_versioned_merge_stream(
             .start()
         )
         q.awaitTermination()
-    committed = _committed_epochs(state_dir)
+    committed = committed_versions(state_dir, _EPOCH)
     assert committed, "stream processed no batches"
     return spark.read.schema(state_schema).parquet(
-        _epoch_path(state_dir, committed[-1])
+        version_path(state_dir, _EPOCH, committed[-1])
     )
 
 

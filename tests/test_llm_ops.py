@@ -281,6 +281,61 @@ def test_streaming_minhash_file_stream_drive(spark, sf_dir, tmp_path):
     assert got == batch_pairs
 
 
+def test_streaming_minhash_restart_keeps_earlier_pairs(spark, sf_dir, tmp_path):
+    """A second ``run_dedup_stream`` on the same state dir (the stream
+    restarted after another file arrived) numbers its pair versions
+    after the first run's: the first run's pairs stay on disk intact,
+    and both runs together hold the batch pair set."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_geonet_quakes_spark.streaming.dedup_stream import run_dedup_stream
+
+    def key(r):
+        return (r["doc_a"], r["doc_b"], r["jaccard"])
+
+    batch_pairs = {key(r) for r in dedup.dedup_minhash_lsh(spark, sf_dir).collect()}
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .collect()
+    )
+    feed = tmp_path / "feed"
+    feed.mkdir()
+
+    def arrive(i: int) -> None:
+        chunk = docs[i::3]
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([r["doc_id"] for r in chunk], pa.int64()),
+                    "text": pa.array([r["text"] for r in chunk], pa.string()),
+                }
+            ),
+            str(feed / f"b{i}.parquet"),
+        )
+
+    state = str(tmp_path / "state")
+    first: list = []
+    arrive(0)
+    arrive(1)
+    run_dedup_stream(spark, str(feed), state, pair_handler=lambda rows, e: first.extend(rows))
+    arrive(2)
+    second: list = []
+    epochs = run_dedup_stream(
+        spark, str(feed), state, pair_handler=lambda rows, e: second.extend(rows)
+    )
+    assert len(epochs) == 1, "the restart must process only the new file"
+    on_disk = {
+        key(r) for r in spark.read.parquet(os.path.join(state, "pairs_*")).collect()
+    }
+    assert first, "fixture must put near-dups in the first run"
+    assert {key(r) for r in first} <= on_disk
+    assert on_disk == {key(r) for r in first + second} == batch_pairs
+
+
 def test_winnow_fingerprint_invariants(spark, sf_dir):
     """Winnowing guarantees (SIGMOD'03): fingerprints are a subset of
     shingle hashes, nonempty for docs with >= k+w-1 tokens, and the

@@ -78,11 +78,68 @@ def test_snapshot_diff_sink(spark, tmp_path):
     ]
 
 
+def _snap(spark, *ids):
+    return spark.createDataFrame([(i,) for i in ids], "id string")
+
+
+def _ids(df):
+    return sorted(r["id"] for r in df.collect())
+
+
+def test_snapshot_diff_sink_restart_diffs_last_committed(spark, tmp_path):
+    state = str(tmp_path / "state")
+    SnapshotDiffSink(state).publish(_snap(spark, "a", "b"))
+    # a new sink on the same dir (a restarted job) diffs against the
+    # snapshot the previous one committed
+    n, expired = SnapshotDiffSink(state).publish(_snap(spark, "b", "c"))
+    assert n == 2 and _ids(expired) == ["a"]
+
+
+def test_snapshot_diff_sink_ignores_uncommitted_version(spark, tmp_path):
+    state = tmp_path / "state"
+    sink = SnapshotDiffSink(str(state))
+    sink.publish(_snap(spark, "a", "b"))
+    # a publish that crashed mid-write: the next version holds data
+    # files but no _SUCCESS marker
+    crashed = state / "ids_000002"
+    _snap(spark, "zombie").write.parquet(str(crashed))
+    os.remove(crashed / "_SUCCESS")
+    n, expired = sink.publish(_snap(spark, "b"))
+    assert n == 1 and _ids(expired) == ["a"]
+    assert _ids(spark.read.parquet(str(crashed))) == ["b"]  # overwritten
+    _, expired = sink.publish(_snap(spark, "c"))
+    assert _ids(expired) == ["b"]
+
+
+def test_snapshot_diff_sink_expired_outlives_one_publish(spark, tmp_path):
+    state = tmp_path / "state"
+    sink = SnapshotDiffSink(str(state))
+    sink.publish(_snap(spark, "a", "b", "c"))
+    _, expired = sink.publish(_snap(spark, "a"))
+    sink.publish(_snap(spark, "d"))
+    assert _ids(expired) == ["b", "c"]
+    # older versions are pruned: state stays three id sets
+    sink.publish(_snap(spark, "e"))
+    sink.publish(_snap(spark, "f"))
+    assert sorted(os.listdir(state)) == ["ids_000003", "ids_000004", "ids_000005"]
+
+
 def test_feature_collection_envelope_sorted(spark):
     df = spark.createDataFrame([("b", 2), ("a", 1)], "id string, v int")
     fc = to_feature_collection(df)
     assert fc["type"] == "FeatureCollection"
     assert [f["id"] for f in fc["features"]] == ["a", "b"]
+
+
+def test_feature_collection_order_matches_spark_order(spark):
+    # the driver-side sort must equal Spark's binary string order,
+    # including ids outside ASCII and outside the BMP
+    ids = ["b", "a", "Z", "é", "\uffff", "\U0001F600", "ａ", "earthquake-2"]
+    df = _snap(spark, *ids)
+    fc = to_feature_collection(df)
+    assert [f["id"] for f in fc["features"]] == [
+        r["id"] for r in df.orderBy("id").collect()
+    ]
 
 
 def test_stream_reader_polls_snapshots_in_order(geonet, tmp_path):
