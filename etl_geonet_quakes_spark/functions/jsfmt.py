@@ -11,9 +11,10 @@ yields "12.4" — a real divergence we caught in golden tests.
 There is no JVM-side Spark builtin that exposes the exact binary
 expansion, so parity needs one Arrow-batched pandas UDF. Python's
 ``decimal.Decimal(float)`` IS the exact binary expansion, so
-``quantize(..., ROUND_HALF_UP)`` reproduces toFixed for the
-non-negative values seen here (for negatives JS ties go away from
-zero — ROUND_HALF_UP on the absolute value; handled below).
+``quantize(..., ROUND_HALF_UP)`` on the absolute value reproduces
+toFixed's ties-away-from-zero; the sign is a string prefix, as in
+ECMA-262, so ``(-0.04).toFixed(1)`` is ``"-0.0"`` and ``(-0).toFixed(1)``
+is ``"0.0"``.
 
 This is the ONLY Python UDF in the reference-parity pipeline; it
 formats two narrow columns and is Arrow-vectorized, so it is not a
@@ -23,17 +24,16 @@ codegen).
 
 from __future__ import annotations
 
-import decimal
-import functools
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-@functools.lru_cache(maxsize=8)
 def _to_fixed_udf(digits: int):
+    # Built per call, not cached: a UDF object binds the SparkContext's
+    # Python accumulator on first use, so a cached one breaks every
+    # task's accumulator update once that context is stopped.
     # The UDF body must be fully self-contained (stdlib imports inside,
     # no references to this module's globals): cloudpickle serializes
     # closures by value but module-level helpers only by reference,
@@ -51,9 +51,7 @@ def _to_fixed_udf(digits: int):
             d = _dec.Decimal(x)  # exact binary expansion
             # ECMA-262: ties pick the larger |n| → away from zero
             r = d.copy_abs().quantize(q, rounding=_dec.ROUND_HALF_UP)
-            if d < 0:
-                r = -r
-            return f"{r:.{digits}f}"
+            return ("-" if d < 0 else "") + f"{r:.{digits}f}"
 
         return s.map(one)
 

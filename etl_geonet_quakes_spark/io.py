@@ -106,8 +106,9 @@ def read_geojson(spark: SparkSession, path: str, schema) -> DataFrame:
 
 def committed_versions(state_dir: str, prefix: str) -> list[int]:
     """Ascending numbers of the complete ``{prefix}NNNNNN`` versions
-    under ``state_dir``. A version counts once Spark's ``_SUCCESS``
-    marker, written last by the parquet commit, is in it: a dir left
+    under ``state_dir``. A version counts once its ``_SUCCESS``
+    marker, written last by Spark's parquet commit or by the sink's
+    driver-side writer, is in it: a dir left
     by a crashed write is ignored, and the next write of that number
     overwrites it. Recovery reads this listing, never driver memory."""
     if not os.path.isdir(state_dir):

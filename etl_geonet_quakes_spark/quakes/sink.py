@@ -9,21 +9,28 @@ expires it. Two adapters re-express that:
   REST handoff. The ONLY place in the engine that collects; it sorts
   by id so the envelope is byte-stable (distributed row order is not,
   SURVEY §7.4). Payloads here are O(100) rows by contract.
-- ``SnapshotDiffSink`` — the scale path: each trigger/batch publishes
-  a full snapshot keyed by id and diffs its id set against the
-  previous publish's to emit explicit ``expired`` ids. The id sets
-  are an append-only series of committed versions on disk
-  (``ids_000001``, ``ids_000002``, ...), each written once; the diff
-  is a lazy anti-join of two of them. This turns the reference's
-  implicit platform-side state into engine-visible state that works
-  under ``foreachBatch`` in streaming or per-run in batch.
+- ``SnapshotDiffSink`` — each trigger/batch publishes a full
+  snapshot keyed by id and diffs its id set against the previous
+  publish's to emit explicit ``expired`` ids. The id sets are an
+  append-only series of committed versions on disk (``ids_000001``,
+  ``ids_000002``, ...), each written once. A publish takes either a
+  DataFrame, whose ids Spark writes and diffs as a lazy anti-join (the
+  scale path: no id reaches the driver), or ids already on the driver,
+  which pyarrow writes and Python diffs with no Spark job. Both write
+  the same layout, so one state dir may mix them. This turns the
+  reference's implicit platform-side state into engine-visible state
+  that works under ``foreachBatch`` in streaming or per-run in batch.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
+from collections.abc import Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from etl_geonet_quakes_spark.io import committed_versions, version_path
@@ -51,19 +58,25 @@ class SnapshotDiffSink:
     previous snapshot: a new sink on an existing ``state_dir`` diffs
     against it, and a publish that crashed mid-write is ignored and
     overwritten by the next one. ``publish`` returns
-    (upserted_count, expired_ids_df).
+    (upserted_count, expired_ids).
     """
 
     def __init__(self, state_dir: str) -> None:
         self.state_dir = state_dir
 
-    def publish(self, snapshot: DataFrame) -> tuple[int, DataFrame]:
-        """Publish a full snapshot (must carry an ``id`` column).
+    def publish(
+        self, snapshot: DataFrame | Iterable[str]
+    ) -> tuple[int, DataFrame | list[str]]:
+        """Publish a full snapshot: a DataFrame with an ``id`` column,
+        or the snapshot's ids already collected on the driver.
 
-        Returns the number of upserted features and a DataFrame of ids
-        expired by omission (present previously, absent now).
+        Returns the number of upserted (distinct) ids and the ids
+        expired by omission (present previously, absent now): a lazy
+        DataFrame for a DataFrame snapshot, a sorted list for driver
+        ids. Either input writes the next ``ids_NNNNNN`` version and
+        diffs against the last committed one, whichever input wrote it.
 
-        .. warning:: **The returned ``expired`` DataFrame is valid for
+        .. warning:: **A returned ``expired`` DataFrame is valid for
            ONE further ``publish()`` cycle only.** It lazily reads the
            previous and the new id-set versions; each publish prunes
            all but the last three versions, so consuming the return
@@ -71,33 +84,70 @@ class SnapshotDiffSink:
            action time. Materialize it (``.collect()`` or a write)
            before publishing again if it must outlive the next cycle.
         """
-        spark = snapshot.sparkSession
         versions = committed_versions(self.state_dir, _IDS)
         path = version_path(self.state_dir, _IDS, versions[-1] + 1 if versions else 1)
-        # the snapshot's plan runs once, in this write; the count and
-        # the diff read the durable id sets
-        snapshot.select("id").dropDuplicates(["id"]).write.mode("overwrite").parquet(path)
-        ids = spark.read.parquet(path)
-        if versions:
-            prev = spark.read.parquet(version_path(self.state_dir, _IDS, versions[-1]))
-            expired = prev.join(ids, "id", "left_anti")
+        prev = version_path(self.state_dir, _IDS, versions[-1]) if versions else None
+        if isinstance(snapshot, DataFrame):
+            n, expired = _publish_frame(snapshot, path, prev)
         else:
-            expired = ids.limit(0)
+            n, expired = _publish_ids(snapshot, path, prev)
         # keep the new version and the two before it: the expired set
         # returned by the previous publish reads those two
         for v in versions[:-2]:
             shutil.rmtree(version_path(self.state_dir, _IDS, v), ignore_errors=True)
-        return ids.count(), expired
+        return n, expired
 
     def foreach_batch(self, handler=None):
         """Adapter for streaming: ``writeStream.foreachBatch(sink.foreach_batch(fn))``
         where ``fn(feature_collection_dict, expired_ids_list, epoch)``
-        performs the actual REST POST (or logging in tests)."""
+        performs the actual REST POST (or logging in tests).
+
+        With a handler, a tick is one Spark job: the envelope's collect.
+        Its ids are published from the driver, so the batch's plan runs
+        once. Without one, the batch is published as a DataFrame.
+
+        Delivery is at-least-once with one gap: the id set is committed
+        before the handler runs, so if the handler raises, the epoch's
+        replay diffs against the ids it already committed and hands the
+        handler no expiries for that tick.
+        """
 
         def run(batch_df: DataFrame, epoch_id: int) -> None:
-            n, expired = self.publish(batch_df)
-            if handler is not None:
-                fc = to_feature_collection(batch_df)
-                handler(fc, [r["id"] for r in expired.collect()], epoch_id)
+            if handler is None:
+                self.publish(batch_df)
+                return
+            fc = to_feature_collection(batch_df)
+            _, expired = self.publish(f["id"] for f in fc["features"])
+            handler(fc, expired, epoch_id)
 
         return run
+
+
+def _publish_frame(
+    snapshot: DataFrame, path: str, prev: str | None
+) -> tuple[int, DataFrame]:
+    spark = snapshot.sparkSession
+    # the snapshot's plan runs once, in this write; the count and
+    # the diff read the durable id sets
+    snapshot.select("id").dropDuplicates(["id"]).write.mode("overwrite").parquet(path)
+    ids = spark.read.parquet(path)
+    expired = spark.read.parquet(prev).join(ids, "id", "left_anti") if prev else ids.limit(0)
+    return ids.count(), expired
+
+
+def _publish_ids(
+    snapshot: Iterable[str], path: str, prev: str | None
+) -> tuple[int, list[str]]:
+    ids = sorted(set(snapshot))
+    # same commit protocol as Spark's writer: data file first, then
+    # the _SUCCESS marker that committed_versions looks for
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    table = pa.table({"id": pa.array(ids, pa.string())})
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    if prev is None:
+        return len(ids), []
+    # read_table skips Spark's _SUCCESS and .crc side files
+    old = pq.read_table(prev, columns=["id"]).column("id").to_pylist()
+    return len(ids), sorted(set(old).difference(ids))

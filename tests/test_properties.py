@@ -1,16 +1,25 @@
 """Property tests (SURVEY §5.3) for the pure expression kits — totality
 and monotonicity of time-ago bucketing, map-default coverage for all
-int inputs, toFixed parity against Python's exact-decimal model.
+int inputs, toFixed parity against Python's exact-decimal model and
+against node.
 
-Hypothesis drives the Python-side model; Spark evaluates the column
-expressions in ONE batch per test (one job, not one per example) to
-keep the suite fast.
+Spark evaluates the column expressions in ONE batch per test (one job,
+not one per example) to keep the suite fast; the toFixed cases, drawn
+from a seeded generator plus edge cases, share one job across three
+tests.
 """
 
 from __future__ import annotations
 
 import decimal
+import json
+import os
+import random
+import shutil
+import subprocess
+import sys
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -64,24 +73,111 @@ def test_map_lookup_total_over_int_range(spark):
         assert r["intensity"] == MMI_INTENSITY.get(r["mmi"], DEFAULT_INTENSITY)
 
 
-@settings(max_examples=30, deadline=None)
-@given(
-    st.floats(
-        min_value=0.0, max_value=1e6, allow_nan=False, allow_infinity=False
-    ),
-    st.integers(min_value=0, max_value=3),
-)
-def test_js_to_fixed_matches_exact_decimal_model(spark, x, digits):
-    # model: ECMA-262 toFixed — round the EXACT binary value half-up
+# (x, digits, what node prints for x.toFixed(digits))
+TO_FIXED_LITERALS = [
+    (-0.04, 1, "-0.0"),
+    (-0.0, 1, "0.0"),
+    (5.25, 1, "5.3"),
+    (12.35, 1, "12.3"),
+    (0.125, 2, "0.13"),
+    (-0.125, 2, "-0.13"),
+    (-2.5, 0, "-3"),
+    (1.005, 2, "1.00"),
+]
+
+
+def _to_fixed_model(x: float, digits: int) -> str:
+    """ECMA-262 toFixed: round the EXACT binary value of |x| half-up
+    (ties away from zero), then prefix "-" if x < 0 (so not for -0)."""
     d = decimal.Decimal(x)
     q = decimal.Decimal(1).scaleb(-digits)
-    expect = f"{d.quantize(q, rounding=decimal.ROUND_HALF_UP):.{digits}f}"
-    got = (
-        spark.createDataFrame([(x,)], "v double")
-        .select(js_to_fixed(F.col("v"), digits).alias("s"))
-        .collect()[0]["s"]
+    s = f"{d.copy_abs().quantize(q, rounding=decimal.ROUND_HALF_UP):.{digits}f}"
+    return "-" + s if d < 0 else s
+
+
+@pytest.fixture(scope="module")
+def to_fixed_cases(spark):
+    """[(x, digits, js_to_fixed(x, digits))] over every digit count
+    0-3, from ONE Spark job."""
+    rng = random.Random(20260115)
+    xs = [rng.uniform(-1e6, 1e6) for _ in range(100)]
+    xs += [rng.uniform(-10.0, 10.0) for _ in range(100)]
+    # exact binary ties at `digits` places: odd / 2**(digits + 1)
+    xs += [
+        sign * rng.randrange(1, 4001, 2) / 2 ** (digits + 1)
+        for digits in range(4)
+        for sign in (1, -1)
+        for _ in range(10)
+    ]
+    xs += [x for x, _, _ in TO_FIXED_LITERALS] + [0.0, 1e-7, -1e-7, 0.5, -0.5]
+    rows = (
+        spark.createDataFrame(list(enumerate(xs)), "i int, v double")
+        .select("i", *[js_to_fixed(F.col("v"), d).alias(f"d{d}") for d in range(4)])
+        .collect()
     )
-    assert got == expect, (x, digits, got, expect)
+    got = {r["i"]: r for r in rows}
+    return [(x, d, got[i][f"d{d}"]) for i, x in enumerate(xs) for d in range(4)]
+
+
+def test_js_to_fixed_matches_exact_decimal_model(to_fixed_cases):
+    for x, digits, got in to_fixed_cases:
+        assert got == _to_fixed_model(x, digits), (x, digits, got)
+
+
+def test_js_to_fixed_node_verified_literals(to_fixed_cases):
+    got = {(repr(x), d): s for x, d, s in to_fixed_cases}
+    for x, digits, expect in TO_FIXED_LITERALS:
+        assert got[repr(x), digits] == expect, (x, digits)
+
+
+@pytest.mark.skipif(shutil.which("node") is None, reason="node not installed")
+def test_js_to_fixed_matches_node(to_fixed_cases):
+    # JSON carries each double exactly (repr round-trips, -0.0 included)
+    script = (
+        "const c = JSON.parse(require('fs').readFileSync(0, 'utf8'));"
+        "process.stdout.write(JSON.stringify(c.map(([x, d]) => x.toFixed(d))));"
+    )
+    node = subprocess.run(
+        ["node", "-e", script],
+        input=json.dumps([[x, d] for x, d, _ in to_fixed_cases]),
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    for (x, digits, got), expect in zip(to_fixed_cases, json.loads(node.stdout)):
+        assert got == expect, (x, digits, got, expect)
+
+
+TWO_SESSIONS = """
+from pyspark.sql import functions as F
+from etl_geonet_quakes_spark.functions.jsfmt import js_to_fixed
+from etl_geonet_quakes_spark.session import get_spark
+
+for _ in range(2):
+    spark = get_spark("two-sessions", master="local[1]", shuffle_partitions=1)
+    df = spark.createDataFrame([(12.35,)], "v double")
+    print(df.select(js_to_fixed(F.col("v"), 1)).collect()[0][0], flush=True)
+    spark.stop()
+"""
+
+
+def test_js_to_fixed_across_spark_contexts(tmp_path):
+    # a UDF kept from a stopped context sends its tasks' accumulator
+    # updates to that context's dead server: Spark logs an ERROR per task
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = [root] + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, path)))
+    run = subprocess.run(
+        [sys.executable, "-c", TWO_SESSIONS],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.split() == ["12.3", "12.3"]
+    assert "Failed to update accumulator" not in run.stderr
 
 
 def test_iso_roundtrip(spark):

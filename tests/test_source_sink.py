@@ -8,9 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from etl_geonet_quakes_spark.io import read_geojson
 from etl_geonet_quakes_spark.quakes import source as geonet_source
-from etl_geonet_quakes_spark.quakes.schema import GEONET_FEATURE_SCHEMA
+from etl_geonet_quakes_spark.quakes.schema import GEONET_FEATURE_SCHEMA, GEONET_RESPONSE_SCHEMA
 from etl_geonet_quakes_spark.quakes.sink import SnapshotDiffSink, to_feature_collection
+from etl_geonet_quakes_spark.quakes.transform import QuakeJobConfig, run_pipeline
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "geonet_quakes.json")
 
@@ -122,6 +124,64 @@ def test_snapshot_diff_sink_expired_outlives_one_publish(spark, tmp_path):
     sink.publish(_snap(spark, "e"))
     sink.publish(_snap(spark, "f"))
     assert sorted(os.listdir(state)) == ["ids_000003", "ids_000004", "ids_000005"]
+
+
+def test_snapshot_diff_sink_mixes_frame_and_driver_ids(spark, tmp_path):
+    # DataFrame and driver-id publishes share one layout: each diffs
+    # against the version the other wrote, empty versions included
+    sink = SnapshotDiffSink(str(tmp_path / "state"))
+    n, expired = sink.publish(_snap(spark, "a", "b", "c"))
+    assert n == 3 and _ids(expired) == []
+    assert sink.publish(["b", "c", "d", "d"]) == (3, ["a"])
+    n, expired = sink.publish(_snap(spark, "e", "d"))
+    assert n == 2 and _ids(expired) == ["b", "c"]
+    assert sink.publish([]) == (0, ["d", "e"])
+    n, expired = sink.publish(_snap(spark))
+    assert n == 0 and _ids(expired) == []
+    assert sink.publish(["f"]) == (1, [])
+    n, expired = sink.publish(_snap(spark, "g"))
+    assert n == 1 and _ids(expired) == ["f"]
+
+
+def test_snapshot_diff_sink_ignores_uncommitted_driver_version(spark, tmp_path):
+    state = tmp_path / "state"
+    sink = SnapshotDiffSink(str(state))
+    sink.publish(["a", "b"])
+    # a driver publish that crashed before writing its _SUCCESS marker
+    sink.publish(["zombie"])
+    crashed = state / "ids_000002"
+    os.remove(crashed / "_SUCCESS")
+    assert sink.publish(["b"]) == (1, ["a"])
+    assert sorted(os.listdir(crashed)) == ["_SUCCESS", "part-00000.parquet"]
+    assert _ids(spark.read.parquet(str(crashed))) == ["b"]  # overwritten
+    _, expired = sink.publish(_snap(spark, "c"))
+    assert _ids(expired) == ["b"]
+
+
+def _jobs_in_group(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_foreach_batch_handler_tick_is_one_spark_job(spark, tmp_path):
+    cfg = QuakeJobConfig(min_mmi=-1, max_age_minutes=1e12, now_utc_ms=1768478400000)
+    out = run_pipeline(read_geojson(spark, FIXTURE, GEONET_RESPONSE_SCHEMA), cfg)
+    all_ids = sorted(r["id"] for r in out.select("id").collect())
+    published = []
+    tick = SnapshotDiffSink(str(tmp_path / "state")).foreach_batch(
+        lambda fc, expired, epoch: published.append((len(fc["features"]), expired))
+    )
+    sc = spark.sparkContext
+    try:
+        for epoch, batch in enumerate([out, out.filter(F.col("id") != all_ids[0])]):
+            group = f"sink-tick-{tmp_path.name}-{epoch}"
+            sc.setJobGroup(group, "one sink tick")
+            tick(batch, epoch)
+            assert _jobs_in_group(spark, group) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert published == [(len(all_ids), []), (len(all_ids) - 1, all_ids[:1])]
 
 
 def test_feature_collection_envelope_sorted(spark):
