@@ -4,23 +4,41 @@ The pattern (SURVEY.md §2.3): media travels as a ``binary`` column
 next to a typed metadata struct (the same nested-struct shape the
 reference uses for feature metadata, task.ts:222-232). Everything
 Spark-side — schema, partitioning, Arrow batch shape through
-mapInPandas — is real and tested, and two codecs are REAL as well,
-because their wire formats need only the stdlib: a P6 PPM image
-parser (``decode_ppm_features``, q96) and a RIFF/WAVE PCM16 audio
-parser (``decode_wav_features``, q97), each hash-checked against a
-closed-form oracle that never touches bytes. Library-dependent
-codecs (JPEG/PNG/ffmpeg) stay honestly gated: the fake=False generic
-path raises ``NotImplementedError`` pointing at the real decoders,
-and the deterministic fakes remain for the value-checked plumbing
-queries, so a production codec drops in without touching the
-plumbing.
+mapInPandas — is real and tested, and the codecs whose wire formats
+need only the stdlib (plus numpy for the IDCT) are REAL: P6 PPM
+(q96), RIFF/WAVE PCM16 (q97), PNG with all five filters (q98) and
+Adam7 (q389), baseline, subsampled, restart-marked and progressive
+JPEG (q381-q387) and WARC-style multi-member gzip (q388). Each is
+hash-checked against a closed-form oracle that never touches bytes.
+Codecs that need a library (video, through ffmpeg) stay honestly
+gated: the fake=False generic path raises ``NotImplementedError``
+pointing at the real decoders.
+
+Every codec runs through the same two stages, so the batch loop and
+the failure policy live in one place:
+
+- ``_encode_stage`` synthesizes payloads: one mapInPandas pass that
+  maps each input row to a payload through the codec's ``encode``;
+- ``_decode_stage`` extracts features: one mapInPandas pass that maps
+  each payload to the codec's feature tuple. One-poisoned-row policy:
+  a NULL payload, a payload the codec rejects (returns None) and any
+  exception inside the codec all give valid=false with every feature
+  NULL, never a task failure — at 100 TB one corrupt blob must not
+  kill the scan.
+
+A production codec library drops into either stage without touching
+the plumbing.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 import os
-
+import struct
+import zlib
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +63,63 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
+
+
+def _encode_stage(
+    d: DataFrame, encode, *, spread: bool, out: str = "payload binary"
+) -> DataFrame:
+    """Synthesis stage shared by every codec: ``doc_id`` plus the
+    ``out`` column, ``encode(doc_id, *rest)`` per row of ``d`` (whose
+    first column is ``doc_id``; values arrive as Python objects).
+
+    ``spread`` repartitions ``d`` to defaultParallelism first. At
+    fixture scale the doc_id projection is ONE split, which serializes
+    the Python codec; the repartition spreads it across all cores
+    where the codec's work outweighs the extra shuffle stage (at real
+    scale the scan has many splits and AQE would coalesce, so this is
+    bench-scale parallelism, not a data shuffle)."""
+    if spread:
+        d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
+    name = out.split()[0]
+    cols = d.columns
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            values = [encode(*row) for row in zip(*(pdf[c].tolist() for c in cols))]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], name: values})
+
+    return d.mapInPandas(gen, schema=f"doc_id long, {out}")
+
+
+def _decode_stage(df: DataFrame, decode, schema: str) -> DataFrame:
+    """Feature stage shared by every codec: over ``(doc_id, payload)``
+    rows, emit ``schema`` — ``doc_id``, ``valid``, then the feature
+    columns in the order of the tuple ``decode(payload)`` returns.
+    The one-poisoned-row policy (module note) is applied here, so a
+    codec only returns None for what it rejects."""
+    features = [f.split()[0] for f in schema.split(",")[2:]]
+
+    def guarded(buf):
+        if not isinstance(buf, (bytes, bytearray)):
+            return None
+        try:
+            return decode(buf)
+        except Exception:
+            return None
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [guarded(buf) for buf in pdf["payload"]]
+            out = {"doc_id": pdf["doc_id"], "valid": [r is not None for r in rows]}
+            for j, name in enumerate(features):
+                out[name] = [None if r is None else r[j] for r in rows]
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").select("doc_id")
 
 
 def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,22 +249,42 @@ def synthesize_ppm_media(
     The closed-form spec is what lets an external oracle verify the
     decoder without ever parsing bytes itself."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                n = width * height * 3
-                px = bytes((int(doc_id) * 31 + k) % 256 for k in range(n))
-                payloads.append(b"P6\n%d %d\n255\n" % (width, height) + px)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id: int) -> bytes:
+        px = bytes((doc_id * 31 + k) % 256 for k in range(width * height * 3))
+        return b"P6\n%d %d\n255\n" % (width, height) + px
 
-    # NO repartition here, unlike the PNG/JPEG/data-URI synths: this
-    # codec's Python work is too cheap to pay for the extra shuffle
-    # stage (r14 session 5 interleaved A/B: repartition REGRESSED the
-    # query, mins 0.81 -> 0.91 s PPM / 0.67 -> 0.81 s WAV; the
-    # single-thread codec cost is ~0.2 s total vs ~2 s for PNG)
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    # not spread: this codec is too cheap to pay for the extra shuffle
+    # stage (measured, OPTIMIZATION_r14.md "media synth")
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=False)
+
+
+def _ppm_features(buf: bytes):
+    # header = magic + 3 whitespace-separated ints, then exactly ONE
+    # whitespace byte before the raster
+    if buf[:2] != b"P6":
+        return None
+    fields, i, tok = [], 2, b""
+    while len(fields) < 3 and i < len(buf):
+        c = buf[i : i + 1]
+        if c.isspace():
+            if tok:
+                fields.append(int(tok))
+                tok = b""
+        elif c.isdigit():
+            tok += c
+        else:
+            return None
+        i += 1
+    if len(fields) < 3:
+        return None
+    w, h, maxval = fields
+    if maxval != 255 or w <= 0 or h <= 0:
+        return None
+    px = buf[i : i + w * h * 3]
+    if len(px) != w * h * 3:
+        return None
+    n = w * h
+    return (w, h, sum(px[0::3]) / n, sum(px[1::3]) / n, sum(px[2::3]) / n)
 
 
 def decode_ppm_features(df: DataFrame) -> DataFrame:
@@ -199,65 +294,9 @@ def decode_ppm_features(df: DataFrame) -> DataFrame:
     fake=False path the container could not previously exercise —
     the decoder runs against bytes produced by a SEPARATE stage, so
     a header-offset or stride bug fails the cross-engine hash check
-    rather than cancelling out.
-
-    One-poisoned-row policy: malformed payloads (bad magic, truncated
-    pixels, unsupported maxval) yield valid=false + NULL features,
-    never a job failure — at 100 TB a corrupt blob must not kill the
-    scan."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode(buf):
-            try:
-                if not isinstance(buf, (bytes, bytearray)) or buf[:2] != b"P6":
-                    return None
-                # header = magic + 3 whitespace-separated ints, then
-                # exactly ONE whitespace byte before the raster
-                fields, i, tok = [], 2, b""
-                while len(fields) < 3 and i < len(buf):
-                    c = buf[i : i + 1]
-                    if c.isspace():
-                        if tok:
-                            fields.append(int(tok))
-                            tok = b""
-                    elif c.isdigit():
-                        tok += c
-                    else:
-                        return None
-                    i += 1
-                if len(fields) < 3:
-                    return None
-                w, h, maxval = fields
-                if maxval != 255 or w <= 0 or h <= 0:
-                    return None
-                px = buf[i : i + w * h * 3]
-                if len(px) != w * h * 3:
-                    return None
-                sums = [0, 0, 0]
-                for k, v in enumerate(px):
-                    sums[k % 3] += v
-                n = w * h
-                return (w, h, sums[0] / n, sums[1] / n, sums[2] / n)
-            except Exception:
-                return None
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = decode(buf)
-                out["doc_id"].append(doc_id)
-                out["valid"].append(r is not None)
-                out["width"].append(r[0] if r else None)
-                out["height"].append(r[1] if r else None)
-                out["mean_r"].append(r[2] if r else None)
-                out["mean_g"].append(r[3] if r else None)
-                out["mean_b"].append(r[4] if r else None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_PPM_SCHEMA)
+    rather than cancelling out. Bad magic, truncated pixels and an
+    unsupported maxval are poisoned rows."""
+    return _decode_stage(df, _ppm_features, _PPM_SCHEMA)
 
 
 def media_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,33 +321,52 @@ def synthesize_wav_media(
     """Deterministic REAL audio files: one RIFF/WAVE (mono PCM16 LE)
     per document, sample stream s(k) = ((doc_id·7 + k·13) mod 65536)
     − 32768 — closed-form, so the decode oracle never parses bytes."""
-    import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                samples = [
-                    ((int(doc_id) * 7 + k * 13) % 65536) - 32768
-                    for k in range(n_samples)
-                ]
-                data = struct.pack("<%dh" % n_samples, *samples)
-                fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id: int) -> bytes:
+        samples = [((doc_id * 7 + k * 13) % 65536) - 32768 for k in range(n_samples)]
+        data = struct.pack("<%dh" % n_samples, *samples)
+        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    # NO repartition here, unlike the PNG/JPEG/data-URI synths: this
-    # codec's Python work is too cheap to pay for the extra shuffle
-    # stage (r14 session 5 interleaved A/B: repartition REGRESSED the
-    # query, mins 0.81 -> 0.91 s PPM / 0.67 -> 0.81 s WAV; the
-    # single-thread codec cost is ~0.2 s total vs ~2 s for PNG)
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    # not spread: this codec is too cheap to pay for the extra shuffle
+    # stage (measured, OPTIMIZATION_r14.md "media synth")
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=False)
+
+
+def _wav_features(buf: bytes):
+    if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        return None
+    i, fmt, data = 12, None, None
+    while i + 8 <= len(buf):
+        cid = bytes(buf[i : i + 4])
+        (sz,) = struct.unpack_from("<I", buf, i + 4)
+        if cid == b"fmt " and sz >= 16:
+            fmt = struct.unpack_from("<HHIIHH", buf, i + 8)
+        elif cid == b"data":
+            data = bytes(buf[i + 8 : i + 8 + sz])
+            if len(data) != sz:
+                return None  # truncated raster
+        i += 8 + sz + (sz & 1)  # RIFF chunks are word-aligned
+    if fmt is None or data is None:
+        return None
+    audio_fmt, channels, rate, _, _, bits = fmt
+    if audio_fmt != 1 or channels != 1 or bits != 16:
+        return None
+    n = len(data) // 2
+    if n == 0 or len(data) % 2:
+        return None
+    samples = struct.unpack("<%dh" % n, data)
+    s1 = sum(samples)
+    s2 = sum(v * v for v in samples)
+    # math.sqrt, NOT ** 0.5: pow(x, 0.5) is not guaranteed correctly
+    # rounded, IEEE sqrt is — rms must be bit-identical to the
+    # oracle's sqrt()
+    return (n, rate, n * 1000.0 / rate, s1 / n, math.sqrt(s2 / n))
 
 
 def decode_wav_features(df: DataFrame) -> DataFrame:
@@ -318,70 +376,9 @@ def decode_wav_features(df: DataFrame) -> DataFrame:
     RMS. Division is by the power-of-two sample count and sum/ssq fit
     in 2^53, so mean and ssq/n are EXACT doubles and IEEE sqrt makes
     rms bit-identical on any engine — no rounding step needed.
-
-    One-poisoned-row policy: non-RIFF blobs, missing chunks,
-    compressed or multi-channel formats, truncated data → valid=false
-    + NULL features, never a job failure."""
-    import struct
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode(buf):
-            try:
-                if not isinstance(buf, (bytes, bytearray)) or len(buf) < 12:
-                    return None
-                if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                    return None
-                i, fmt, data = 12, None, None
-                while i + 8 <= len(buf):
-                    cid = bytes(buf[i : i + 4])
-                    (sz,) = struct.unpack_from("<I", buf, i + 4)
-                    if cid == b"fmt " and sz >= 16:
-                        fmt = struct.unpack_from("<HHIIHH", buf, i + 8)
-                    elif cid == b"data":
-                        data = bytes(buf[i + 8 : i + 8 + sz])
-                        if len(data) != sz:
-                            return None  # truncated raster
-                    i += 8 + sz + (sz & 1)  # RIFF chunks are word-aligned
-                if fmt is None or data is None:
-                    return None
-                audio_fmt, channels, rate, _, _, bits = fmt
-                if audio_fmt != 1 or channels != 1 or bits != 16:
-                    return None
-                n = len(data) // 2
-                if n == 0 or len(data) % 2:
-                    return None
-                samples = struct.unpack("<%dh" % n, data)
-                s1 = sum(samples)
-                s2 = sum(v * v for v in samples)
-                # math.sqrt, NOT ** 0.5: pow(x, 0.5) is not guaranteed
-                # correctly rounded, IEEE sqrt is — rms must be
-                # bit-identical to the oracle's sqrt()
-                import math
-
-                return (
-                    n, rate, n * 1000.0 / rate,
-                    s1 / n, math.sqrt(s2 / n),
-                )
-            except Exception:
-                return None
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "n_samples": [], "sample_rate": [],
-                "duration_ms": [], "mean": [], "rms": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = decode(buf)
-                out["doc_id"].append(doc_id)
-                out["valid"].append(r is not None)
-                for col, j in (
-                    ("n_samples", 0), ("sample_rate", 1),
-                    ("duration_ms", 2), ("mean", 3), ("rms", 4),
-                ):
-                    out[col].append(r[j] if r else None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_WAV_SCHEMA)
+    Non-RIFF blobs, missing chunks, compressed or multi-channel
+    formats and truncated data are poisoned rows."""
+    return _decode_stage(df, _wav_features, _WAV_SCHEMA)
 
 
 def media_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,13 +410,9 @@ def _paeth(a: int, b: int, c: int) -> int:
     return c
 
 
-def _png_encode_rgb(doc_id: int, width: int, height: int, mult: int) -> bytes:
-    """Non-interlaced 8-bit RGB PNG over the pixel spec
-    v(k) = (doc_id*mult + k) % 256, scanline row filtered with
-    ft = (doc_id + row) % 5 (all five filters across a corpus).
-    Shared by q98's synthesis and q390's data-URI embedding."""
-    import struct
-    import zlib
+def _png_file(width: int, height: int, interlace: int, scanlines: bytes) -> bytes:
+    """8-bit RGB PNG container around filtered ``scanlines``: signature,
+    IHDR, one zlib-compressed IDAT and IEND, each chunk CRC32-sealed."""
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         return (
@@ -429,6 +422,55 @@ def _png_encode_rgb(doc_id: int, width: int, height: int, mult: int) -> bytes:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, interlace)
+    return (
+        _PNG_SIG
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(scanlines)))
+        + chunk(b"IEND", b"")
+    )
+
+
+def _png_read(buf: bytes, interlace: int):
+    """PNG container reader shared by both PNG decoders: verify the
+    8-byte signature, walk the chunk list CHECKING EVERY CRC32, parse
+    IHDR (require 8-bit/RGB/deflate/adaptive-filter and the given
+    interlace method), concatenate the IDATs and inflate them.
+    Returns (width, height, inflated bytes) or None."""
+    buf = bytes(buf)
+    if buf[:8] != _PNG_SIG:
+        return None
+    i, ihdr, idat, ended = 8, None, b"", False
+    while i + 12 <= len(buf):
+        (ln,) = struct.unpack_from(">I", buf, i)
+        ctype = buf[i + 4 : i + 8]
+        data = buf[i + 8 : i + 8 + ln]
+        if len(data) != ln:
+            return None
+        (crc,) = struct.unpack_from(">I", buf, i + 8 + ln)
+        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
+            return None
+        if ctype == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", data)
+        elif ctype == b"IDAT":
+            idat += data
+        elif ctype == b"IEND":
+            ended = True
+            break
+        i += 12 + ln
+    if ihdr is None or not idat or not ended:
+        return None
+    w, h, *fmt = ihdr
+    if fmt != [8, 2, 0, 0, interlace] or w <= 0 or h <= 0:
+        return None
+    return w, h, zlib.decompress(idat)
+
+
+def _png_encode_rgb(doc_id: int, width: int, height: int, mult: int) -> bytes:
+    """Non-interlaced 8-bit RGB PNG over the pixel spec
+    v(k) = (doc_id*mult + k) % 256, scanline row filtered with
+    ft = (doc_id + row) % 5 (all five filters across a corpus).
+    Shared by q98's synthesis and q390's data-URI embedding."""
     stride = width * 3
     raw_rows = [
         bytes(
@@ -442,13 +484,7 @@ def _png_encode_rgb(doc_id: int, width: int, height: int, mult: int) -> bytes:
         ft = (doc_id + row) % 5
         scanlines.append(ft)
         scanlines += _png_filter_line(raw, prior, ft)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(scanlines)))
-        + chunk(b"IEND", b"")
-    )
+    return _png_file(width, height, 0, scanlines)
 
 
 def synthesize_png_media(
@@ -461,139 +497,45 @@ def synthesize_png_media(
     (None/Sub/Up/Average/Paeth) are encoded forward here and must be
     inverted by the decoder — a filter-math bug cannot cancel out,
     because the oracle replays the RAW pixel spec, never the bytes."""
-    import struct
-    import zlib
+    encode = partial(_png_encode_rgb, width=width, height=height, mult=37)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            return _png_encode_rgb(doc_id, width, height, 37)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # the input is an 8-byte/row doc_id projection — at fixture scale
-    # it collapses to ONE split, serializing the Python codec; a
-    # repartition of this tiny column is near-free and spreads encode
-    # across all cores (at real scale the scan has many splits and
-    # AQE would coalesce, so this is bench-scale parallelism, not a
-    # data shuffle)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+def _png_features(buf: bytes):
+    parsed = _png_read(buf, 0)
+    if parsed is None:
+        return None
+    w, h, raw = parsed
+    stride = w * 3
+    if len(raw) != h * (1 + stride):
+        return None
+    sums = [0, 0, 0]
+    prior = bytes(stride)
+    for base in range(0, len(raw), 1 + stride):
+        recon = _png_unfilter_line(raw[base + 1 : base + 1 + stride], prior, raw[base])
+        if recon is None:
+            return None
+        for c in range(3):
+            sums[c] += sum(recon[c::3])
+        prior = recon
+    n = w * h
+    return (w, h, sums[0] / n, sums[1] / n, sums[2] / n)
 
 
 def decode_png_features(df: DataFrame) -> DataFrame:
-    """A REAL image codec, stdlib only (struct + zlib): verify the
-    8-byte signature, walk the chunk list CHECKING EVERY CRC32, parse
-    IHDR (require 8-bit/RGB/deflate/adaptive-filter/non-interlaced),
-    concatenate IDATs, inflate, then invert the per-scanline adaptive
-    filter — all five types, Paeth included — and emit per-channel
-    means. Filters make this a genuinely stateful decode (each row
-    reconstructs against the previous RECONSTRUCTED row), so this is
-    the closest a stdlib codec gets to the PIL/libpng path the
-    container lacks; a library build swaps into the same mapInPandas
-    stage and schema.
-
-    One-poisoned-row policy: bad signature, CRC mismatch, truncated
-    or inconsistent chunks, unsupported bit depth / color type /
-    interlace, wrong inflated length, unknown filter type → all yield
-    valid=false + NULL features, never a job failure."""
-    import struct
-    import zlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode(buf):
-            try:
-                if not isinstance(buf, (bytes, bytearray)):
-                    return None
-                buf = bytes(buf)
-                if buf[:8] != _PNG_SIG:
-                    return None
-                i, ihdr, idat, ended = 8, None, b"", False
-                while i + 12 <= len(buf):
-                    (ln,) = struct.unpack_from(">I", buf, i)
-                    ctype = buf[i + 4 : i + 8]
-                    data = buf[i + 8 : i + 8 + ln]
-                    if len(data) != ln:
-                        return None
-                    (crc,) = struct.unpack_from(">I", buf, i + 8 + ln)
-                    if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                        return None
-                    if ctype == b"IHDR":
-                        ihdr = struct.unpack(">IIBBBBB", data)
-                    elif ctype == b"IDAT":
-                        idat += data
-                    elif ctype == b"IEND":
-                        ended = True
-                        break
-                    i += 12 + ln
-                if ihdr is None or not idat or not ended:
-                    return None
-                w, h, depth, color, comp, filt, interlace = ihdr
-                if (depth, color, comp, filt, interlace) != (8, 2, 0, 0, 0):
-                    return None
-                if w <= 0 or h <= 0:
-                    return None
-                stride = w * 3
-                raw = zlib.decompress(idat)
-                if len(raw) != h * (1 + stride):
-                    return None
-                sums = [0, 0, 0]
-                prior = bytes(stride)
-                for row in range(h):
-                    base = row * (1 + stride)
-                    ft = raw[base]
-                    line = raw[base + 1 : base + 1 + stride]
-                    recon = bytearray(stride)
-                    for i2 in range(stride):
-                        left = recon[i2 - 3] if i2 >= 3 else 0
-                        up = prior[i2]
-                        ul = prior[i2 - 3] if i2 >= 3 else 0
-                        if ft == 0:
-                            pred = 0
-                        elif ft == 1:
-                            pred = left
-                        elif ft == 2:
-                            pred = up
-                        elif ft == 3:
-                            pred = (left + up) >> 1
-                        elif ft == 4:
-                            pred = _paeth(left, up, ul)
-                        else:
-                            return None
-                        recon[i2] = (line[i2] + pred) & 0xFF
-                        sums[i2 % 3] += recon[i2]
-                    prior = bytes(recon)
-                n = w * h
-                return (w, h, sums[0] / n, sums[1] / n, sums[2] / n)
-            except Exception:
-                return None
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = decode(buf)
-                out["doc_id"].append(doc_id)
-                out["valid"].append(r is not None)
-                for col, j in (
-                    ("width", 0), ("height", 1),
-                    ("mean_r", 2), ("mean_g", 3), ("mean_b", 4),
-                ):
-                    out[col].append(r[j] if r else None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_PNG_SCHEMA)
+    """A REAL image codec, stdlib only (struct + zlib): the shared
+    container reader (signature, CRC-checked chunk walk, IHDR gate
+    requiring non-interlaced 8-bit RGB, inflate), then invert the
+    per-scanline adaptive filter — all five types, Paeth included —
+    and emit per-channel means. Filters make this a genuinely
+    stateful decode (each row reconstructs against the previous
+    RECONSTRUCTED row), so this is the closest a stdlib codec gets to
+    the PIL/libpng path the container lacks; a library build swaps
+    into the same stage and schema. Bad signature, CRC mismatch,
+    truncated or inconsistent chunks, unsupported bit depth / color
+    type / interlace, wrong inflated length and unknown filter types
+    are poisoned rows."""
+    return _decode_stage(df, _png_features, _PNG_SCHEMA)
 
 
 def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -666,6 +608,32 @@ def _png_unfilter_line(line: bytes, prior: bytes, ft: int):
     return recon
 
 
+def _png_encode_adam7(doc_id: int, width: int, height: int) -> bytes:
+    """Adam7 PNG over the pixel spec v(k) = (doc_id*53 + k) % 256 on
+    the FULL image; each pass's scanlines filtered with
+    ft = (doc_id + pass + row) % 5."""
+    px = [(doc_id * 53 + k) % 256 for k in range(width * height * 3)]
+    scanlines = bytearray()
+    for pi, (x0, dx, y0, dy) in enumerate(_ADAM7):
+        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
+        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
+        if pw == 0 or ph == 0:
+            continue  # empty pass: no bytes at all
+        prior = bytes(pw * 3)
+        for r in range(ph):
+            y = y0 + r * dy
+            raw = bytes(
+                px[(y * width + x0 + j * dx) * 3 + c]
+                for j in range(pw)
+                for c in range(3)
+            )
+            ft = (doc_id + pi + r) % 5
+            scanlines.append(ft)
+            scanlines += _png_filter_line(raw, prior, ft)
+            prior = raw
+    return _png_file(width, height, 1, scanlines)
+
+
 def synthesize_png_interlaced_media(
     spark: SparkSession, sf_dir: str, width: int = 16, height: int = 8
 ) -> DataFrame:
@@ -674,164 +642,49 @@ def synthesize_png_interlaced_media(
     each pass's scanlines filtered with ft = (doc_id + pass + row)
     mod 5, so all five filters appear across passes and the
     per-pass prior-row state is exercised."""
-    import struct
-    import zlib
+    encode = partial(_png_encode_adam7, width=width, height=height)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
 
-        def encode(doc_id: int) -> bytes:
-            px = [
-                (doc_id * 53 + k) % 256 for k in range(width * height * 3)
-            ]
-            scanlines = bytearray()
-            for pi, (x0, dx, y0, dy) in enumerate(_ADAM7):
-                pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-                ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-                if pw == 0 or ph == 0:
-                    continue  # empty pass: no bytes at all
-                stride = pw * 3
-                prior = bytes(stride)
-                for r in range(ph):
-                    y = y0 + r * dy
-                    raw = bytes(
-                        px[(y * width + x0 + j * dx) * 3 + c]
-                        for j in range(pw)
-                        for c in range(3)
-                    )
-                    ft = (doc_id + pi + r) % 5
-                    scanlines.append(ft)
-                    scanlines += _png_filter_line(raw, prior, ft)
-                    prior = raw
-            ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 1)
-            return (
-                _PNG_SIG
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(scanlines)))
-                + chunk(b"IEND", b"")
-            )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # the input is an 8-byte/row doc_id projection — at fixture scale
-    # it collapses to ONE split, serializing the Python codec; a
-    # repartition of this tiny column is near-free and spreads encode
-    # across all cores (at real scale the scan has many splits and
-    # AQE would coalesce, so this is bench-scale parallelism, not a
-    # data shuffle)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+def _png_interlaced_features(buf: bytes):
+    parsed = _png_read(buf, 1)
+    if parsed is None:
+        return None
+    w, h, raw = parsed
+    img = bytearray(w * h * 3)
+    pos = 0
+    for x0, dx, y0, dy in _ADAM7:
+        pw = (w - x0 + dx - 1) // dx if w > x0 else 0
+        ph = (h - y0 + dy - 1) // dy if h > y0 else 0
+        if pw == 0 or ph == 0:
+            continue
+        stride = pw * 3
+        prior = bytes(stride)
+        for r in range(ph):
+            if pos + 1 + stride > len(raw):
+                return None
+            recon = _png_unfilter_line(raw[pos + 1 : pos + 1 + stride], prior, raw[pos])
+            pos += 1 + stride
+            if recon is None:
+                return None
+            y = y0 + r * dy
+            for j in range(pw):
+                base = (y * w + x0 + j * dx) * 3
+                img[base : base + 3] = recon[j * 3 : j * 3 + 3]
+            prior = recon
+    if pos != len(raw):
+        return None  # trailing bytes: malformed
+    return (w, h, sum(img[0::3]), sum(img[1::3]), sum(img[2::3]))
 
 
 def decode_png_interlaced_features(df: DataFrame) -> DataFrame:
-    """Adam7 twin of decode_png_features: same signature/CRC/chunk
-    discipline, REQUIRES interlace=1 (a non-interlaced stream is a
-    poisoned row under this contract, mirroring q98's reverse rule),
-    de-interlaces the seven passes — each unfiltered against its own
-    pass-local prior row, empty passes contributing no bytes — and
-    scatters pixels to image positions. Exact integer channel sums."""
-    import struct
-    import zlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode(buf):
-            try:
-                if not isinstance(buf, (bytes, bytearray)):
-                    return None
-                buf = bytes(buf)
-                if buf[:8] != _PNG_SIG:
-                    return None
-                i, ihdr, idat, ended = 8, None, b"", False
-                while i + 12 <= len(buf):
-                    (ln,) = struct.unpack_from(">I", buf, i)
-                    ctype = buf[i + 4 : i + 8]
-                    data = buf[i + 8 : i + 8 + ln]
-                    if len(data) != ln:
-                        return None
-                    (crc,) = struct.unpack_from(">I", buf, i + 8 + ln)
-                    if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                        return None
-                    if ctype == b"IHDR":
-                        ihdr = struct.unpack(">IIBBBBB", data)
-                    elif ctype == b"IDAT":
-                        idat += data
-                    elif ctype == b"IEND":
-                        ended = True
-                        break
-                    i += 12 + ln
-                if ihdr is None or not idat or not ended:
-                    return None
-                w, h, depth, color, comp, filt, interlace = ihdr
-                if (depth, color, comp, filt, interlace) != (8, 2, 0, 0, 1):
-                    return None
-                if w <= 0 or h <= 0:
-                    return None
-                raw = zlib.decompress(idat)
-                img = bytearray(w * h * 3)
-                pos = 0
-                for x0, dx, y0, dy in _ADAM7:
-                    pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-                    ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-                    if pw == 0 or ph == 0:
-                        continue
-                    stride = pw * 3
-                    prior = bytes(stride)
-                    for r in range(ph):
-                        if pos + 1 + stride > len(raw):
-                            return None
-                        ft = raw[pos]
-                        line = raw[pos + 1 : pos + 1 + stride]
-                        pos += 1 + stride
-                        recon = _png_unfilter_line(line, prior, ft)
-                        if recon is None:
-                            return None
-                        y = y0 + r * dy
-                        for j in range(pw):
-                            base = (y * w + x0 + j * dx) * 3
-                            img[base : base + 3] = recon[j * 3 : j * 3 + 3]
-                        prior = bytes(recon)
-                if pos != len(raw):
-                    return None  # trailing bytes: malformed
-                sums = [0, 0, 0]
-                for k, v in enumerate(img):
-                    sums[k % 3] += v
-                return (w, h, sums[0], sums[1], sums[2])
-            except Exception:
-                return None
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "sum_r": [], "sum_g": [], "sum_b": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = decode(buf)
-                out["doc_id"].append(doc_id)
-                out["valid"].append(r is not None)
-                for col, j in (
-                    ("width", 0), ("height", 1),
-                    ("sum_r", 2), ("sum_g", 3), ("sum_b", 4),
-                ):
-                    out[col].append(r[j] if r else None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_PNG_I_SCHEMA)
+    """Adam7 twin of decode_png_features: the same container reader,
+    REQUIRING interlace=1 (a non-interlaced stream is a poisoned row
+    under this contract, mirroring q98's reverse rule), de-interlaces
+    the seven passes — each unfiltered against its own pass-local
+    prior row, empty passes contributing no bytes — and scatters
+    pixels to image positions. Exact integer channel sums."""
+    return _decode_stage(df, _png_interlaced_features, _PNG_I_SCHEMA)
 
 
 def media_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -850,32 +703,14 @@ def synthesize_html_data_uri_media(spark: SparkSession, sf_dir: str) -> DataFram
     in crawled web text."""
     import base64
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def page(doc_id: int) -> str:
-            b64 = base64.b64encode(_png_encode_rgb(doc_id, 16, 8, 59)).decode(
-                "ascii"
-            )
-            return (
-                f"<html><body><p>doc {doc_id}</p>"
-                f'<img src="data:image/png;base64,{b64}"/></body></html>'
-            )
+    def page(doc_id: int) -> str:
+        b64 = base64.b64encode(_png_encode_rgb(doc_id, 16, 8, 59)).decode("ascii")
+        return (
+            f"<html><body><p>doc {doc_id}</p>"
+            f'<img src="data:image/png;base64,{b64}"/></body></html>'
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [page(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # same bench-scale parallelism note as the image synths: the
-    # one-split doc_id projection would serialize the page builder
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return d.mapInPandas(gen, schema="doc_id long, html string")
+    return _encode_stage(_doc_ids(spark, sf_dir), page, spread=True, out="html string")
 
 
 def media_data_uri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,6 +816,10 @@ _JPEG_AC_VALS = sorted(
 )
 
 
+_SAMPLING_444 = [(1, 1)] * 3
+_SAMPLING_420 = [(2, 2), (1, 1), (1, 1)]
+
+
 def _jpeg_zigzag() -> list:
     """Natural-order index for each zigzag position, generated by the
     diagonal walk (no 64-entry transcription)."""
@@ -1008,95 +847,164 @@ def _jpeg_huff_codes(bits: list, vals: list) -> dict:
     return codes
 
 
-def _jpeg_encode_gray(pixels, width: int, height: int) -> bytes:
-    """Baseline sequential JPEG, one 8-bit grayscale component, dims
-    multiples of 8. ``pixels`` is a row-major list/array of ints."""
-    import struct
-
+def _jpeg_dct_basis():
+    """Type-II DCT basis: A[u, x] = c(u)/2 * cos((2x+1) u pi / 16)."""
     import numpy as np
 
-    zz = _jpeg_zigzag()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    # type-II DCT basis: A[u, x] = c(u)/2 * cos((2x+1) u pi / 16)
     x = np.arange(8)
     u = np.arange(8).reshape(8, 1)
     a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
     a[0, :] /= np.sqrt(2.0)
+    return a
 
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
+def _jpeg_quantized_blocks(planes, width: int, height: int, sampling) -> list:
+    """Per component, rows of its 8x8 blocks, each as the 64
+    Annex-K-quantized DCT coefficients in zigzag order. Planes are at
+    native resolution: (height*Vc/Vmax) x (width*Hc/Hmax)."""
+    import numpy as np
 
-    def put(code: int, ln: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << ln) | (code & ((1 << ln) - 1))
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            b = (bitbuf >> nbits) & 0xFF
-            out.append(b)
+    a = _jpeg_dct_basis()
+    zz = _jpeg_zigzag()
+    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
+    hmax = max(hc for hc, _vc in sampling)
+    vmax = max(vc for _hc, vc in sampling)
+    qcs = []
+    for p, (hc, vc) in zip(planes, sampling):
+        img = np.asarray(p, dtype=np.float64).reshape(height * vc // vmax, width * hc // hmax)
+        rows = []
+        for by in range(img.shape[0] // 8):
+            row = []
+            for bx in range(img.shape[1] // 8):
+                blk = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
+                flat = np.rint((a @ blk @ a.T) / q).astype(np.int64).reshape(64)
+                row.append([int(flat[i]) for i in zz])
+            rows.append(row)
+        qcs.append(rows)
+    return qcs
+
+
+class _JpegBits:
+    """Entropy-coded segment writer: MSB-first bits, 0xFF byte
+    stuffing, 1-bit padding, raw RSTn markers."""
+
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.bitbuf = 0
+        self.nbits = 0
+
+    def put(self, code: int, ln: int) -> None:
+        self.bitbuf = (self.bitbuf << ln) | (code & ((1 << ln) - 1))
+        self.nbits += ln
+        while self.nbits >= 8:
+            self.nbits -= 8
+            b = (self.bitbuf >> self.nbits) & 0xFF
+            self.out.append(b)
             if b == 0xFF:
-                out.append(0x00)  # byte stuffing
+                self.out.append(0x00)  # byte stuffing
 
-    def put_val(v: int) -> None:
+    def put_val(self, v: int) -> None:
         s = abs(v).bit_length()
         if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
+            self.put(v if v >= 0 else v + (1 << s) - 1, s)
 
-    img = np.asarray(pixels, dtype=np.float64).reshape(height, width)
-    prev_dc = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            blk = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-            coef = a @ blk @ a.T
-            qc = np.rint(coef / q).astype(np.int64)
-            flat = qc.reshape(64)
-            zzc = [int(flat[i]) for i in zz]
-            d = zzc[0] - prev_dc
-            prev_dc = zzc[0]
-            put(*dc_codes[abs(d).bit_length()])
-            put_val(d)
-            run = 0
-            for i in range(1, 64):
-                if zzc[i] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    put(*ac_codes[0xF0])
-                    run -= 16
-                s = abs(zzc[i]).bit_length()
-                put(*ac_codes[(run << 4) | s])
-                put_val(zzc[i])
-                run = 0
-            if run:
-                put(*ac_codes[0x00])  # EOB
-    if nbits:
-        pad = 8 - nbits
-        put((1 << pad) - 1, pad)  # pad with 1-bits
+    def flush_pad(self) -> None:
+        if self.nbits:
+            self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
+    def restart(self, n: int) -> None:
+        # byte-align, then the raw (unstuffed) RSTn marker
+        self.flush_pad()
+        self.out += bytes([0xFF, 0xD0 + n])
 
-    dqt = seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTABLE[i] for i in zz))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
 
-    def dht(cls_id: int, bits: list, vals: list) -> bytes:
-        return seg(0xFFC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
+def _jpeg_segment(marker: int, payload: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
 
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return (
-        b"\xff\xd8"  # SOI
-        + dqt
-        + sof
-        + dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-        + dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-        + sos
-        + bytes(out)
-        + b"\xff\xd9"  # EOI
+
+def _jpeg_headers(sof: int, width: int, height: int, sampling, ac_bits, ac_vals,
+                  restart_interval: int) -> bytes:
+    """SOI, DQT, SOFn, DC + AC DHTs and (with restart_interval) DRI:
+    component ids 1..n, all on quant table 0 and Huffman tables 0."""
+    comps = b"".join(
+        bytes([ci + 1, (hc << 4) | vc, 0]) for ci, (hc, vc) in enumerate(sampling)
     )
+    return (
+        b"\xff\xd8"
+        + _jpeg_segment(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTABLE[i] for i in _jpeg_zigzag()))
+        + _jpeg_segment(sof, struct.pack(">BHHB", 8, height, width, len(sampling)) + comps)
+        + _jpeg_segment(0xFFC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS))
+        + _jpeg_segment(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
+        + (_jpeg_segment(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b"")
+    )
+
+
+def _jpeg_encode_baseline(planes, width: int, height: int, sampling,
+                          restart_interval: int = 0) -> bytes:
+    """Baseline sequential JPEG (SOF0), 1 or 3 8-bit components with
+    T.81 sampling factors ``sampling`` = [(H, V), ...], planes at
+    native resolution, dims multiples of the MCU. One interleaved scan
+    (Hc x Vc blocks per component per MCU, raster within the MCU),
+    shared quant + DC/AC tables, per-component DC predictors. With
+    ``restart_interval`` = r > 0, a DRI segment is emitted and every r
+    MCUs the entropy stream is byte-aligned (1-padded) and an RSTn
+    marker (n cycling 0..7) is written with DC predictors reset."""
+    hmax = max(hc for hc, _vc in sampling)
+    vmax = max(vc for _hc, vc in sampling)
+    if width % (8 * hmax) or height % (8 * vmax):
+        raise ValueError("dims must be MCU-aligned")
+    qcs = _jpeg_quantized_blocks(planes, width, height, sampling)
+    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    bits = _JpegBits()
+    prev = [0] * len(planes)
+
+    def encode_block(zzc: list, ci: int) -> None:
+        d = zzc[0] - prev[ci]
+        prev[ci] = zzc[0]
+        bits.put(*dc_codes[abs(d).bit_length()])
+        bits.put_val(d)
+        run = 0
+        for i in range(1, 64):
+            if zzc[i] == 0:
+                run += 1
+                continue
+            while run > 15:
+                bits.put(*ac_codes[0xF0])
+                run -= 16
+            s = abs(zzc[i]).bit_length()
+            bits.put(*ac_codes[(run << 4) | s])
+            bits.put_val(zzc[i])
+            run = 0
+        if run:
+            bits.put(*ac_codes[0x00])  # EOB
+
+    mcu_n = 0
+    for my in range(height // (8 * vmax)):
+        for mx in range(width // (8 * hmax)):
+            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
+                bits.restart((mcu_n // restart_interval - 1) % 8)
+                prev[:] = [0] * len(planes)
+            for ci, (hc, vc) in enumerate(sampling):
+                for v2 in range(vc):
+                    for h2 in range(hc):
+                        encode_block(qcs[ci][my * vc + v2][mx * hc + h2], ci)
+            mcu_n += 1
+    bits.flush_pad()
+    scomps = b"".join(bytes([ci + 1, 0x00]) for ci in range(len(planes)))
+    return (
+        _jpeg_headers(0xFFC0, width, height, sampling, _JPEG_AC_BITS, _JPEG_AC_VALS,
+                      restart_interval)
+        + _jpeg_segment(0xFFDA, bytes([len(planes)]) + scomps + bytes([0, 63, 0]))
+        + bytes(bits.out)
+        + b"\xff\xd9"
+    )
+
+
+def _jpeg_encode_gray(pixels, width: int, height: int) -> bytes:
+    """Baseline sequential JPEG, one 8-bit grayscale component, dims
+    multiples of 8. ``pixels`` is a row-major list/array of ints."""
+    return _jpeg_encode_baseline([pixels], width, height, [(1, 1)])
 
 
 def _jpeg_decode_baseline(buf):
@@ -1126,8 +1034,6 @@ def _jpeg_decode_baseline(buf):
     REJECTION, never mis-parse: an arithmetic-coded stream poisons
     the row (tests/test_conformance_vectors.py pins SOF9 and SOF10
     streams to valid=false through the production feature path)."""
-    import struct
-
     import numpy as np
 
     try:
@@ -1505,10 +1411,7 @@ def _jpeg_decode_baseline(buf):
             f_hmax = max(hc for _cid, hc, vc, _tq in comps)
             f_vmax = max(vc for _cid, hc, vc, _tq in comps)
             zz = _jpeg_zigzag()
-            x = np.arange(8)
-            u = np.arange(8).reshape(8, 1)
-            a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
-            a[0, :] /= np.sqrt(2.0)
+            a = _jpeg_dct_basis()
             px = []
             samps = []
             for (_cid, hc, vc, tq), cf in zip(comps, prog_coef):
@@ -1563,10 +1466,7 @@ def _jpeg_decode_baseline(buf):
 
         zz = _jpeg_zigzag()
         inv = np.argsort(zz)
-        x = np.arange(8)
-        u = np.arange(8).reshape(8, 1)
-        a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
-        a[0, :] /= np.sqrt(2.0)
+        a = _jpeg_dct_basis()
         planes = [
             np.zeros((mcuy * 8 * vc, mcux * 8 * hc))
             for _dct, _act, _qt, hc, vc in order
@@ -1637,6 +1537,24 @@ def _jpeg_decode_gray(buf: bytes):
     return (w, h, planes[0])
 
 
+def _jpeg_444_planes(doc_id: int, mult: int, n: int) -> list:
+    """The q381/q382/q385 pixel spec: ``n`` 16x16 planes of four
+    uniform 8x8 blocks with EVEN values
+    v(ci, k) = 2*((doc_id*mult + ci*53 + k*97) % 128), k = block
+    raster index."""
+    import numpy as np
+
+    planes = []
+    for ci in range(n):
+        img = np.zeros((16, 16), dtype=np.int64)
+        for k in range(4):
+            by, bx = divmod(k, 2)
+            img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 2 * (
+                (doc_id * mult + ci * 53 + k * 97) % 128
+            )
+        planes.append(img)
+    return planes
+
 
 def synthesize_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic REAL baseline JPEGs: 16x16 grayscale, four
@@ -1646,71 +1564,28 @@ def synthesize_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded image equals the pixel spec and q381's oracle never
     touches bytes."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            import numpy as np
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_gray(_jpeg_444_planes(doc_id, 31, 1)[0].reshape(-1), 16, 16)
 
-            img = np.zeros((16, 16), dtype=np.int64)
-            for k in range(4):
-                v = 2 * ((doc_id * 31 + k * 97) % 128)
-                by, bx = divmod(k, 2)
-                img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-            return _jpeg_encode_gray(img.reshape(-1), 16, 16)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
 
-    # the input is an 8-byte/row doc_id projection — at fixture scale
-    # it collapses to ONE split, serializing the Python codec; a
-    # repartition of this tiny column is near-free and spreads encode
-    # across all cores (at real scale the scan has many splits and
-    # AQE would coalesce, so this is bench-scale parallelism, not a
-    # data shuffle)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+def _jpeg_gray_features(buf: bytes):
+    r = _jpeg_decode_gray(buf)
+    if r is None:
+        return None
+    w, h, px = r
+    return (w, h, int(px.sum()), int(px[0, 0]), int(px[-1, -1]))
 
 
 def decode_jpeg_features(df: DataFrame) -> DataFrame:
     """REAL image decode through the multimodal mapInPandas plumbing:
     full baseline-JPEG parse per row (markers, stream-parsed Huffman
-    tables, entropy decode, dequant, IDCT) with the q98
-    one-poisoned-row policy; features stay EXACT (integer pixel sum
-    as BIGINT, first/last pixels) so the oracle hash never depends on
-    float formatting."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "pixel_sum": [], "px_first": [], "px_last": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = _jpeg_decode_gray(buf)
-                out["doc_id"].append(doc_id)
-                out["valid"].append(r is not None)
-                if r is None:
-                    for c in ("width", "height", "pixel_sum",
-                              "px_first", "px_last"):
-                        out[c].append(None)
-                else:
-                    w, h, px = r
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["pixel_sum"].append(int(px.sum()))
-                    out["px_first"].append(int(px[0, 0]))
-                    out["px_last"].append(int(px[-1, -1]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_JPEG_SCHEMA)
+    tables, entropy decode, dequant, IDCT) with the one-poisoned-row
+    policy; features stay EXACT (integer pixel sum as BIGINT,
+    first/last pixels) so the oracle hash never depends on float
+    formatting."""
+    return _decode_stage(df, _jpeg_gray_features, _JPEG_SCHEMA)
 
 
 def media_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1744,96 +1619,8 @@ _JPEG_COLOR_SCHEMA = (
 
 def _jpeg_encode_ycc444(planes, width: int, height: int) -> bytes:
     """Baseline sequential JPEG, three 8-bit components, H=V=1
-    (4:4:4), interleaved MCU = one 8x8 block per component, shared
-    quant + DC/AC tables, per-component DC predictors."""
-    import struct
-
-    import numpy as np
-
-    zz = _jpeg_zigzag()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    x = np.arange(8)
-    u = np.arange(8).reshape(8, 1)
-    a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
-    a[0, :] /= np.sqrt(2.0)
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def put(code: int, ln: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << ln) | (code & ((1 << ln) - 1))
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            b = (bitbuf >> nbits) & 0xFF
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-
-    def put_val(v: int) -> None:
-        s = abs(v).bit_length()
-        if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-
-    imgs = [
-        np.asarray(p, dtype=np.float64).reshape(height, width) for p in planes
-    ]
-    prev = [0, 0, 0]
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            for ci in range(3):  # interleaved MCU: Y, Cb, Cr
-                blk = imgs[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                qc = np.rint((a @ blk @ a.T) / q).astype(np.int64)
-                flat = qc.reshape(64)
-                zzc = [int(flat[i]) for i in zz]
-                d = zzc[0] - prev[ci]
-                prev[ci] = zzc[0]
-                put(*dc_codes[abs(d).bit_length()])
-                put_val(d)
-                run = 0
-                for i in range(1, 64):
-                    if zzc[i] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        put(*ac_codes[0xF0])
-                        run -= 16
-                    s = abs(zzc[i]).bit_length()
-                    put(*ac_codes[(run << 4) | s])
-                    put_val(zzc[i])
-                    run = 0
-                if run:
-                    put(*ac_codes[0x00])
-    if nbits:
-        pad = 8 - nbits
-        put((1 << pad) - 1, pad)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTABLE[i] for i in zz))
-    comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 3) + comps)
-
-    def dht(cls_id: int, bits: list, vals: list) -> bytes:
-        return seg(0xFFC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
-
-    scomps = b"".join(bytes([cid, 0x00]) for cid in (1, 2, 3))
-    sos = seg(0xFFDA, bytes([3]) + scomps + bytes([0, 63, 0]))
-    return (
-        b"\xff\xd8"
-        + dqt
-        + sof
-        + dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-        + dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-        + sos
-        + bytes(out)
-        + b"\xff\xd9"
-    )
+    (4:4:4), interleaved MCU = one 8x8 block per component."""
+    return _jpeg_encode_baseline(planes, width, height, _SAMPLING_444)
 
 
 def synthesize_jpeg_color_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1843,76 +1630,32 @@ def synthesize_jpeg_color_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     invertible per plane (q381's argument), so q382's oracle replays
     the pixel spec."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            import numpy as np
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_ycc444(_jpeg_444_planes(doc_id, 31, 3), 16, 16)
 
-            planes = []
-            for ci in range(3):
-                img = np.zeros((16, 16), dtype=np.int64)
-                for k in range(4):
-                    v = 2 * ((doc_id * 31 + ci * 53 + k * 97) % 128)
-                    by, bx = divmod(k, 2)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                planes.append(img)
-            return _jpeg_encode_ycc444(planes, 16, 16)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )  # same bench-scale parallelism note as synthesize_jpeg_media
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+def _jpeg_plane_features(buf: bytes, sampling: list):
+    """Exact per-plane features (BIGINT sums, last pixel per plane) of
+    a JPEG whose components are sampled exactly ``sampling``, the
+    layout a feature contract requires; gray, or 4:2:0 under the 4:4:4
+    contract, is a poisoned row. Planes are at NATIVE resolution."""
+    r = _jpeg_decode_baseline(buf)
+    if r is None or r[3] != sampling:
+        return None
+    w, h, planes, _samps = r
+    return (w, h, *[int(p.sum()) for p in planes], *[int(p[-1, -1]) for p in planes])
 
 
 def decode_jpeg_color_features(df: DataFrame) -> DataFrame:
     """Color twin of decode_jpeg_features: full baseline parse via the
-    general decoder, requiring THREE components; exact per-plane
-    integer features (BIGINT sums, last-pixel per plane). Grayscale
-    payloads are poisoned rows under this contract."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "sum_y": [], "sum_cb": [], "sum_cr": [],
-                "px_y": [], "px_cb": [], "px_cr": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = _jpeg_decode_baseline(buf)
-                # contract: three components, NOT subsampled — a
-                # 4:2:0 stream under the 4:4:4 contract is a poisoned
-                # row (q383 is its home), same as gray under color
-                ok = (
-                    r is not None
-                    and len(r[2]) == 3
-                    and all(s == (1, 1) for s in r[3])
-                )
-                out["doc_id"].append(doc_id)
-                out["valid"].append(ok)
-                if not ok:
-                    for c in ("width", "height", "sum_y", "sum_cb",
-                              "sum_cr", "px_y", "px_cb", "px_cr"):
-                        out[c].append(None)
-                else:
-                    w, h, planes, _samps = r
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    for key, p in zip(("sum_y", "sum_cb", "sum_cr"), planes):
-                        out[key].append(int(p.sum()))
-                    for key, p in zip(("px_y", "px_cb", "px_cr"), planes):
-                        out[key].append(int(p[-1, -1]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_JPEG_COLOR_SCHEMA)
+    general decoder, requiring THREE components sampled 1x1 (4:4:4);
+    exact per-plane integer features (BIGINT sums, last-pixel per
+    plane). Grayscale and subsampled payloads are poisoned rows under
+    this contract (q383 is the 4:2:0 home)."""
+    features = partial(_jpeg_plane_features, sampling=_SAMPLING_444)
+    return _decode_stage(df, features, _JPEG_COLOR_SCHEMA)
 
 
 def media_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1946,124 +1689,11 @@ def _jpeg_encode_ycc420(y, cb, cr, width: int, height: int,
                         restart_interval: int = 0) -> bytes:
     """Baseline sequential JPEG, three 8-bit components with 4:2:0
     sampling (Y H=V=2; Cb/Cr H=V=1), interleaved MCU = 2x2 Y blocks +
-    one block each of Cb/Cr, shared quant + DC/AC tables, per-
-    component DC predictors. ``y`` is height x width, ``cb``/``cr``
+    one block each of Cb/Cr. ``y`` is height x width, ``cb``/``cr``
     are (height/2) x (width/2); dims must be multiples of 16. With
-    ``restart_interval`` = r > 0, a DRI segment is emitted and every
-    r MCUs the entropy stream is byte-aligned (1-padded) and an RSTn
-    marker (n cycling 0..7) is written with DC predictors reset."""
-    import struct
-
-    import numpy as np
-
-    if width % 16 or height % 16:
-        raise ValueError("4:2:0 synthesis requires dims % 16 == 0")
-    zz = _jpeg_zigzag()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    x = np.arange(8)
-    u = np.arange(8).reshape(8, 1)
-    a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
-    a[0, :] /= np.sqrt(2.0)
-    dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def put(code: int, ln: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << ln) | (code & ((1 << ln) - 1))
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            b = (bitbuf >> nbits) & 0xFF
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-
-    def put_val(v: int) -> None:
-        s = abs(v).bit_length()
-        if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-
-    def flush_pad() -> None:
-        nonlocal nbits
-        if nbits:
-            put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1-bits
-
-    planes = [
-        np.asarray(y, dtype=np.float64).reshape(height, width),
-        np.asarray(cb, dtype=np.float64).reshape(height // 2, width // 2),
-        np.asarray(cr, dtype=np.float64).reshape(height // 2, width // 2),
-    ]
-    prev = [0, 0, 0]
-
-    def encode_block(ci: int, row8: int, col8: int) -> None:
-        blk = planes[ci][row8 * 8 : row8 * 8 + 8, col8 * 8 : col8 * 8 + 8] - 128.0
-        qc = np.rint((a @ blk @ a.T) / q).astype(np.int64)
-        flat = qc.reshape(64)
-        zzc = [int(flat[i]) for i in zz]
-        d = zzc[0] - prev[ci]
-        prev[ci] = zzc[0]
-        put(*dc_codes[abs(d).bit_length()])
-        put_val(d)
-        run = 0
-        for i in range(1, 64):
-            if zzc[i] == 0:
-                run += 1
-                continue
-            while run > 15:
-                put(*ac_codes[0xF0])
-                run -= 16
-            s = abs(zzc[i]).bit_length()
-            put(*ac_codes[(run << 4) | s])
-            put_val(zzc[i])
-            run = 0
-        if run:
-            put(*ac_codes[0x00])  # EOB
-
-    mcux, mcuy = width // 16, height // 16
-    mcu_n = 0
-    rst_n = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_n and mcu_n % restart_interval == 0:
-                flush_pad()
-                out += bytes([0xFF, 0xD0 + rst_n])  # raw marker, unstuffed
-                rst_n = (rst_n + 1) % 8
-                prev[:] = [0, 0, 0]
-            for v2 in range(2):  # four Y blocks, raster within the MCU
-                for h2 in range(2):
-                    encode_block(0, my * 2 + v2, mx * 2 + h2)
-            encode_block(1, my, mx)  # Cb
-            encode_block(2, my, mx)  # Cr
-            mcu_n += 1
-    flush_pad()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTABLE[i] for i in zz))
-    comps = bytes([1, 0x22, 0]) + bytes([2, 0x11, 0]) + bytes([3, 0x11, 0])
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 3) + comps)
-
-    def dht(cls_id: int, bits: list, vals: list) -> bytes:
-        return seg(0xFFC4, bytes([cls_id]) + bytes(bits) + bytes(vals))
-
-    dri = seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
-    scomps = b"".join(bytes([cid, 0x00]) for cid in (1, 2, 3))
-    sos = seg(0xFFDA, bytes([3]) + scomps + bytes([0, 63, 0]))
-    return (
-        b"\xff\xd8"
-        + dqt
-        + sof
-        + dht(0x00, _JPEG_DC_BITS, _JPEG_DC_VALS)
-        + dht(0x10, _JPEG_AC_BITS, _JPEG_AC_VALS)
-        + dri
-        + sos
-        + bytes(out)
-        + b"\xff\xd9"
+    ``restart_interval`` = r > 0, RSTn markers every r MCUs."""
+    return _jpeg_encode_baseline(
+        [y, cb, cr], width, height, _SAMPLING_420, restart_interval
     )
 
 
@@ -2099,27 +1729,12 @@ def synthesize_jpeg_420_media(
     every data unit uniform+even, chroma blocks MCU-aligned, so the
     lossy subsampled format round-trips exactly (module note)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            yp, cbp, crp = _jpeg_420_planes(doc_id, mult)
-            return _jpeg_encode_ycc420(
-                yp, cbp, crp, 32, 32, restart_interval=restart_interval
-            )
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_ycc420(
+            *_jpeg_420_planes(doc_id, mult), 32, 32, restart_interval=restart_interval
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )  # same bench-scale parallelism note as synthesize_jpeg_media
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
 
 def decode_jpeg_420_features(df: DataFrame) -> DataFrame:
@@ -2129,38 +1744,8 @@ def decode_jpeg_420_features(df: DataFrame) -> DataFrame:
     plane's NATIVE resolution (Y full-res, chroma half-res), so no
     upsampling convention enters the oracle contract. 4:4:4 or
     grayscale payloads are poisoned rows under this contract."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "width": [], "height": [],
-                "sum_y": [], "sum_cb": [], "sum_cr": [],
-                "px_y": [], "px_cb": [], "px_cr": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                r = _jpeg_decode_baseline(buf)
-                ok = (
-                    r is not None
-                    and len(r[2]) == 3
-                    and r[3] == [(2, 2), (1, 1), (1, 1)]
-                )
-                out["doc_id"].append(doc_id)
-                out["valid"].append(ok)
-                if not ok:
-                    for c in ("width", "height", "sum_y", "sum_cb",
-                              "sum_cr", "px_y", "px_cb", "px_cr"):
-                        out[c].append(None)
-                else:
-                    w, h, planes, _samps = r
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    for key, p in zip(("sum_y", "sum_cb", "sum_cr"), planes):
-                        out[key].append(int(p.sum()))
-                    for key, p in zip(("px_y", "px_cb", "px_cr"), planes):
-                        out[key].append(int(p[-1, -1]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_JPEG_COLOR_SCHEMA)
+    features = partial(_jpeg_plane_features, sampling=_SAMPLING_420)
+    return _decode_stage(df, features, _JPEG_COLOR_SCHEMA)
 
 
 def media_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2234,10 +1819,6 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
     is byte-aligned and an RSTn marker written (n cycling per scan),
     with DC predictors and EOB-run state reset — pending EOB runs and
     buffered correction bits are flushed before each marker."""
-    import struct
-
-    import numpy as np
-
     n = len(planes)
     if n not in (1, 3):
         raise ValueError("1 or 3 components")
@@ -2246,61 +1827,14 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
     vmax = max(vc for _hc, vc in sampling)
     if width % (8 * hmax) or height % (8 * vmax):
         raise ValueError("dims must be MCU-aligned")
-    zz = _jpeg_zigzag()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    x = np.arange(8)
-    u = np.arange(8).reshape(8, 1)
-    a = np.cos((2 * x + 1) * u * np.pi / 16) / 2.0
-    a[0, :] /= np.sqrt(2.0)
     dc_codes = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     acp_codes = _jpeg_huff_codes(_JPEG_ACP_BITS, _JPEG_ACP_VALS)
 
     mcux, mcuy = width // (8 * hmax), height // (8 * vmax)
-    # zigzag-ordered quantized coefficients, per component per block
-    # (native resolution: component ci is (height*Vc/Vmax) x
-    # (width*Hc/Hmax))
-    qcs = []
-    nbx = []
-    nby = []
-    for p, (hc, vc) in zip(planes, sampling):
-        cw, ch = width * hc // hmax, height * vc // vmax
-        img = np.asarray(p, dtype=np.float64).reshape(ch, cw)
-        cbx, cby = cw // 8, ch // 8
-        nbx.append(cbx)
-        nby.append(cby)
-        blocks = []
-        for by in range(cby):
-            row = []
-            for bx in range(cbx):
-                blk = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                flat = np.rint((a @ blk @ a.T) / q).astype(np.int64).reshape(64)
-                row.append([int(flat[i]) for i in zz])
-            blocks.append(row)
-        qcs.append(blocks)
-
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def put(code: int, ln: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << ln) | (code & ((1 << ln) - 1))
-        nbits += ln
-        while nbits >= 8:
-            nbits -= 8
-            b = (bitbuf >> nbits) & 0xFF
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-
-    def put_val(v: int) -> None:
-        s = abs(v).bit_length()
-        if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-
-    def flush_pad() -> None:
-        if nbits:
-            put((1 << (8 - nbits)) - 1, 8 - nbits)
+    qcs = _jpeg_quantized_blocks(planes, width, height, sampling)
+    nby = [len(blocks) for blocks in qcs]
+    nbx = [len(blocks[0]) for blocks in qcs]
+    bits = _JpegBits()  # one per scan, see run_scan
 
     def _dc_mcus(cis):
         # interleaved: MCU lattice with Hc x Vc data units per comp;
@@ -2322,10 +1856,7 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                     yield [(0, ci, by, bx)]
 
     def _emit_rst(rst):
-        # byte-align with 1-bit padding, then the raw (unstuffed)
-        # restart marker
-        flush_pad()
-        out.extend(bytes([0xFF, 0xD0 + rst[0]]))
+        bits.restart(rst[0])
         rst[0] = (rst[0] + 1) % 8
 
     def scan_dc_first(cis, al):
@@ -2339,8 +1870,8 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                 v = qcs[ci][by][bx][0] >> al  # arithmetic shift
                 d = v - pred[si]
                 pred[si] = v
-                put(*dc_codes[abs(d).bit_length()])
-                put_val(d)
+                bits.put(*dc_codes[abs(d).bit_length()])
+                bits.put_val(d)
 
     def scan_dc_refine(cis, al):
         rst = [0]
@@ -2348,7 +1879,7 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
             if restart_interval and mi and mi % restart_interval == 0:
                 _emit_rst(rst)
             for _si, ci, by, bx in units:
-                put((qcs[ci][by][bx][0] >> al) & 1, 1)
+                bits.put((qcs[ci][by][bx][0] >> al) & 1, 1)
 
     def pt_ac(v, al):
         # AC point transform is sign-magnitude (toward zero), unlike
@@ -2362,9 +1893,9 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
             er = state["eobrun"]
             if er > 0:
                 nb = er.bit_length() - 1
-                put(*acp_codes[nb << 4])
+                bits.put(*acp_codes[nb << 4])
                 if nb:
-                    put(er - (1 << nb), nb)
+                    bits.put(er - (1 << nb), nb)
                 state["eobrun"] = 0
 
         rst = [0]
@@ -2383,10 +1914,10 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                         continue
                     emit_eobrun()
                     while r > 15:
-                        put(*acp_codes[0xF0])
+                        bits.put(*acp_codes[0xF0])
                         r -= 16
-                    put(*acp_codes[(r << 4) | abs(t).bit_length()])
-                    put_val(t)
+                    bits.put(*acp_codes[(r << 4) | abs(t).bit_length()])
+                    bits.put_val(t)
                     r = 0
                 if r > 0:
                     state["eobrun"] += 1
@@ -2401,11 +1932,11 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
             er = state["eobrun"]
             if er > 0:
                 nb = er.bit_length() - 1
-                put(*acp_codes[nb << 4])
+                bits.put(*acp_codes[nb << 4])
                 if nb:
-                    put(er - (1 << nb), nb)
+                    bits.put(er - (1 << nb), nb)
                 for b in state["be"]:
-                    put(b, 1)
+                    bits.put(b, 1)
                 state["eobrun"] = 0
                 state["be"] = []
 
@@ -2431,10 +1962,10 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                         continue
                     while r > 15 and k <= eob:
                         emit_eobrun()
-                        put(*acp_codes[0xF0])
+                        bits.put(*acp_codes[0xF0])
                         r -= 16
                         for b in br:
-                            put(b, 1)
+                            bits.put(b, 1)
                         br = []
                     if temp > 1:
                         # already nonzero at coarser precision: one
@@ -2442,10 +1973,10 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                         br.append(temp & 1)
                         continue
                     emit_eobrun()
-                    put(*acp_codes[(r << 4) | 1])
-                    put(1 if blkz[k] > 0 else 0, 1)  # sign bit
+                    bits.put(*acp_codes[(r << 4) | 1])
+                    bits.put(1 if blkz[k] > 0 else 0, 1)  # sign bit
                     for b in br:
-                        put(b, 1)
+                        bits.put(b, 1)
                     br = []
                     r = 0
                 if r > 0 or br:
@@ -2455,37 +1986,21 @@ def _jpeg_encode_progressive(planes, width: int, height: int,
                         emit_eobrun()
         emit_eobrun()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    stream = bytearray(b"\xff\xd8")
-    stream += seg(0xFFDB, bytes([0x00]) + bytes(_JPEG_QTABLE[i] for i in zz))
-    comps = b"".join(
-        bytes([cid + 1, (sampling[cid][0] << 4) | sampling[cid][1], 0])
-        for cid in range(n)
+    stream = bytearray(
+        _jpeg_headers(0xFFC2, width, height, sampling, _JPEG_ACP_BITS, _JPEG_ACP_VALS,
+                      restart_interval)
     )
-    stream += seg(0xFFC2, struct.pack(">BHHB", 8, height, width, n) + comps)
-    stream += seg(
-        0xFFC4, bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-    )
-    stream += seg(
-        0xFFC4, bytes([0x10]) + bytes(_JPEG_ACP_BITS) + bytes(_JPEG_ACP_VALS)
-    )
-    if restart_interval:
-        stream += seg(0xFFDD, struct.pack(">H", restart_interval))
 
     def run_scan(comp_ids, ss, se, ah, al, emitter):
-        nonlocal out, bitbuf, nbits
+        nonlocal bits
         hdr = bytes([len(comp_ids)])
         hdr += b"".join(bytes([ci + 1, 0x00]) for ci in comp_ids)
         hdr += bytes([ss, se, (ah << 4) | al])
-        stream.extend(seg(0xFFDA, hdr))
-        out = bytearray()
-        bitbuf = 0
-        nbits = 0
+        stream.extend(_jpeg_segment(0xFFDA, hdr))
+        bits = _JpegBits()
         emitter()
-        flush_pad()
-        stream.extend(out)
+        bits.flush_pad()
+        stream.extend(bits.out)
 
     allc = list(range(n))
     run_scan(allc, 0, 0, 0, 1, lambda: scan_dc_first(allc, 1))
@@ -2509,34 +2024,10 @@ def synthesize_jpeg_progressive_media(spark: SparkSession, sf_dir: str) -> DataF
     ACs are zero, so the AC scans are pure EOB-run streams), so the
     14-scan progressive wire format decodes to the closed-form spec."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            import numpy as np
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_progressive(_jpeg_444_planes(doc_id, 41, 3), 16, 16)
 
-            planes = []
-            for ci in range(3):
-                img = np.zeros((16, 16), dtype=np.int64)
-                for k in range(4):
-                    v = 2 * ((doc_id * 41 + ci * 53 + k * 97) % 128)
-                    by, bx = divmod(k, 2)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                planes.append(img)
-            return _jpeg_encode_progressive(planes, 16, 16)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )  # same bench-scale parallelism note as synthesize_jpeg_media
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
 
 def synthesize_jpeg_prog420_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2546,27 +2037,12 @@ def synthesize_jpeg_prog420_media(spark: SparkSession, sf_dir: str) -> DataFrame
     the 14-scan progressive script with the interleaved DC scan
     walking the MCU lattice (4 Y + Cb + Cr data units per MCU)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            yp, cbp, crp = _jpeg_420_planes(doc_id, 43)
-            return _jpeg_encode_progressive(
-                [yp, cbp, crp], 32, 32, sampling=[(2, 2), (1, 1), (1, 1)]
-            )
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_progressive(
+            _jpeg_420_planes(doc_id, 43), 32, 32, sampling=_SAMPLING_420
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )  # same bench-scale parallelism note as synthesize_jpeg_media
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
 
 
 def media_jpeg_prog420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2589,32 +2065,14 @@ def media_jpeg_prog_restart_decode(spark: SparkSession, sf_dir: str) -> DataFram
     EOB-run state reset, index cycling per scan). Same 4:2:0 feature
     contract; pixel spec under mult=47."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def encode(doc_id: int) -> bytes:
-            yp, cbp, crp = _jpeg_420_planes(doc_id, 47)
-            return _jpeg_encode_progressive(
-                [yp, cbp, crp], 32, 32,
-                sampling=[(2, 2), (1, 1), (1, 1)], restart_interval=1,
-            )
+    def encode(doc_id: int) -> bytes:
+        return _jpeg_encode_progressive(
+            _jpeg_420_planes(doc_id, 47), 32, 32,
+            sampling=_SAMPLING_420, restart_interval=1,
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return (
-        decode_jpeg_420_features(
-            d.mapInPandas(gen, schema="doc_id long, payload binary")
-        ).orderBy("doc_id")
-    )
+    payloads = _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return decode_jpeg_420_features(payloads).orderBy("doc_id")
 
 
 def media_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2657,8 +2115,6 @@ def _warc_header(doc_id: int) -> bytes:
 
 def _gzip_members(chunks) -> bytes:
     """Concatenated gzip members, one per chunk (WARC file layout)."""
-    import zlib
-
     out = bytearray()
     for c in chunks:
         co = zlib.compressobj(9, zlib.DEFLATED, 31)  # wbits=31: gzip wrapper
@@ -2670,8 +2126,6 @@ def _gzip_members_decode(buf: bytes):
     """Walk concatenated gzip members via unused_data; returns the
     list of decompressed members or None on any malformation
     (truncated member, trailing garbage, bad CRC)."""
-    import zlib
-
     try:
         if not isinstance(buf, (bytes, bytearray)) or not buf:
             return None
@@ -2692,6 +2146,12 @@ def _gzip_members_decode(buf: bytes):
         return None
 
 
+def _warc_record(doc_id: int, text) -> bytes | None:
+    if not isinstance(text, str):
+        return None  # poisoned row, not a task failure
+    return _gzip_members([_warc_header(doc_id), text.encode("utf-8")])
+
+
 def _warc_gzip_payloads(d: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, payload): two concatenated gzip
     members per row. Works on batch AND streaming DataFrames (q391
@@ -2700,79 +2160,38 @@ def _warc_gzip_payloads(d: DataFrame) -> DataFrame:
     oracle's hdr||text hash matches for non-ASCII content too. A
     NULL / non-string text yields a NULL payload (a poisoned row the
     decoder marks invalid) instead of failing the whole Spark task."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def enc(doc_id, t):
-            if not isinstance(t, str):
-                return None  # poisoned row, not a task failure
-            return _gzip_members([_warc_header(int(doc_id)),
-                                  t.encode("utf-8")])
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        enc(d, t)
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return d.mapInPandas(gen, schema="doc_id long, payload binary")
+    return _encode_stage(d, _warc_record, spread=False)
 
 
 def synthesize_warc_gzip_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: a two-member concatenated gzip payload — a
     WARC-ish record header member and the document text member —
     exactly the member layout a WET shard has."""
-    # NOTE: unlike the image synths' 8-byte doc_id projections, this
-    # repartition moves the text column (~KB/row) — still bench-scale
-    # parallelism only (the fixture scan is one split); at real scale
-    # the scan has many splits and this line should be dropped, since
-    # shuffling corpus text just to spread a cheap gzip is waste.
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    # unlike the image synths' 8-byte doc_id projections, this spread
+    # moves the text column (~KB/row); at real scale the scan has many
+    # splits and the spread should be dropped, since shuffling corpus
+    # text just to spread a cheap gzip is waste
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return _encode_stage(d, _warc_record, spread=True)
+
+
+def _warc_features(buf: bytes):
+    members = _gzip_members_decode(buf)
+    if members is None or len(members) != 2:
+        return None
+    return (
+        len(members), len(members[0]), len(members[1]),
+        hashlib.md5(b"".join(members)).hexdigest(),
     )
-    return _warc_gzip_payloads(d)
 
 
 def decode_warc_gzip_features(df: DataFrame) -> DataFrame:
-    """Multi-member gzip decode with the one-poisoned-row policy:
-    member count, per-member byte lengths, and the md5 of the
-    concatenated recovered bytes (the oracle rebuilds the identical
-    string in SQL — lossless formats need no invertible-subset
-    trick)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "valid": [], "n_members": [],
-                "header_len": [], "text_len": [], "payload_md5": [],
-            }
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                members = _gzip_members_decode(buf)
-                ok = members is not None and len(members) == 2
-                out["doc_id"].append(doc_id)
-                out["valid"].append(ok)
-                if not ok:
-                    for c in ("n_members", "header_len", "text_len",
-                              "payload_md5"):
-                        out[c].append(None)
-                else:
-                    out["n_members"].append(len(members))
-                    out["header_len"].append(len(members[0]))
-                    out["text_len"].append(len(members[1]))
-                    out["payload_md5"].append(
-                        hashlib.md5(b"".join(members)).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_WARC_SCHEMA)
+    """Multi-member gzip decode: member count, per-member byte
+    lengths, and the md5 of the concatenated recovered bytes (the
+    oracle rebuilds the identical string in SQL — lossless formats
+    need no invertible-subset trick). Anything but exactly two intact
+    members is a poisoned row."""
+    return _decode_stage(df, _warc_features, _WARC_SCHEMA)
 
 
 def media_warc_gzip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2796,10 +2215,9 @@ def media_warc_gzip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_geonet_quakes_spark.streaming.windows import _run_to_memory
 
     batch = load_table(spark, sf_dir, "documents")
-    # NO micro-batch repartition here, unlike the batch synths: an
-    # interleaved A/B (r14 session 5) measured the per-micro-batch
-    # shuffle of the text column costing more than the serialized
-    # gzip stage it spreads (q391 runs 2.8-3.6 s → 3.9-13.9 s)
+    # not spread: the per-micro-batch shuffle of the text column costs
+    # more than the gzip stage it would spread (measured,
+    # OPTIMIZATION_r14.md "q391/q392 stream-side repartition")
     stream = (
         spark.readStream.schema(batch.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2858,11 +2276,9 @@ def media_warc_stream_upsert_expiry(spark: SparkSession, sf_dir: str) -> DataFra
         )
         if keep is not None:
             stream = stream.filter(keep)
-        # NO micro-batch repartition (r14 session 5, measured): the
-        # per-batch shuffle regressed the interleaved A/B 6.67 →
-        # 9.49 s mins — the stateful publish pipeline pays the extra
-        # stage twice per crawl while the serialized gzip it would
-        # spread is not the bottleneck here
+        # not spread: the stateful publish pipeline would pay the
+        # extra stage twice per crawl (measured, OPTIMIZATION_r14.md
+        # "q391/q392 stream-side repartition")
         snap = (
             decode_warc_gzip_features(_warc_gzip_payloads(stream))
             .filter(F.col("valid"))

@@ -54,18 +54,19 @@ class SnapshotDiffSink:
     State is one parquet dir of deduplicated ids per publish
     (``ids_000001``, ``ids_000002``, ...) under ``state_dir``, tiny
     relative to the data. A version counts once its ``_SUCCESS``
-    marker is written, and the last committed version on disk is the
-    previous snapshot: a new sink on an existing ``state_dir`` diffs
-    against it, and a publish that crashed mid-write is ignored and
-    overwritten by the next one. ``publish`` returns
-    (upserted_count, expired_ids).
+    marker is written, and the newest committed version below the one
+    being written is the previous snapshot: a new sink on an existing
+    ``state_dir`` diffs against it, and a publish that crashed
+    mid-write is ignored and overwritten by the next one. Streaming
+    publishes are numbered by epoch, so a replayed epoch recomputes
+    its own diff. ``publish`` returns (upserted_count, expired_ids).
     """
 
     def __init__(self, state_dir: str) -> None:
         self.state_dir = state_dir
 
     def publish(
-        self, snapshot: DataFrame | Iterable[str]
+        self, snapshot: DataFrame | Iterable[str], epoch: int | None = None
     ) -> tuple[int, DataFrame | list[str]]:
         """Publish a full snapshot: a DataFrame with an ``id`` column,
         or the snapshot's ids already collected on the driver.
@@ -73,28 +74,38 @@ class SnapshotDiffSink:
         Returns the number of upserted (distinct) ids and the ids
         expired by omission (present previously, absent now): a lazy
         DataFrame for a DataFrame snapshot, a sorted list for driver
-        ids. Either input writes the next ``ids_NNNNNN`` version and
-        diffs against the last committed one, whichever input wrote it.
+        ids. Either input writes an ``ids_NNNNNN`` version and diffs
+        against the newest committed version below it, whichever input
+        wrote it. Without ``epoch`` the version is the next after the
+        last committed one. With a streaming ``epoch`` it is
+        ``epoch + 1``, so a replayed epoch overwrites its own version
+        and diffs against the same predecessor as the first attempt.
 
         .. warning:: **A returned ``expired`` DataFrame is valid for
            ONE further ``publish()`` cycle only.** It lazily reads the
            previous and the new id-set versions; each publish prunes
-           all but the last three versions, so consuming the return
-           after two more ``publish()`` calls raises FileNotFound at
-           action time. Materialize it (``.collect()`` or a write)
-           before publishing again if it must outlive the next cycle.
+           all but the new version and the two below it, so consuming
+           the return after two more ``publish()`` calls raises
+           FileNotFound at action time. Materialize it (``.collect()``
+           or a write) before publishing again if it must outlive the
+           next cycle.
         """
         versions = committed_versions(self.state_dir, _IDS)
-        path = version_path(self.state_dir, _IDS, versions[-1] + 1 if versions else 1)
-        prev = version_path(self.state_dir, _IDS, versions[-1]) if versions else None
+        if epoch is None:
+            v = versions[-1] + 1 if versions else 1
+        else:
+            v = epoch + 1
+        below = [x for x in versions if x < v]
+        path = version_path(self.state_dir, _IDS, v)
+        prev = version_path(self.state_dir, _IDS, below[-1]) if below else None
         if isinstance(snapshot, DataFrame):
             n, expired = _publish_frame(snapshot, path, prev)
         else:
             n, expired = _publish_ids(snapshot, path, prev)
-        # keep the new version and the two before it: the expired set
+        # keep the new version and the two below it: the expired set
         # returned by the previous publish reads those two
-        for v in versions[:-2]:
-            shutil.rmtree(version_path(self.state_dir, _IDS, v), ignore_errors=True)
+        for x in below[:-2]:
+            shutil.rmtree(version_path(self.state_dir, _IDS, x), ignore_errors=True)
         return n, expired
 
     def foreach_batch(self, handler=None):
@@ -106,18 +117,19 @@ class SnapshotDiffSink:
         Its ids are published from the driver, so the batch's plan runs
         once. Without one, the batch is published as a DataFrame.
 
-        Delivery is at-least-once with one gap: the id set is committed
-        before the handler runs, so if the handler raises, the epoch's
-        replay diffs against the ids it already committed and hands the
-        handler no expiries for that tick.
+        Each tick publishes under its epoch. If the handler raises
+        after the id set is committed, Spark replays the epoch, the
+        replay rewrites that version against the same predecessor, and
+        the handler gets the tick's expiries again: delivery is
+        at-least-once.
         """
 
         def run(batch_df: DataFrame, epoch_id: int) -> None:
             if handler is None:
-                self.publish(batch_df)
+                self.publish(batch_df, epoch_id)
                 return
             fc = to_feature_collection(batch_df)
-            _, expired = self.publish(f["id"] for f in fc["features"])
+            _, expired = self.publish((f["id"] for f in fc["features"]), epoch_id)
             handler(fc, expired, epoch_id)
 
         return run

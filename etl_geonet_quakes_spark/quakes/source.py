@@ -96,12 +96,7 @@ class GeoNetReader(DataSourceReader):
                 and f.attribute == ("properties", "mmi")
                 and isinstance(f.value, int)
             ):
-                if isinstance(f, GreaterThan):
-                    bound = f.value + 1
-                elif isinstance(f, EqualTo):
-                    bound = f.value
-                else:
-                    bound = f.value
+                bound = f.value + 1 if isinstance(f, GreaterThan) else f.value
                 if -1 <= bound <= 8:
                     self.min_mmi = bound if self.min_mmi is None else max(self.min_mmi, bound)
             # always yield: Spark re-applies every filter (the API
@@ -115,26 +110,32 @@ class GeoNetReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        # Runs on an executor — keep imports local.
-        import json as _json
-        import urllib.request
-
         if self.path:
             with open(self.path, "r", encoding="utf-8") as fh:
-                body = _json.load(fh)
+                body = json.load(fh)
         else:
             url = self.base_url
             if self.min_mmi is not None:
                 url = f"{url}?MMI={self.min_mmi}"
-            req = urllib.request.Request(url, headers={"accept": "application/json"})
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                if not (200 <= resp.status < 300):  # task.ts:179-181
-                    raise RuntimeError(f"Failed to fetch data: {resp.status} {resp.reason}")
-                body = _json.loads(resp.read().decode("utf-8"))
+            body = _fetch(url)
 
         # fixture replay must behave like the server-side filter
         # (O9 invariant: identical rows either way)
         yield from _parse_features(body, self.min_mmi)
+
+
+def _fetch(url: str) -> dict:
+    """GET ``url`` as JSON. A non-2xx status aborts the run
+    (task.ts:179-181); ``urlopen`` raises ``HTTPError`` for it."""
+    import urllib.error
+    import urllib.request
+
+    req = urllib.request.Request(url, headers={"accept": "application/json"})
+    try:
+        with urllib.request.urlopen(req, timeout=30) as resp:
+            return json.loads(resp.read().decode("utf-8"))
+    except urllib.error.HTTPError as e:
+        raise RuntimeError(f"Failed to fetch data: {e.code} {e.reason}") from e
 
 
 def _parse_features(body: dict, min_mmi: int | None = None):
@@ -192,24 +193,13 @@ class GeoNetStreamReader(SimpleDataSourceStreamReader):
         return {"tick": 0}
 
     def _rows_for_tick(self, tick: int) -> list[tuple]:
-        import json as _json
-        import urllib.request
-
         if self._snapshots is not None:
             if tick >= len(self._snapshots):
                 return []
             with open(self._snapshots[tick], "r", encoding="utf-8") as fh:
-                body = _json.load(fh)
+                body = json.load(fh)
         else:
-            req = urllib.request.Request(
-                self.base_url, headers={"accept": "application/json"}
-            )
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                if not (200 <= resp.status < 300):  # task.ts:179-181
-                    raise RuntimeError(
-                        f"Failed to fetch data: {resp.status} {resp.reason}"
-                    )
-                body = _json.loads(resp.read().decode("utf-8"))
+            body = _fetch(self.base_url)
         return list(_parse_features(body))
 
     def read(self, start: dict):

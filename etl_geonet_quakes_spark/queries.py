@@ -137,8 +137,13 @@ _QUAKE_STALE = "2026-01-15T12:05:00.000Z"  # now + 5 min, ISO-ms
 # — or ≥~1e-16 away from any double), then DECIMAL round-half-up picks
 # the larger n on ties, as toFixed specifies. A bare printf('%.Nf')
 # would round half-to-even on the binary value and diverge on exact
-# quarters (5.25 → '5.2' instead of JS '5.3').
-_TOFIX = "CAST(ROUND(CAST(printf('%.25g', {x}) AS DECIMAL(38,25)), {f}) AS VARCHAR)"
+# quarters (5.25 → '5.2' instead of JS '5.3'). The sign is a string
+# prefix over the rounded magnitude, as in toFixed: a negative that
+# rounds to zero keeps it ((-0.04).toFixed(1) is '-0.0'), -0.0 does not.
+_TOFIX = (
+    "(CASE WHEN {x} < 0 THEN '-' ELSE '' END || "
+    "CAST(ROUND(CAST(printf('%.25g', abs({x})) AS DECIMAL(38,25)), {f}) AS VARCHAR))"
+)
 
 
 def _quake_parity_oracle(

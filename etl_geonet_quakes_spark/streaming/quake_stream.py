@@ -20,7 +20,11 @@ from pyspark.sql import functions as F
 
 from etl_geonet_quakes_spark.quakes.schema import GEONET_RESPONSE_SCHEMA
 from etl_geonet_quakes_spark.quakes.sink import SnapshotDiffSink
-from etl_geonet_quakes_spark.quakes.transform import QuakeJobConfig, transform_quakes
+from etl_geonet_quakes_spark.quakes.transform import (
+    QuakeJobConfig,
+    transform_quakes,
+    validate_features,
+)
 
 
 def run_quake_stream(
@@ -35,7 +39,9 @@ def run_quake_stream(
 
     ``publish_handler(fc_dict, expired_ids, epoch)`` receives each
     publish — the REST POST adapter in production, a recorder in
-    tests.
+    tests. Each batch passes boundary validation first, in the same
+    job as the transform, so a snapshot with a missing required field
+    fails the stream instead of being silently filtered.
     """
     stream = (
         spark.readStream.schema(GEONET_RESPONSE_SCHEMA)
@@ -50,7 +56,7 @@ def run_quake_stream(
     epochs: list[int] = []
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = transform_quakes(batch_df, config)
+        out = transform_quakes(validate_features(batch_df), config)
         inner(out, epoch_id)
         epochs.append(epoch_id)
 
@@ -95,7 +101,6 @@ def stream_quakes_via_source(
     import time
 
     from etl_geonet_quakes_spark.quakes import source as geonet_source
-    from etl_geonet_quakes_spark.quakes.transform import validate_features
 
     geonet_source.register(spark)
     fixture = os.path.join(

@@ -130,6 +130,22 @@ def test_js_to_fixed_node_verified_literals(to_fixed_cases):
         assert got[repr(x), digits] == expect, (x, digits)
 
 
+def test_tofixed_oracle_matches_node_literals():
+    # the DuckDB replay of toFixed behind q02/q03's oracle
+    import duckdb
+
+    from etl_geonet_quakes_spark.queries import _TOFIX
+
+    cases = TO_FIXED_LITERALS + [(-1.25, 1, "-1.3")]
+    sql = " UNION ALL ".join(
+        f"SELECT {i} AS i, {_TOFIX.format(x=f'CAST({x!r} AS DOUBLE)', f=d)} AS s"
+        for i, (x, d, _) in enumerate(cases)
+    )
+    got = dict(duckdb.sql(sql).fetchall())
+    for i, (x, digits, expect) in enumerate(cases):
+        assert got[i] == expect, (x, digits, got[i])
+
+
 @pytest.mark.skipif(shutil.which("node") is None, reason="node not installed")
 def test_js_to_fixed_matches_node(to_fixed_cases):
     # JSON carries each double exactly (repr round-trips, -0.0 included)

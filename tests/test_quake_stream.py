@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from etl_geonet_quakes_spark.quakes.transform import QuakeJobConfig
 from etl_geonet_quakes_spark.streaming.quake_stream import run_quake_stream
 
@@ -44,3 +46,45 @@ def test_two_snapshot_stream_with_expiry(spark, tmp_path):
     # every published feature keeps the CoT shape
     # (spot-check one field through the envelope)
     assert all(i.startswith("earthquake-") for i in ids0)
+
+
+def _cfg():
+    return QuakeJobConfig(min_mmi=-1, max_age_minutes=1e12, now_utc_ms=NOW_MS)
+
+
+def test_stream_batch_fails_boundary_validation(spark, tmp_path):
+    snaps = tmp_path / "snaps"
+    snaps.mkdir()
+    body = json.load(open(FIXTURE))
+    body["features"][0]["properties"]["mmi"] = None
+    json.dump(body, open(snaps / "t0.json", "w"))
+    with pytest.raises(Exception, match="failed boundary validation"):
+        run_quake_stream(
+            spark, str(snaps), str(tmp_path / "state"), _cfg(),
+            publish_handler=lambda fc, expired, epoch: None,
+        )
+
+
+def test_replayed_epoch_hands_handler_its_expiries(spark, tmp_path):
+    # at-least-once: a handler that raises after tick 1's id set is
+    # committed gets tick 1's expiries again when Spark replays it
+    snaps = tmp_path / "snaps"
+    snaps.mkdir()
+    body = json.load(open(FIXTURE))
+    json.dump(body, open(snaps / "t0.json", "w"))
+    dropped = "earthquake-" + body["features"][0]["properties"]["publicID"]
+    json.dump({"features": body["features"][1:]}, open(snaps / "t1.json", "w"))
+    state = str(tmp_path / "state")
+    calls = []
+
+    def handler(fc, expired, epoch):
+        calls.append((epoch, sorted(expired)))
+        if epoch == 1 and len(calls) == 2:
+            raise RuntimeError("REST POST failed")
+
+    with pytest.raises(Exception, match="REST POST failed"):
+        run_quake_stream(spark, str(snaps), state, _cfg(), publish_handler=handler)
+    assert calls == [(0, []), (1, [dropped])]
+    epochs = run_quake_stream(spark, str(snaps), state, _cfg(), publish_handler=handler)
+    assert epochs == [1]
+    assert calls[2:] == [(1, [dropped])]

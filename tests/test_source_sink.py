@@ -3,6 +3,7 @@ upsert/expiry sink contract (O26)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -291,3 +292,51 @@ def test_stream_reader_replay_between_offsets(geonet, tmp_path):
     _, off3 = r.read({"tick": 3})
     assert off3 == {"tick": 3}
     assert list(r.read({"tick": 3})[0]) == []
+
+
+@pytest.fixture()
+def geonet_http():
+    """A loopback GeoNet stand-in: ``/ok`` serves the fixture, anything
+    else answers 503."""
+    import http.server
+    import threading
+
+    body = open(FIXTURE, "rb").read()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            if self.path.startswith("/ok"):
+                self.send_response(200)
+                self.send_header("Content-Type", "application/json")
+                self.end_headers()
+                self.wfile.write(body)
+            else:
+                self.send_error(503)
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.HTTPServer(("127.0.0.1", 0), Handler)
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    yield f"http://127.0.0.1:{server.server_port}"
+    server.shutdown()
+    server.server_close()
+
+
+def test_readers_fetch_over_http(geonet_http):
+    from pyspark.sql.datasource import InputPartition
+
+    def batch_rows(url):
+        return list(geonet_source.GeoNetReader({"url": url}).read(InputPartition(0)))
+
+    def stream_rows(url):
+        rows, end = geonet_source.GeoNetStreamReader({"url": url}).read({"tick": 0})
+        assert end == {"tick": 1}
+        return list(rows)
+
+    n_features = len(json.load(open(FIXTURE))["features"])
+    for rows in (batch_rows, stream_rows):
+        assert len(rows(f"{geonet_http}/ok")) == n_features
+        with pytest.raises(RuntimeError, match="Failed to fetch data: 503 Service Unavailable"):
+            rows(f"{geonet_http}/down")
