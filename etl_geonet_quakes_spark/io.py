@@ -7,13 +7,18 @@ the star-schema fixtures (column-pruned + predicate-pushdown for
 free), JSON-with-declared-schema for GeoJSON fixtures (never
 inferred), and a corrupt-record column instead of blind trust.
 
-It also owns the layout of versioned state dirs (``committed_versions``,
-``version_path``) that the stateful sinks and streams share.
+It also owns the one rule every stateful sink and stream follows for
+its durable state (``next_version`` and the helpers below it), and the
+per-process scratch root their work dirs live under (``scratch_dir``).
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -108,9 +113,9 @@ def committed_versions(state_dir: str, prefix: str) -> list[int]:
     """Ascending numbers of the complete ``{prefix}NNNNNN`` versions
     under ``state_dir``. A version counts once its ``_SUCCESS``
     marker, written last by Spark's parquet commit or by the sink's
-    driver-side writer, is in it: a dir left
-    by a crashed write is ignored, and the next write of that number
-    overwrites it. Recovery reads this listing, never driver memory."""
+    driver-side writer, is in it: a dir left by a crashed write is
+    ignored, and the next write of that number overwrites it. Recovery
+    reads this listing, never driver memory."""
     if not os.path.isdir(state_dir):
         return []
     return sorted(
@@ -123,3 +128,77 @@ def committed_versions(state_dir: str, prefix: str) -> list[int]:
 
 def version_path(state_dir: str, prefix: str, version: int) -> str:
     return os.path.join(state_dir, f"{prefix}{version:06d}")
+
+
+def next_version(
+    state_dir: str, prefix: str, epoch: int | None = None
+) -> tuple[int, list[int]]:
+    """The version a write takes, and the committed versions below it.
+
+    This is the one numbering rule of the engine's durable state. A
+    streaming ``epoch`` writes version ``epoch + 1``; a call without
+    one writes the version after the newest committed one. The
+    predecessor is the newest committed version below (the returned
+    list's last entry), so a replayed epoch overwrites its own version
+    and reads the same state as its first attempt."""
+    versions = committed_versions(state_dir, prefix)
+    if epoch is None:
+        v = versions[-1] + 1 if versions else 1
+    else:
+        v = epoch + 1
+    return v, [x for x in versions if x < v]
+
+
+def write_version(df: DataFrame, state_dir: str, prefix: str, version: int) -> None:
+    """Write ``df`` as ``version``: the overwrite clears a crashed or
+    replayed attempt, and Spark's ``_SUCCESS``, written last, commits
+    it."""
+    df.write.mode("overwrite").parquet(version_path(state_dir, prefix, version))
+
+
+def read_versions(
+    spark: SparkSession,
+    state_dir: str,
+    prefix: str,
+    schema,
+    versions: list[int] | None = None,
+) -> DataFrame:
+    """The union of ``versions`` (default: every committed one) read
+    with the declared ``schema``; zero versions give an empty frame of
+    that schema."""
+    if versions is None:
+        versions = committed_versions(state_dir, prefix)
+    if not versions:
+        # limit(0) makes it an empty LocalRelation, which the optimizer
+        # prunes from unions; the bare frame scans a Python RDD
+        return spark.createDataFrame([], schema).limit(0)
+    paths = [version_path(state_dir, prefix, v) for v in versions]
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def prune_versions(state_dir: str, prefix: str, below: list[int], keep: int) -> None:
+    """Delete all but the newest ``keep`` of the committed versions
+    ``below`` a write: a writer keeps only what its next replay, or a
+    lazy frame it handed out, still reads."""
+    for v in below[: max(len(below) - keep, 0)]:
+        shutil.rmtree(version_path(state_dir, prefix, v), ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new work dir under this process's one scratch root. Registry
+    queries return lazy frames over these dirs, so the root is removed
+    at interpreter exit, not earlier."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="egqs_scratch_")
+    atexit.register(_remove_scratch_root, root, os.getpid())
+    return root
+
+
+def _remove_scratch_root(root: str, owner: int) -> None:
+    # a forked child inherits the hook but not the root
+    if os.getpid() == owner:
+        shutil.rmtree(root, ignore_errors=True)

@@ -2258,16 +2258,16 @@ def media_warc_stream_upsert_expiry(spark: SparkSession, sf_dir: str) -> DataFra
     the second publish reported — both facts the oracle rebuilds
     relationally.
     """
-    import tempfile
-
+    from etl_geonet_quakes_spark.io import scratch_dir
     from etl_geonet_quakes_spark.quakes.sink import SnapshotDiffSink
+    from etl_geonet_quakes_spark.streaming.feed import run_foreach_batch
 
-    work = tempfile.mkdtemp(prefix="warc_upsert_")
+    work = scratch_dir("warc_upsert_")
     sink = SnapshotDiffSink(os.path.join(work, "state"))
     batch = load_table(spark, sf_dir, "documents")
     published: dict = {}
 
-    def crawl(tag: str, keep=None) -> None:
+    def crawl(i: int, keep=None) -> None:
         stream = (
             spark.readStream.schema(batch.schema)
             .option("pathGlobFilter", "documents.parquet")
@@ -2285,20 +2285,17 @@ def media_warc_stream_upsert_expiry(spark: SparkSession, sf_dir: str) -> DataFra
             .select(F.col("doc_id").alias("id"))
         )
 
+        # each crawl has its own checkpoint, so its stream epoch is
+        # always 0: the crawl number is the publish's epoch, and a
+        # replayed crawl rewrites its own id-set version
         def publish(batch_df: DataFrame, epoch_id: int) -> None:
-            published[tag] = sink.publish(batch_df)
+            published[i] = sink.publish(batch_df, epoch=i)
 
-        q = (
-            snap.writeStream.foreachBatch(publish)
-            .option("checkpointLocation", os.path.join(work, f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_foreach_batch(snap, publish, os.path.join(work, f"ckpt_{i}"))
 
-    crawl("crawl1")
-    crawl("crawl2", keep=F.col("doc_id") % 10 != 0)
-    n_live, expired = published["crawl2"]
+    crawl(0)
+    crawl(1, keep=F.col("doc_id") % 10 != 0)
+    n_live, expired = published[1]
     return (
         expired.select(F.col("id").alias("doc_id"))
         .withColumn("n_live", F.lit(n_live).cast("long"))

@@ -11,9 +11,10 @@ expires it. Two adapters re-express that:
   SURVEY §7.4). Payloads here are O(100) rows by contract.
 - ``SnapshotDiffSink`` — each trigger/batch publishes a full
   snapshot keyed by id and diffs its id set against the previous
-  publish's to emit explicit ``expired`` ids. The id sets are an
-  append-only series of committed versions on disk (``ids_000001``,
-  ``ids_000002``, ...), each written once. A publish takes either a
+  publish's to emit explicit ``expired`` ids. The id sets are
+  committed versions on disk (``ids_000001``, ``ids_000002``, ...),
+  numbered and read by the engine's one state rule
+  (``io.next_version``). A publish takes either a
   DataFrame, whose ids Spark writes and diffs as a lazy anti-join (the
   scale path: no id reaches the driver), or ids already on the driver,
   which pyarrow writes and Python diffs with no Spark job. Both write
@@ -33,7 +34,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from etl_geonet_quakes_spark.io import committed_versions, version_path
+from etl_geonet_quakes_spark.io import next_version, prune_versions, version_path
 
 _IDS = "ids_"
 
@@ -53,13 +54,12 @@ class SnapshotDiffSink:
 
     State is one parquet dir of deduplicated ids per publish
     (``ids_000001``, ``ids_000002``, ...) under ``state_dir``, tiny
-    relative to the data. A version counts once its ``_SUCCESS``
-    marker is written, and the newest committed version below the one
-    being written is the previous snapshot: a new sink on an existing
-    ``state_dir`` diffs against it, and a publish that crashed
-    mid-write is ignored and overwritten by the next one. Streaming
-    publishes are numbered by epoch, so a replayed epoch recomputes
-    its own diff. ``publish`` returns (upserted_count, expired_ids).
+    relative to the data, under ``io.next_version``'s rule: the
+    previous snapshot is the newest committed version below the one
+    being written, so a new sink on an existing ``state_dir`` diffs
+    against it, a publish that crashed mid-write is ignored and
+    overwritten, and a replayed epoch recomputes its own diff.
+    ``publish`` returns (upserted_count, expired_ids).
     """
 
     def __init__(self, state_dir: str) -> None:
@@ -74,12 +74,11 @@ class SnapshotDiffSink:
         Returns the number of upserted (distinct) ids and the ids
         expired by omission (present previously, absent now): a lazy
         DataFrame for a DataFrame snapshot, a sorted list for driver
-        ids. Either input writes an ``ids_NNNNNN`` version and diffs
-        against the newest committed version below it, whichever input
-        wrote it. Without ``epoch`` the version is the next after the
-        last committed one. With a streaming ``epoch`` it is
-        ``epoch + 1``, so a replayed epoch overwrites its own version
-        and diffs against the same predecessor as the first attempt.
+        ids. Either input writes the ``ids_NNNNNN`` version that
+        ``io.next_version`` gives for ``epoch`` and diffs against its
+        predecessor, whichever input wrote it: a replayed epoch
+        overwrites its own version and diffs against the same
+        predecessor as the first attempt.
 
         .. warning:: **A returned ``expired`` DataFrame is valid for
            ONE further ``publish()`` cycle only.** It lazily reads the
@@ -90,12 +89,7 @@ class SnapshotDiffSink:
            or a write) before publishing again if it must outlive the
            next cycle.
         """
-        versions = committed_versions(self.state_dir, _IDS)
-        if epoch is None:
-            v = versions[-1] + 1 if versions else 1
-        else:
-            v = epoch + 1
-        below = [x for x in versions if x < v]
+        v, below = next_version(self.state_dir, _IDS, epoch)
         path = version_path(self.state_dir, _IDS, v)
         prev = version_path(self.state_dir, _IDS, below[-1]) if below else None
         if isinstance(snapshot, DataFrame):
@@ -104,8 +98,7 @@ class SnapshotDiffSink:
             n, expired = _publish_ids(snapshot, path, prev)
         # keep the new version and the two below it: the expired set
         # returned by the previous publish reads those two
-        for x in below[:-2]:
-            shutil.rmtree(version_path(self.state_dir, _IDS, x), ignore_errors=True)
+        prune_versions(self.state_dir, _IDS, below, keep=2)
         return n, expired
 
     def foreach_batch(self, handler=None):

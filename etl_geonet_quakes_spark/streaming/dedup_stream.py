@@ -8,33 +8,34 @@ micro-batches, and each batch must be deduplicated against everything
 already seen WITHOUT re-running the full-corpus pair join.
 
 State is a parquet band-bucket index (doc_id, band, bucket) plus the
-doc texts needed by the verify tier — both append-only (a micro-batch
-only ever ADDS documents; at cluster scale the bucket index would be
-a table partitioned by bucket, so each batch's probe prunes to the
-buckets it touches). Per batch the work is:
+doc texts needed by the verify tier, kept as per-epoch deltas under
+the engine's one state rule (``io.next_version``): epoch *e* writes
+``buckets_NNNNNN``, then ``docs_NNNNNN``, then ``pairs_NNNNNN`` as
+version *e + 1*, and the pairs write, last, is the epoch's commit
+point. An epoch's state is the deltas of the committed pairs versions
+below its own, so a replay, or a rerun after a crash between the
+writes, rewrites its own deltas instead of adding a second copy. Per
+batch the work is:
 
 1. signature/banding for the BATCH only (``band_buckets`` — the exact
-   stage batch q38 runs, so batch ≡ incremental bit-for-bit);
+   stage batch q38 runs, so batch ≡ incremental bit-for-bit), written
+   as the batch's bucket delta;
 2. candidates = batch buckets ⋈ (index ∪ batch buckets) on
    (band, bucket) — new-vs-old and new-vs-new in one equi-join,
    canonicalized to doc_a < doc_b;
 3. exact string-shingle Jaccard verify on candidates only (same
-   verify tier as batch);
-4. append batch buckets + texts to state.
+   verify tier as batch).
 
 Every pair of the full corpus is emitted exactly once — at the batch
 where its LATER member arrives — so the union of per-batch outputs
 equals the one-shot batch pair set (pinned by
 tests/test_quake_stream.py-style equivalence in test_llm_ops.py).
 
-Scale shape: per-batch cost is |batch| signatures + an equi-join
-whose left side is batch-sized; the accumulated index is touched only
-on the (band, bucket) keys the batch populates. Each batch's pairs are
-written as the next committed version (``pairs_000001``, ...; the
-versioned-dir layout of ``io.committed_versions`` that
-``SnapshotDiffSink`` also uses) BEFORE the state append, because their
-lazy plan reads the state the append grows. Numbering resumes from
-disk, so a restarted index never overwrites an earlier run's pairs.
+Scale shape: per-batch work is |batch| signatures plus an equi-join
+whose left side is batch-sized, but its right side reads EVERY
+committed bucket delta and the verify tier every committed doc delta:
+the probe does not prune to the (band, bucket) keys the batch
+populates, so per-batch reads grow with history.
 """
 
 from __future__ import annotations
@@ -44,23 +45,34 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_geonet_quakes_spark.io import committed_versions, version_path
+from etl_geonet_quakes_spark.io import (
+    load_table,
+    next_version,
+    read_versions,
+    scratch_dir,
+    write_version,
+)
 from etl_geonet_quakes_spark.llm.dedup import band_buckets, shingles_str
+from etl_geonet_quakes_spark.streaming.feed import (
+    run_foreach_batch,
+    write_micro_batch_feed,
+)
 
 _BUCKET_SCHEMA = "doc_id long, band int, bucket long"
 _DOC_SCHEMA = "doc_id long, text string"
-_PAIRS = "pairs_"
+_PAIRS_SCHEMA = "doc_a long, doc_b long, jaccard double"
+_BUCKETS, _DOCS, _PAIRS = "buckets_", "docs_", "pairs_"
 
 
 class StreamingMinHashIndex:
     """Incremental LSH dedup state over micro-batches of documents.
 
-    ``process_batch(batch_df)`` ingests one micro-batch of
+    ``process_batch(batch_df, epoch=None)`` ingests one micro-batch of
     (doc_id, text) rows (doc_ids unique across the stream — the
     upsert-key contract) and returns the VERIFIED near-dup pairs that
-    involve at least one batch document, written as the next pairs
-    version so the result survives the state append. ``foreach_batch``
-    adapts it to ``writeStream.foreachBatch``.
+    involve at least one batch document, read back from the pairs
+    version it commits. ``foreach_batch`` adapts it to
+    ``writeStream.foreachBatch``.
     """
 
     def __init__(
@@ -74,37 +86,25 @@ class StreamingMinHashIndex:
         self.n_hashes = n_hashes
         self.bands = bands
         self.threshold = threshold
-        self._buckets_path = os.path.join(state_dir, "bucket_index")
-        self._docs_path = os.path.join(state_dir, "doc_store")
 
-    def _state(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        try:
-            return spark.read.schema(schema).parquet(path)
-        except Exception:  # first batch: empty state
-            return spark.createDataFrame([], schema)
-
-    def process_batch(self, batch_df: DataFrame) -> DataFrame:
+    def process_batch(self, batch_df: DataFrame, epoch: int | None = None) -> DataFrame:
         spark = batch_df.sparkSession
-        # cache the batch docs and their banding: WITHOUT the cache the
-        # banding subtree (24 minhash transforms over the shingle
-        # array) is evaluated THREE times per batch — twice inside the
-        # candidate join (nb sits on both the a side and the unioned b
-        # side) and once more for the bucket-index append. Measured at
-        # sf0.1 (round 11, alternating A/B, warm): 8.9-10.5 s → 7.5-8.4
-        # s for the 3-batch replay. Both caches are batch-sized (never
-        # corpus-sized) and released before the batch returns.
-        new_docs = batch_df.select("doc_id", "text").cache()
-        nb = band_buckets(new_docs, self.n_hashes, self.bands).cache()
-        old_b = self._state(spark, self._buckets_path, _BUCKET_SCHEMA)
-        old_docs = self._state(spark, self._docs_path, _DOC_SCHEMA)
+        sd = self.state_dir
+        v, below = next_version(sd, _PAIRS, epoch)
+        new_docs = batch_df.select("doc_id", "text")
+        # the batch's deltas go first and the pairs plan reads them
+        # back, so the banding runs once per batch (SCALE.md, "q151
+        # incremental-MinHash replay")
+        write_version(band_buckets(new_docs, self.n_hashes, self.bands), sd, _BUCKETS, v)
+        write_version(new_docs, sd, _DOCS, v)
 
         # one equi-join covers new-vs-old AND new-vs-new: the right
         # side is the union index. a.doc_id != b.doc_id plus
         # least/greatest canonicalization counts each unordered pair
         # once after dropDuplicates (a new-new pair matches from both
         # sides; a new-old pair from one).
-        a = nb.alias("a")
-        b = old_b.unionByName(nb).alias("b")
+        a = read_versions(spark, sd, _BUCKETS, _BUCKET_SCHEMA, [v]).alias("a")
+        b = read_versions(spark, sd, _BUCKETS, _BUCKET_SCHEMA, below + [v]).alias("b")
         cand_ids = (
             a.join(
                 b,
@@ -121,7 +121,7 @@ class StreamingMinHashIndex:
         # verify tier — identical to batch q38: string shingles of the
         # candidate docs only, exact Jaccard, threshold filter. The
         # candidate side is batch-bounded, so broadcast it.
-        all_docs = old_docs.unionByName(new_docs)
+        all_docs = read_versions(spark, sd, _DOCS, _DOC_SCHEMA, below + [v])
         cand_doc_ids = F.broadcast(
             cand_ids.select(
                 F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
@@ -150,31 +150,26 @@ class StreamingMinHashIndex:
         pairs = cand.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
             F.col("jaccard") >= self.threshold
         )
-
-        # write the result BEFORE appending state (the lazy plan reads
-        # the doc store; appending first would double-read the batch
-        # docs into their own verify join)
-        done = committed_versions(self.state_dir, _PAIRS)
-        out = version_path(self.state_dir, _PAIRS, done[-1] + 1 if done else 1)
-        pairs.write.mode("overwrite").parquet(out)
-        nb.write.mode("append").parquet(self._buckets_path)
-        new_docs.write.mode("append").parquet(self._docs_path)
-        nb.unpersist()
-        new_docs.unpersist()
-        return spark.read.parquet(out)
+        write_version(pairs, sd, _PAIRS, v)  # the epoch's commit point
+        return read_versions(spark, sd, _PAIRS, _PAIRS_SCHEMA, [v])
 
     def foreach_batch(self, handler=None):
         """Adapter: ``writeStream.foreachBatch(idx.foreach_batch(fn))``
         with ``fn(pairs_rows, epoch_id)`` receiving the batch's
         verified pairs as collected rows (pair volume is bounded by
-        the batch's true near-dups — tiny by construction)."""
+        the batch's true near-dups — tiny by construction). A replayed
+        epoch hands the handler the same pairs again."""
 
         def run(batch_df: DataFrame, epoch_id: int) -> None:
-            out = self.process_batch(batch_df)
+            out = self.process_batch(batch_df, epoch_id)
             if handler is not None:
                 handler(out.collect(), epoch_id)
 
         return run
+
+    def pairs(self, spark: SparkSession) -> DataFrame:
+        """The union of every committed epoch's pairs."""
+        return read_versions(spark, self.state_dir, _PAIRS, _PAIRS_SCHEMA)
 
 
 def run_dedup_stream(
@@ -199,31 +194,16 @@ def run_dedup_stream(
         .parquet(docs_dir)
     )
     idx = StreamingMinHashIndex(state_dir, n_hashes, bands, threshold)
-    inner = idx.foreach_batch(pair_handler)
-    epochs: list[int] = []
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        inner(batch_df, epoch_id)
-        epochs.append(epoch_id)
-
-    from etl_geonet_quakes_spark.streaming.feed import replay_partitions
-
-    with replay_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", f"{state_dir}/_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return epochs
+    return run_foreach_batch(
+        stream, idx.foreach_batch(pair_handler), os.path.join(state_dir, "_checkpoint")
+    )
 
 
 def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry adapter: replay the documents table as three
     arrival-ordered micro-batch files through the incremental index
     (availableNow + maxFilesPerTrigger=1) and return the UNION of the
-    per-batch verified pair emissions.
+    committed per-batch verified pair emissions.
 
     The streaming invariant — every pair emitted exactly once, at the
     batch where its later member arrives — makes that union equal the
@@ -231,27 +211,19 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT SQL oracle (full exact-Jaccard pair set): the cross-engine
     hash gate certifies the incremental path end-to-end, not just a
     rows-only count. Scratch feed/state dirs are per-invocation
-    temporaries; unordered-set semantics make the result independent
-    of file arrival order.
+    temporaries under ``io.scratch_dir``; unordered-set semantics make
+    the result independent of file arrival order.
 
     Nothing touches the driver: the 3-file feed is a DISTRIBUTED
     Spark write (``streaming.feed.write_micro_batch_feed`` —
     hash-repartitioned by batch id, metadata-only renames into the
     flat feed dir), and the result is the Spark-side union of the
-    per-batch pair versions the index already durably writes
+    committed pair versions the index already durably writes
     — no ``collect()`` anywhere in the path, so the same adapter
     works when ``documents`` is corpus-sized."""
-    import tempfile
-
-    from etl_geonet_quakes_spark.io import load_table
-    from etl_geonet_quakes_spark.streaming.feed import write_micro_batch_feed
-
-    base = tempfile.mkdtemp(prefix="stream_dedup_q151_")
+    base = scratch_dir("stream_dedup_q151_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     feed = write_micro_batch_feed(docs, base, 3, "doc_id")
     state = os.path.join(base, "state")
     run_dedup_stream(spark, feed, state)
-    out = spark.read.schema("doc_a long, doc_b long, jaccard double").parquet(
-        os.path.join(state, _PAIRS + "*")
-    )
-    return out.orderBy("doc_a", "doc_b")
+    return StreamingMinHashIndex(state).pairs(spark).orderBy("doc_a", "doc_b")

@@ -11,30 +11,28 @@ distributed Spark job (``repartition(n, b)`` puts each batch in exactly
 one task, so each ``b=i`` partition directory holds exactly one file),
 then flattened into the feed directory with metadata-only renames —
 no ``collect()``, no driver buffering, any corpus size.
+
+It also owns the one ``availableNow`` ``foreachBatch`` driver,
+``run_foreach_batch``, that every stateful stream writer runs under.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
+import time
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# State partition count for fixture replays. A stateful streaming
-# query fixes its state-store partition count to
-# spark.sql.shuffle.partitions AT QUERY START, and every micro-batch
-# then pays a per-partition-per-store commit (a stream-stream join
-# carries FOUR stores per partition: left/right x keyToNumValues/
-# keyWithIndexToValue). Measured on q273 at sf0.1 (round-10 audit,
-# SCALE.md): 32 partitions -> 6 batches x 128 store commits = 424 s
-# of summed commit time, 31.2 s wall; 8 partitions -> 8.0 s wall
-# (3.9x) with identical results. RocksDB was ~20% WORSE than the
-# HDFS provider at this state size (per-batch version uploads
-# dominate). At 100 TB the same sizing rule applies in reverse:
-# partitions ∝ state volume — the constant here is the fixture-scale
-# instance of that rule, not a magic number.
+# State partition count for fixture replays: a stateful query fixes
+# its state-store partitions at start and commits every store of every
+# partition each micro-batch, so fixture-sized state wants few
+# partitions (measurement and the sizing rule: SCALE.md, "streaming
+# replay overhead").
 REPLAY_SHUFFLE_PARTITIONS = 8
 
 
@@ -54,6 +52,34 @@ def replay_partitions(spark, n: int = REPLAY_SHUFFLE_PARTITIONS):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def run_foreach_batch(
+    stream: DataFrame,
+    per_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> list[int]:
+    """Drive ``stream`` to completion through
+    ``foreachBatch(per_batch)`` with an ``availableNow`` trigger,
+    started under :func:`replay_partitions`, and return the epochs this
+    run processed. The checkpoint at ``checkpoint`` makes a restart
+    resume after the last committed epoch; a replayed epoch is made
+    harmless by the writer's state rule (``io.next_version``)."""
+    epochs: list[int] = []
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        per_batch(batch_df, epoch_id)
+        epochs.append(epoch_id)
+
+    with replay_partitions(stream.sparkSession):
+        (
+            stream.writeStream.foreachBatch(run)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return epochs
+
+
 def write_micro_batch_feed(
     df: DataFrame, base: str, n_batches: int = 3, key: str = "doc_id"
 ) -> str:
@@ -65,33 +91,42 @@ def write_micro_batch_feed(
     class with no rows (sparse/skewed keys) still gets a batch file —
     an empty parquet with ``df``'s schema — so the replay sees the
     same number of micro-batches regardless of key distribution."""
+    return _write_batches(df, F.col(key) % F.lit(n_batches), base, n_batches, 1)
+
+
+def _write_batches(df: DataFrame, b, base: str, n_batches: int, width: int) -> str:
+    """Write ``df`` as one parquet file per batch id ``b`` in
+    ``[0, n_batches)``, named ``b{i:0{width}d}.parquet`` under
+    ``base/feed``: ONE distributed job (``repartition(n, b)`` puts each
+    batch in one task) and metadata-only renames. A batch with no rows
+    gets an empty parquet with ``df``'s schema."""
     feed = os.path.join(base, "feed")
     staging = os.path.join(base, "staging")
     os.makedirs(feed)
     (
-        df.withColumn("b", F.col(key) % F.lit(n_batches))
+        df.withColumn("b", b)
         .repartition(n_batches, "b")
         .write.partitionBy("b")
         .parquet(staging)
     )
-    missing = []
+    empty = None
     for i in range(n_batches):
+        dst = os.path.join(feed, f"b{i:0{width}d}.parquet")
         part = glob.glob(os.path.join(staging, f"b={i}", "part-*.parquet"))
         assert len(part) <= 1, part
         if part:
-            os.rename(part[0], os.path.join(feed, f"b{i}.parquet"))
-        else:
-            missing.append(i)
-    if missing:
-        empty_dir = os.path.join(base, "empty")
-        df.limit(0).coalesce(1).write.parquet(empty_dir)
-        src = glob.glob(os.path.join(empty_dir, "part-*.parquet"))[0]
-        for i in missing:
-            with open(src, "rb") as fh:
-                data = fh.read()
-            with open(os.path.join(feed, f"b{i}.parquet"), "wb") as fh:
-                fh.write(data)
+            os.rename(part[0], dst)
+            continue
+        if empty is None:
+            empty = _single_file(df.limit(0), os.path.join(base, "empty"))
+        shutil.copyfile(empty, dst)
     return feed
+
+
+def _single_file(df: DataFrame, path: str) -> str:
+    df.coalesce(1).write.parquet(path)
+    return glob.glob(os.path.join(path, "part-*.parquet"))[0]
+
 
 def write_time_ordered_feed(
     df: DataFrame,
@@ -126,11 +161,6 @@ def write_time_ordered_feed(
     state). Like the hash feed, all row data moves in distributed
     Spark jobs; the driver only renames and stamps file metadata.
     """
-    import time
-
-    feed = os.path.join(base, "feed")
-    staging = os.path.join(base, "staging")
-    os.makedirs(feed)
     # zero-padding width derived from the total file count, so feeds
     # beyond 1000 batches still sort (and therefore replay) in order
     width = max(3, len(str(max(n_batches + len(trailing) - 1, 0))))
@@ -145,42 +175,16 @@ def write_time_ordered_feed(
     span_us = max((hi - lo).total_seconds() * 1_000_000, 1.0)
     frac = (F.unix_micros(F.col(ts_col)) - F.unix_micros(F.lit(lo))) / F.lit(span_us)
     b = F.least(F.floor(frac * n_batches), F.lit(n_batches - 1)).cast("int")
-    (
-        df.withColumn("b", b)
-        .repartition(n_batches, "b")
-        .write.partitionBy("b")
-        .parquet(staging)
-    )
-    for i in range(n_batches):
-        part = glob.glob(os.path.join(staging, f"b={i}", "part-*.parquet"))
-        assert len(part) <= 1, part
-        if part:
-            os.rename(part[0], os.path.join(feed, f"b{i:0{width}d}.parquet"))
-        else:
-            _write_empty_batch(df, base, feed, i, width)
+    feed = _write_batches(df, b, base, n_batches, width)
     for j, extra in enumerate(trailing):
-        d = os.path.join(base, f"trailing{j}")
-        extra.coalesce(1).write.parquet(d)
         os.rename(
-            glob.glob(os.path.join(d, "part-*.parquet"))[0],
+            _single_file(extra, os.path.join(base, f"trailing{j}")),
             os.path.join(feed, f"b{n_batches + j:0{width}d}.parquet"),
         )
     t0 = time.time() - 3600
     for k, fn in enumerate(sorted(os.listdir(feed))):
         os.utime(os.path.join(feed, fn), (t0 + 10 * k, t0 + 10 * k))
     return feed
-
-
-def _write_empty_batch(
-    df: DataFrame, base: str, feed: str, i: int, width: int = 3
-) -> None:
-    empty_dir = os.path.join(base, f"empty{i}")
-    df.limit(0).coalesce(1).write.parquet(empty_dir)
-    src = glob.glob(os.path.join(empty_dir, "part-*.parquet"))[0]
-    with open(src, "rb") as fh:
-        data = fh.read()
-    with open(os.path.join(feed, f"b{i:0{width}d}.parquet"), "wb") as fh:
-        fh.write(data)
 
 
 def far_future_sentinel_batches(

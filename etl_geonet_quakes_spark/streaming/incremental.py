@@ -14,32 +14,41 @@ aggregation — which is exactly what the registered query's SQL oracle
 computes. The cross-engine hash gate therefore certifies the
 INCREMENTAL path end to end, not a weaker rows-only check.
 
-State is the versioned-dir layout ``SnapshotDiffSink`` and
-``StreamingMinHashIndex`` also use (``io.committed_versions``), plus
-epoch idempotence: state versions are keyed BY EPOCH ID
-(``e{epoch_id}`` durable parquet, ``_SUCCESS`` as the commit marker),
-the previous version is discovered from DISK (max committed epoch <
-current), and a replayed/retried micro-batch whose epoch is already
-committed is skipped — so a retry cannot double-merge and a restart
-resumes from the last complete version with no driver memory. Per-
-batch work is one partial+final hash agg over the batch plus a merge
-join keyed by the state key — the shuffle carries the vocabulary,
-never the token stream; at cluster scale the state table would be
-bucketed by key so the merge is co-located.
+State follows the engine's one state rule (``io.next_version``): each
+micro-batch writes the merged state as version ``epoch + 1``
+(``e000001``, ...; ``_SUCCESS`` as the commit marker), merged into the
+newest committed version below it, read from DISK. A replayed or
+retried micro-batch overwrites its own version from the same
+predecessor, so a retry cannot double-merge and a restart resumes from
+the last complete version with no driver memory. Per-batch work is one
+partial+final hash agg over the batch plus a merge join keyed by the
+state key — the shuffle carries the vocabulary, never the token
+stream; at cluster scale the state table would be bucketed by key so
+the merge is co-located.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_geonet_quakes_spark.io import committed_versions, load_table, version_path
+from etl_geonet_quakes_spark.io import (
+    committed_versions,
+    load_table,
+    next_version,
+    prune_versions,
+    read_versions,
+    scratch_dir,
+    write_version,
+)
 from etl_geonet_quakes_spark.llm.text import tokens
-from etl_geonet_quakes_spark.streaming.feed import write_micro_batch_feed
+from etl_geonet_quakes_spark.streaming.feed import (
+    run_foreach_batch,
+    write_micro_batch_feed,
+)
 
 _STATE_SCHEMA = "tok string, n long"
 _EPOCH = "e"
@@ -54,53 +63,35 @@ def run_versioned_merge_stream(
     partial_fn: Callable[[DataFrame], DataFrame],
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> DataFrame:
-    """Run the epoch-keyed versioned-merge loop over a file-stream
-    ``feed`` and return the final committed state.
+    """Run the versioned-merge loop over a file-stream ``feed`` and
+    return the final committed state.
 
-    Idempotence: ``per_batch`` first checks for this epoch's
-    ``_SUCCESS`` marker and skips if present (a retried micro-batch
-    merges zero times); an incomplete directory from a crashed
-    attempt is clobbered by ``mode("overwrite")``. The merge input is
-    the max committed epoch BELOW the current one, read from disk —
-    restartable by construction."""
+    Each epoch merges its partial into the predecessor
+    ``io.next_version`` names (an empty frame of ``state_schema`` for
+    the first) and writes the epoch's version; a replay rewrites that
+    version from the same predecessor. Only the new version and its
+    predecessor are kept, which is all the next epoch or a replay of
+    this one reads."""
     state_dir = os.path.join(base, "state")
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        committed = committed_versions(state_dir, _EPOCH)
-        if epoch_id in committed:
-            return  # replay/retry of a committed epoch: no-op
-        sp = batch_df.sparkSession
-        cur = partial_fn(batch_df)
-        prior = [e for e in committed if e < epoch_id]
-        if prior:
-            prev = sp.read.schema(state_schema).parquet(
-                version_path(state_dir, _EPOCH, prior[-1])
-            )
-            cur = merge_fn(prev, cur)
-        # overwrite clears a crashed attempt's partial files; the
-        # _SUCCESS marker written last IS the commit point
-        cur.write.mode("overwrite").parquet(version_path(state_dir, _EPOCH, epoch_id))
+        v, below = next_version(state_dir, _EPOCH, epoch_id)
+        prev = read_versions(
+            batch_df.sparkSession, state_dir, _EPOCH, state_schema, below[-1:]
+        )
+        write_version(merge_fn(prev, partial_fn(batch_df)), state_dir, _EPOCH, v)
+        prune_versions(state_dir, _EPOCH, below, keep=1)
 
     stream = (
         spark.readStream.schema(input_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    from etl_geonet_quakes_spark.streaming.feed import replay_partitions
-
-    with replay_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(base, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(stream, per_batch, os.path.join(base, "_checkpoint"))
     committed = committed_versions(state_dir, _EPOCH)
-    assert committed, "stream processed no batches"
-    return spark.read.schema(state_schema).parquet(
-        version_path(state_dir, _EPOCH, committed[-1])
-    )
+    if not committed:
+        raise RuntimeError(f"stream over {feed} processed no batches")
+    return read_versions(spark, state_dir, _EPOCH, state_schema, committed[-1:])
 
 
 def stream_incremental_token_counts(
@@ -112,7 +103,7 @@ def stream_incremental_token_counts(
     asc — deterministic). Oracle = the plain batch word count: equal
     BY THEOREM (count merge is associative), so the hash gate checks
     the incremental machinery, not luck."""
-    base = tempfile.mkdtemp(prefix="stream_inc_counts_")
+    base = scratch_dir("stream_inc_counts_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     feed = write_micro_batch_feed(docs, base, 3, "doc_id")
 
@@ -148,10 +139,10 @@ def stream_incremental_exact_dedup(
     associative) — q41's exact oracle applies.
 
     Per-batch work: one digest hash agg over the batch + a merge agg
-    against the touched digests; epoch-keyed versioned durable state
-    (idempotent replay, disk-based recovery), same discipline as
+    against the touched digests; state under the one state rule
+    (idempotent replay, disk-based recovery), as in
     stream_incremental_token_counts."""
-    base = tempfile.mkdtemp(prefix="stream_inc_dedup_")
+    base = scratch_dir("stream_inc_dedup_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     feed = write_micro_batch_feed(docs, base, 3, "doc_id")
     schema = "fp string, kept_doc long, n_dups long"

@@ -15,16 +15,35 @@ touching the transform or sink: foreachBatch isolates the source.
 
 from __future__ import annotations
 
+import json
+import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_geonet_quakes_spark.quakes.schema import GEONET_RESPONSE_SCHEMA
+from etl_geonet_quakes_spark.io import (
+    next_version,
+    read_versions,
+    scratch_dir,
+    write_version,
+)
+from etl_geonet_quakes_spark.quakes.schema import (
+    GEONET_RESPONSE_SCHEMA,
+    OUTPUT_FEATURE_SCHEMA,
+)
 from etl_geonet_quakes_spark.quakes.sink import SnapshotDiffSink
 from etl_geonet_quakes_spark.quakes.transform import (
     QuakeJobConfig,
     transform_quakes,
     validate_features,
 )
+from etl_geonet_quakes_spark.streaming.feed import (
+    replay_partitions,
+    run_foreach_batch,
+)
+
+_BATCH = "batch_"
 
 
 def run_quake_stream(
@@ -50,27 +69,12 @@ def run_quake_stream(
         .json(snapshot_dir)
     )
     features = stream.select(F.explode("features").alias("feature")).select("feature.*")
-
-    sink = SnapshotDiffSink(state_dir)
-    inner = sink.foreach_batch(publish_handler)
-    epochs: list[int] = []
+    publish = SnapshotDiffSink(state_dir).foreach_batch(publish_handler)
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = transform_quakes(validate_features(batch_df), config)
-        inner(out, epoch_id)
-        epochs.append(epoch_id)
+        publish(transform_quakes(validate_features(batch_df), config), epoch_id)
 
-    from etl_geonet_quakes_spark.streaming.feed import replay_partitions
-
-    with replay_partitions(spark):
-        q = (
-            features.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", f"{state_dir}/_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return epochs
+    return run_foreach_batch(features, per_batch, f"{state_dir}/_checkpoint")
 
 
 def stream_quakes_via_source(
@@ -82,8 +86,10 @@ def stream_quakes_via_source(
     """The reference's whole production loop as ONE Spark streaming
     topology: the GeoNet STREAMING data source (schedule-tick polls,
     quakes/source.py::GeoNetStreamReader) feeds micro-batches into
-    the O4–O23 transform, each batch's features land durably, and
-    the union of batch outputs is returned.
+    the O4–O23 transform, each batch's features land durably as its
+    epoch's version (``io.next_version``, so a replayed batch
+    overwrites its own rows), and the union of the committed versions
+    is returned.
 
     For the registry the fixture splits into ``n_snapshots`` DISJOINT
     snapshot files (one poll each); the transform is stateless
@@ -94,12 +100,8 @@ def stream_quakes_via_source(
     A Simple stream reader yields one poll per micro-batch, so this
     drives a fast processing-time trigger and stops once every
     snapshot tick has been consumed (the availableNow trigger would
-    stop after the first poll)."""
-    import json
-    import os
-    import tempfile
-    import time
-
+    stop after the first poll). Raises ``RuntimeError`` if fewer
+    than ``n_snapshots`` ticks were consumed within ``timeout_s``."""
     from etl_geonet_quakes_spark.quakes import source as geonet_source
 
     geonet_source.register(spark)
@@ -112,7 +114,7 @@ def stream_quakes_via_source(
     )
     with open(fixture, "r", encoding="utf-8") as fh:
         full = json.load(fh)
-    base = tempfile.mkdtemp(prefix="quake_stream_src_")
+    base = scratch_dir("quake_stream_src_")
     snapdir = os.path.join(base, "snaps")
     out_dir = os.path.join(base, "out")
     os.makedirs(snapdir)
@@ -125,12 +127,12 @@ def stream_quakes_via_source(
     done_epochs: list[int] = []
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = transform_quakes(validate_features(batch_df), config)
-        out.write.mode("append").parquet(out_dir)
+        v, _ = next_version(out_dir, _BATCH, epoch_id)
+        write_version(
+            transform_quakes(validate_features(batch_df), config), out_dir, _BATCH, v
+        )
         if batch_df.take(1):
             done_epochs.append(epoch_id)
-
-    from etl_geonet_quakes_spark.streaming.feed import replay_partitions
 
     stream = spark.readStream.format("geonet").option("path", snapdir).load()
     with replay_partitions(spark):
@@ -145,5 +147,9 @@ def stream_quakes_via_source(
             time.sleep(0.2)
         q.stop()
         q.awaitTermination()
-    assert len(done_epochs) >= n_snapshots, done_epochs
-    return spark.read.parquet(out_dir)
+    if len(done_epochs) < n_snapshots:
+        raise RuntimeError(
+            f"quake stream consumed {len(done_epochs)} of {n_snapshots} "
+            f"snapshots within {timeout_s} s"
+        )
+    return read_versions(spark, out_dir, _BATCH, OUTPUT_FEATURE_SCHEMA)

@@ -12,12 +12,28 @@ must equal the equivalent batch aggregation).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_geonet_quakes_spark.io import load_table
+from etl_geonet_quakes_spark.io import (
+    events_raw_ts_type,
+    load_table,
+    next_version,
+    normalize_events_ts,
+    read_versions,
+    scratch_dir,
+    write_version,
+)
+from etl_geonet_quakes_spark.streaming.feed import (
+    far_future_sentinel_batches,
+    replay_partitions,
+    run_foreach_batch,
+    write_micro_batch_feed,
+    write_time_ordered_feed,
+)
 
 # events.parquet has carried ts as timestamp[ns] or timestamp[us]
 # across fixture generations (see io.load_table); streaming reads
@@ -25,8 +41,6 @@ from etl_geonet_quakes_spark.io import load_table
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_geonet_quakes_spark.io import events_raw_ts_type, normalize_events_ts
-
     batch = load_table(spark, sf_dir, "events")
     # Pre-conversion physical schema differs across fixture
     # generations (ts as int64-nanos vs timestamp[us]); probe the
@@ -55,10 +69,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_to_memory(result: DataFrame, mode: str) -> str:
     """Drive a streaming DataFrame to completion into a memory sink;
     returns the (unique) table name. Starts under replay-sized state
-    partitioning (feed.replay_partitions — the round-10 audit's 3.9×
-    state-commit win); the session value is restored afterwards."""
-    from etl_geonet_quakes_spark.streaming.feed import replay_partitions
-
+    partitioning (``feed.replay_partitions``; SCALE.md, "streaming
+    replay overhead"); the session value is restored afterwards."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     with replay_partitions(result.sparkSession):
         q = (
@@ -398,14 +410,7 @@ def stream_late_data_accounting(
     restart-the-world loop cannot lose late rows — task.ts:142-143
     refetches everything; this is the price/contract of incremental
     state, made auditable.)"""
-    import os
-    import tempfile
-
-    from etl_geonet_quakes_spark.streaming.feed import write_micro_batch_feed
-
-    from etl_geonet_quakes_spark.io import load_table
-
-    base = tempfile.mkdtemp(prefix="late_data_")
+    base = scratch_dir("late_data_")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     feed_all = write_micro_batch_feed(ev, base, 2, "event_id")
     # stage the waves: run 1 sees only b0; b1 appears before run 2
@@ -415,6 +420,14 @@ def stream_late_data_accounting(
               os.path.join(live, "b0.parquet"))
 
     out_dir = os.path.join(base, "finalized")
+    schema = "w_start timestamp, n long"
+
+    def sink(batch_df, epoch_id):  # append mode: finalized windows only
+        v, _ = next_version(out_dir, "batch_", epoch_id)
+        write_version(
+            batch_df.select(F.col("w.start").alias("w_start"), "n"),
+            out_dir, "batch_", v,
+        )
 
     def run_once() -> None:
         stream = (
@@ -427,35 +440,64 @@ def stream_late_data_accounting(
             .groupBy(F.window("ts", "1 day").alias("w"))
             .agg(F.count("*").alias("n"))
         )
-
-        def sink(batch_df, epoch_id):  # append mode: finalized windows only
-            (
-                batch_df.select(
-                    F.col("w.start").alias("w_start"), "n"
-                ).write.mode("append").parquet(out_dir)
-            )
-
-        from etl_geonet_quakes_spark.streaming.feed import replay_partitions
-
-        with replay_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(sink)
-                .option("checkpointLocation", os.path.join(base, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_foreach_batch(agg, sink, os.path.join(base, "_ckpt"))
 
     run_once()
     os.rename(os.path.join(feed_all, "b1.parquet"),
               os.path.join(live, "b1.parquet"))
     run_once()
     return (
-        spark.read.schema("w_start timestamp, n long")
-        .parquet(out_dir)
+        read_versions(spark, out_dir, "batch_", schema)
         .select(F.to_date(F.col("w_start")).alias("day"), "n")
         .orderBy("day")
+    )
+
+
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, prefix: str, click_user: str, how: str
+) -> DataFrame:
+    """The q214/q215 replay: clicks joined (``how``) to the same user's
+    purchases in the following 48 hours, both sides read from one
+    time-ordered feed that ends in two far-future sentinel batches
+    routed to BOTH sides, each side watermarked 1 hour (why each
+    piece is needed: ``stream_outer_join``)."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type"
+    )
+    sentinels = far_future_sentinel_batches(
+        ev,
+        "ts",
+        row={
+            "user_id": F.lit(-1).cast("long"),
+            "event_type": F.lit("sentinel"),
+        },
+        id_col="event_id",
+    )
+    feed = write_time_ordered_feed(ev, scratch_dir(prefix), 4, "ts", trailing=sentinels)
+    schema = "event_id long, ts timestamp, user_id long, event_type string"
+
+    def side(kinds, id_alias, user_alias, ts_alias):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+            .filter(F.col("event_type").isin(*kinds))
+            .select(
+                F.col("event_id").alias(id_alias),
+                F.col("user_id").alias(user_alias),
+                F.col("ts").alias(ts_alias),
+            )
+            .withWatermark(ts_alias, "1 hour")
+        )
+
+    clicks = side(["click", "sentinel"], "click_id", click_user, "click_ts")
+    purchases = side(["purchase", "sentinel"], "purchase_id", "p_user", "purchase_ts")
+    return clicks.join(
+        purchases,
+        (F.col(click_user) == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 48 HOURS")),
+        how,
     )
 
 
@@ -492,54 +534,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     task.ts:142-143's restart-the-world refetch never needs eviction;
     this is the streaming-native equivalent, contract made auditable.
     """
-    import tempfile
-
-    from etl_geonet_quakes_spark.io import load_table
-    from etl_geonet_quakes_spark.streaming.feed import (
-        far_future_sentinel_batches,
-        write_time_ordered_feed,
-    )
-
-    base = tempfile.mkdtemp(prefix="outer_join_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    sentinels = far_future_sentinel_batches(
-        ev,
-        "ts",
-        row={
-            "user_id": F.lit(-1).cast("long"),
-            "event_type": F.lit("sentinel"),
-        },
-        id_col="event_id",
-    )
-    feed = write_time_ordered_feed(ev, base, 4, "ts", trailing=sentinels)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-
-    def side(kinds, id_alias, user_alias, ts_alias):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .filter(F.col("event_type").isin(*kinds))
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(user_alias),
-                F.col("ts").alias(ts_alias),
-            )
-            .withWatermark(ts_alias, "1 hour")
-        )
-
-    clicks = side(["click", "sentinel"], "click_id", "user_id", "click_ts")
-    purchases = side(["purchase", "sentinel"], "purchase_id", "p_user", "purchase_ts")
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 48 HOURS")),
-        "leftOuter",
-    )
+    joined = _click_purchase_join(spark, sf_dir, "outer_join_", "user_id", "leftOuter")
     out = joined.select(
         "click_id",
         "user_id",
@@ -564,65 +559,16 @@ def stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     their respective sides, so the batch FULL JOIN oracle certifies
     BOTH sides' eviction machinery at once.
 
-    Replay discipline is q214's verbatim (time-ordered feed, two
-    far-future sentinel batches routed to both sides, 1 h watermark
-    delay); the only delta is the join type and the coalesced user
+    Replay discipline is q214's, shared through
+    ``_click_purchase_join`` (time-ordered feed, two far-future
+    sentinel batches routed to both sides, 1 h watermark delay); the
+    only delta is the join type and the coalesced user
     key in the projection (a purchase-only row carries its user on
     the right side). State bounds are symmetric: each side holds 48 h
     + watermark delay, the only sustainable full-outer shape at
     100 TB/day."""
-    import tempfile
-
-    from etl_geonet_quakes_spark.io import load_table
-    from etl_geonet_quakes_spark.streaming.feed import (
-        far_future_sentinel_batches,
-        write_time_ordered_feed,
-    )
-
-    base = tempfile.mkdtemp(prefix="full_outer_join_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    sentinels = far_future_sentinel_batches(
-        ev,
-        "ts",
-        row={
-            "user_id": F.lit(-1).cast("long"),
-            "event_type": F.lit("sentinel"),
-        },
-        id_col="event_id",
-    )
-    feed = write_time_ordered_feed(ev, base, 4, "ts", trailing=sentinels)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-
-    def side(kinds, id_alias, user_alias, ts_alias):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .filter(F.col("event_type").isin(*kinds))
-            .select(
-                F.col("event_id").alias(id_alias),
-                F.col("user_id").alias(user_alias),
-                F.col("ts").alias(ts_alias),
-            )
-            .withWatermark(ts_alias, "1 hour")
-        )
-
-    clicks = side(["click", "sentinel"], "click_id", "c_user", "click_ts")
-    purchases = side(
-        ["purchase", "sentinel"], "purchase_id", "p_user", "purchase_ts"
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 48 HOURS")
-        ),
-        "fullOuter",
+    joined = _click_purchase_join(
+        spark, sf_dir, "full_outer_join_", "c_user", "fullOuter"
     )
     out = joined.select(
         "click_id",

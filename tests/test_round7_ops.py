@@ -51,10 +51,10 @@ def test_feed_sparse_keys_writes_empty_batches(spark, tmp_path):
 
 def test_incremental_state_epoch_idempotent(spark, tmp_path):
     """A replayed epoch whose state version is already committed must
-    merge ZERO times: wipe the stream checkpoint (so availableNow
-    replays epochs 0..2 against the surviving state dir) and verify
-    the final counts are unchanged — a double-merge would double
-    them."""
+    rewrite that version from the same predecessor, not merge twice:
+    wipe the stream checkpoint (so availableNow replays epochs 0..2
+    against the surviving state dir) and verify the final counts are
+    unchanged — a double-merge would double them."""
     docs = [(i, f"w{i % 4} common") for i in range(12)]
     src = spark.createDataFrame(docs, "doc_id long, text string")
     fixture = str(tmp_path / "fix")
