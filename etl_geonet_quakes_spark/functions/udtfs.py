@@ -1,7 +1,8 @@
 """Python UDTFs — the table-function surface (SURVEY §2.2 'UDF/UDAF/
 UDTF'). The reference has nothing user-pluggable (task.ts is one
 fused loop); the engine exposes all three Python extension points:
-scalar/pandas UDF (functions/jsfmt.py), grouped-agg pandas UDF
+scalar pandas UDF (llm/similarity.py::_cell_scores, the IVF cell
+scores), grouped-agg pandas UDF
 (operators/relational.py::udaf_weighted_avg), applyInPandas /
 mapInPandas (q74_grouped_zscore/q32_media_features), and these UDTFs.
 

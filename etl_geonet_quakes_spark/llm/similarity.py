@@ -444,7 +444,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     API surface: this is the engine's ``mapInArrow`` exercise — the
     lowest-level Arrow entry point (raw RecordBatch in/out, no pandas
     conversion), completing the Python-vectorization family next to
-    the scalar pandas UDF (jsfmt), grouped-agg UDAF (q11), UDTF
+    the scalar pandas UDF (``_cell_scores``), grouped-agg UDAF (q11), UDTF
     (q12), applyInPandas (q74), mapInPandas (q32) and
     applyInPandasWithState (q09). Scale shape: stateless map over the
     scan, no shuffle until the presentation sort.

@@ -40,10 +40,11 @@ def nz_tz_name(ts: Column) -> Column:
     )
 
 
-def time_ago(ts: Column, now_ms: int) -> Column:
+def time_ago(ts: Column, now_ms: Column | int) -> Column:
     """Humanized age, largest whole unit (task.ts:111-126):
     <60 min → "N minute(s) ago", <24 h → "N hour(s) ago",
-    else "N day(s) ago"; singular iff the count is exactly 1."""
+    else "N day(s) ago"; singular iff the count is exactly 1.
+    ``now_ms`` is the clock in epoch milliseconds, a Column or an int."""
     diff_min = F.floor((F.lit(now_ms) - F.unix_millis(ts)) / F.lit(60_000))
     diff_hr = F.floor(diff_min / 60)
     diff_day = F.floor(diff_hr / 24)
@@ -63,7 +64,7 @@ def time_ago(ts: Column, now_ms: int) -> Column:
     )
 
 
-def nz_local_time(ts: Column, now_ms: int) -> Column:
+def nz_local_time(ts: Column, now_ms: Column | int) -> Column:
     """"dd/MM/yyyy, HH:mm NZST (10 hours ago)" (task.ts:128-138)."""
     local = F.from_utc_timestamp(ts, NZ_ZONE)
     return F.concat(

@@ -9,11 +9,14 @@ is an embarrassingly-parallel narrow pipeline with no shuffle at all,
 which is exactly the shape you want at 100 TB.
 
 Deliberate, documented divergences-by-fix (SURVEY.md §7.4):
-- ONE injected clock. The reference reads the clock twice — a
-  run-level ``now`` (task.ts:184) and a per-row ``Date.now()`` for
-  ``stale`` (task.ts:221). The engine takes a single ``now_utc_ms``
-  job parameter, used for age filtering, "time ago" and stale alike.
-  Determinism is what makes the golden tests / oracle runs possible.
+- ONE clock. The reference reads the clock twice — a run-level
+  ``now`` (task.ts:184) and a per-row ``Date.now()`` for ``stale``
+  (task.ts:221). The engine reads one clock Column
+  (``QuakeJobConfig.clock``) for age filtering, "time ago" and stale
+  alike: the injected ``now_utc_ms`` (what makes the golden tests and
+  oracle runs deterministic), or else ``current_timestamp()``, which
+  Spark fixes once per batch query and binds to each micro-batch's
+  timestamp in a stream (restored from the offset log on replay).
 - Nulls fail loudly at the boundary (validate_features) instead of
   the reference's unchecked cast (task.ts:183).
 """
@@ -21,7 +24,6 @@ Deliberate, documented divergences-by-fix (SURVEY.md §7.4):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +45,8 @@ STALE_MS = 5 * 60 * 1000  # now + 5 min (task.ts:221)
 @dataclass(frozen=True)
 class QuakeJobConfig:
     """Job config (Env schema, task.ts:34-43) with the same defaults,
-    plus the injected clock. Validation mirrors task.ts:164-172."""
+    plus an optional injected clock. Validation mirrors
+    task.ts:164-172."""
 
     min_mmi: int = 5
     max_age_minutes: float = 10080.0
@@ -56,10 +59,11 @@ class QuakeJobConfig:
             raise ValueError("Invalid max age minutes value")
 
     @property
-    def now_ms(self) -> int:
+    def clock(self) -> Column:
+        """The tick's "now" in epoch milliseconds, as a Column."""
         if self.now_utc_ms is None:
-            return int(datetime.now(timezone.utc).timestamp() * 1000)
-        return self.now_utc_ms
+            return F.unix_millis(F.current_timestamp())
+        return F.lit(self.now_utc_ms)
 
 
 def explode_features(response_df: DataFrame) -> DataFrame:
@@ -72,30 +76,14 @@ def validate_features(features_df: DataFrame) -> DataFrame:
     (task.ts:183): rows missing required fields are rejected loudly
     rather than silently mis-typed.
 
-    IN-PASS, not a pre-flight: the check is an ``assert_true`` folded
-    into the row filter, so it evaluates inside the same scan as the
-    downstream transform — zero extra jobs (the earlier version ran a
-    ``.limit(1).count()`` probe first, a second job per run and a
-    second full scan at file-scale ingest; round-8 verdict item 6).
-    The raise therefore surfaces at ACTION time (Spark-lazy), as
-    ``SparkRuntimeException`` carrying the boundary message and the
-    offending publicID.
-
-    Evaluation-order HARDENING (round 11, carried advisor low): the
-    raise-before-null-rejecting-filter guarantee previously leaned on
-    ``CombineFilters`` emitting ``And(validation, downstream)`` with
-    inner-first short-circuit — true today, but an optimizer-version
-    detail. Now the guarantee is STRUCTURAL: the three fields that
-    downstream null-rejecting predicates consume (``mmi``,
-    ``quality``, ``time``) are rebuilt via ``withField`` as
-    raise-on-invalid expressions (valid row → original value, invalid
-    row → ``raise_error`` with the boundary message). Whatever order
-    Catalyst evaluates or fuses the predicates in, touching ANY
-    predicate on an invalid row raises before the null-comparison can
-    silently drop it; the ``assert_true`` filter stays as the raise
-    path for rows whose invalid field feeds no predicate (locality,
-    magnitude, depth, coordinates). Pinned under filter-reordering
-    stress (AQE on, codegen on AND off) in test_quakes_golden."""
+    The check is an ``assert_true`` folded into the row filter, so it
+    runs in the same scan and job as the transform and raises at action
+    time as ``SparkRuntimeException`` with the boundary message and the
+    offending publicID. The fields that downstream null-rejecting
+    predicates read (``mmi``, ``quality``, ``time``) carry the raise
+    themselves, so no filter order can drop an invalid row silently
+    (pinned under filter-reordering stress in test_quakes_golden; the
+    history is in OPTIMIZATION_quake_tick.md)."""
     required = [
         "properties.publicID",
         "properties.time",
@@ -161,11 +149,11 @@ def transform_quakes(features_df: DataFrame, config: QuakeJobConfig) -> DataFram
     Input: exploded GeoNet features (schema.GEONET_FEATURE_SCHEMA).
     Output: CoT-ready features (schema.OUTPUT_FEATURE_SCHEMA).
     """
-    now_ms = config.now_ms
+    now_ms = config.clock
     ts = _event_ts()
 
     # O6/O7 — age filter: ageMinutes = (now − eventTime)/60000 (task.ts:190-193)
-    age_minutes = (F.lit(now_ms) - F.unix_millis(ts)) / F.lit(60_000.0)
+    age_minutes = (now_ms - F.unix_millis(ts)) / F.lit(60_000.0)
     # O8 — drop 'deleted' quality; expiry-by-omission contract
     # (task.ts:195-204). JS `===` on an assumed-non-null field ≡
     # null-rejecting `!=` here; nulls were rejected at the boundary.
@@ -180,7 +168,7 @@ def transform_quakes(features_df: DataFrame, config: QuakeJobConfig) -> DataFram
     mmi = F.col("properties.mmi")
     intensity = map_lookup(MMI_INTENSITY, mmi, DEFAULT_INTENSITY)  # O14 (task.ts:225,236)
     time_local = timekit.nz_local_time(ts, now_ms)  # O17-O20 (task.ts:128-138)
-    stale = timekit.iso_utc_ms(F.timestamp_millis(F.lit(now_ms + STALE_MS)))  # O16
+    stale = timekit.iso_utc_ms(F.timestamp_millis(now_ms + F.lit(STALE_MS)))  # O16
 
     # O22 — 8-line remarks block (task.ts:233-242). js_to_fixed, not
     # format_string: Java %-formatting diverges from JS toFixed on

@@ -6,8 +6,11 @@ snapshot, transform, submit, let the platform expire omitted ids
 continuous Spark job: a file stream of FeatureCollection snapshots
 (one JSON file per poll), ``maxFilesPerTrigger=1`` so each snapshot
 is its own micro-batch (in arrival order), the batch transform
-re-used verbatim inside ``foreachBatch``, and SnapshotDiffSink
-computing upserts + expiry-by-omission per batch.
+applied once to the stream (so it is built and analyzed once, and
+each micro-batch reaches ``foreachBatch`` transformed), and
+SnapshotDiffSink computing upserts + expiry-by-omission per batch.
+With no injected clock, each tick's "now" is its micro-batch
+timestamp, which Spark restores from the offset log on replay.
 
 At production scale the file stream swaps for Kafka/Kinesis without
 touching the transform or sink: foreachBatch isolates the source.
@@ -20,7 +23,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_geonet_quakes_spark.io import (
     next_version,
@@ -35,6 +37,7 @@ from etl_geonet_quakes_spark.quakes.schema import (
 from etl_geonet_quakes_spark.quakes.sink import SnapshotDiffSink
 from etl_geonet_quakes_spark.quakes.transform import (
     QuakeJobConfig,
+    explode_features,
     transform_quakes,
     validate_features,
 )
@@ -68,13 +71,9 @@ def run_quake_stream(
         .option("maxFilesPerTrigger", 1)
         .json(snapshot_dir)
     )
-    features = stream.select(F.explode("features").alias("feature")).select("feature.*")
+    ticks = transform_quakes(validate_features(explode_features(stream)), config)
     publish = SnapshotDiffSink(state_dir).foreach_batch(publish_handler)
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        publish(transform_quakes(validate_features(batch_df), config), epoch_id)
-
-    return run_foreach_batch(features, per_batch, f"{state_dir}/_checkpoint")
+    return run_foreach_batch(ticks, publish, f"{state_dir}/_checkpoint")
 
 
 def stream_quakes_via_source(
@@ -86,10 +85,10 @@ def stream_quakes_via_source(
     """The reference's whole production loop as ONE Spark streaming
     topology: the GeoNet STREAMING data source (schedule-tick polls,
     quakes/source.py::GeoNetStreamReader) feeds micro-batches into
-    the O4–O23 transform, each batch's features land durably as its
-    epoch's version (``io.next_version``, so a replayed batch
-    overwrites its own rows), and the union of the committed versions
-    is returned.
+    the O4–O23 transform (applied once to the stream), each batch's
+    features land durably as its epoch's version
+    (``io.next_version``, so a replayed batch overwrites its own rows),
+    and the union of the committed versions is returned.
 
     For the registry the fixture splits into ``n_snapshots`` DISJOINT
     snapshot files (one poll each); the transform is stateless
@@ -100,8 +99,11 @@ def stream_quakes_via_source(
     A Simple stream reader yields one poll per micro-batch, so this
     drives a fast processing-time trigger and stops once every
     snapshot tick has been consumed (the availableNow trigger would
-    stop after the first poll). Raises ``RuntimeError`` if fewer
-    than ``n_snapshots`` ticks were consumed within ``timeout_s``."""
+    stop after the first poll). The reader's offset advances one tick
+    per poll and only while snapshots remain, so each epoch is one
+    consumed tick, whether or not the filters leave rows in it.
+    Raises ``RuntimeError`` if fewer than ``n_snapshots`` ticks were
+    consumed within ``timeout_s``."""
     from etl_geonet_quakes_spark.quakes import source as geonet_source
 
     geonet_source.register(spark)
@@ -128,16 +130,14 @@ def stream_quakes_via_source(
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         v, _ = next_version(out_dir, _BATCH, epoch_id)
-        write_version(
-            transform_quakes(validate_features(batch_df), config), out_dir, _BATCH, v
-        )
-        if batch_df.take(1):
-            done_epochs.append(epoch_id)
+        write_version(batch_df, out_dir, _BATCH, v)
+        done_epochs.append(epoch_id)
 
     stream = spark.readStream.format("geonet").option("path", snapdir).load()
+    ticks = transform_quakes(validate_features(stream), config)
     with replay_partitions(spark):
         q = (
-            stream.writeStream.foreachBatch(per_batch)
+            ticks.writeStream.foreachBatch(per_batch)
             .option("checkpointLocation", os.path.join(base, "_ckpt"))
             .trigger(processingTime="50 milliseconds")
             .start()

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import decimal
 import json
+import math
 import os
 import random
 import shutil
@@ -162,6 +163,45 @@ def test_js_to_fixed_matches_node(to_fixed_cases):
     )
     for (x, digits, got), expect in zip(to_fixed_cases, json.loads(node.stdout)):
         assert got == expect, (x, digits, got, expect)
+
+
+def test_js_to_fixed_matches_model_on_hard_cases(spark):
+    """One job over the cases the exact method has to get right: every
+    exact binary tie (odd / 2**(digits + 1)) up to 50 at digits 0-3
+    and both neighbouring doubles, 2**k ± {0.5, 1} across the 2048
+    split for k in 40-69, carries out of the low part, the 2**-11
+    edge below which every digit count rounds to zero, and doubles
+    just below 1e21."""
+    xs = []
+    for digits in range(4):
+        for odd in range(1, 2 ** (digits + 1) * 50, 2):
+            t = odd / 2 ** (digits + 1)
+            xs += [t, math.nextafter(t, 0.0), math.nextafter(t, math.inf)]
+    xs += [2.0**k + d for k in range(40, 70) for d in (-1.0, -0.5, 0.5, 1.0)]
+    xs += [2047.9995, 2047.95, 4095.9995, 0.0005, 2.0**-11, math.nextafter(2.0**-11, 0.0)]
+    x = 1e21
+    for _ in range(100):
+        x = math.nextafter(x, 0.0)
+        xs.append(x)
+    xs += [-x for x in xs]
+    rows = (
+        spark.createDataFrame(list(enumerate(xs + [None, math.nan])), "i int, v double")
+        .select("i", *[js_to_fixed(F.col("v"), d).alias(f"d{d}") for d in range(4)])
+        .collect()
+    )
+    assert len(rows) == len(xs) + 2
+    for r in rows:
+        for digits in range(4):
+            want = _to_fixed_model(xs[r["i"]], digits) if r["i"] < len(xs) else None
+            assert r[f"d{digits}"] == want, (r["i"], digits)
+
+
+def test_js_to_fixed_outside_digit_range_raises(spark):
+    # ECMA-262 prints ToString(x) there, e.g. (1e21).toFixed(1) is "1e+21"
+    for x in (math.inf, -math.inf, 1e21, -(2.0**70)):
+        df = spark.createDataFrame([(x,)], "v double")
+        with pytest.raises(Exception, match="toFixed's digit range"):
+            df.select(js_to_fixed(F.col("v"), 1)).collect()
 
 
 TWO_SESSIONS = """

@@ -263,3 +263,25 @@ def test_null_mmi_raises_under_filter_reordering_stress(
     finally:
         spark.conf.set("spark.sql.codegen.wholeStage", old_cg)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_infinite_magnitude_fails_tofixed_range(spark, tmp_path):
+    import json
+
+    with open(FIXTURE) as f:
+        data = json.load(f)
+    data["features"][0]["properties"]["magnitude"] = float("inf")
+    p = str(tmp_path / "inf_magnitude.json")
+    with open(p, "w") as f:
+        json.dump(data, f)  # writes Infinity, which Spark's JSON reader accepts
+    bad = read_geojson(spark, p, GEONET_RESPONSE_SCHEMA)
+    with pytest.raises(Exception, match="toFixed's digit range"):
+        run_pipeline(bad, KEEP_ALL).collect()
+
+
+def test_pipeline_runs_no_python_worker(spark):
+    out = run_pipeline(read_geojson(spark, FIXTURE, GEONET_RESPONSE_SCHEMA), KEEP_ALL)
+    assert len(out.collect()) == 8
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" in executed
+    assert "ArrowEvalPython" not in executed and "BatchEvalPython" not in executed
