@@ -736,8 +736,8 @@ def cluster_labels(
     dedup_keep_canonical. Propagation runs over the EDGE-INCIDENT
     nodes only (graph-sized frames per round, not corpus-sized);
     singleton documents rejoin as lbl = doc_id after convergence. The
-    node labels are localCheckpointed by the convergence count and
-    the returned corpus-complete frame is lazily checkpointed, so
+    node labels are localCheckpointed every round and the returned
+    corpus-complete frame is checkpointed too, so
     downstream consumers never replay the propagation loop.
 
     ``reuse_cached=True`` serves a previously converged result for the
@@ -799,10 +799,10 @@ def cluster_labels(
                 F.col("lbl").alias("old_lbl"),
                 F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
             )
-            # eager=False: the convergence count below is the action
-            # that materializes the checkpoint, so each round runs ONE
-            # job instead of two (checkpoint job + count job) —
-            # measured ~0.5 s over the loop at sf0.1, identical result
+            # eager=False does not defer the work here: under AQE the
+            # call itself runs the round's shuffle stages (6 jobs at
+            # sf0.01) and the convergence count below runs 2 more, so
+            # a round costs 8 jobs
             .localCheckpoint(eager=False)
         )
         # fixpoint = zero labels changed this round. A changed-row
@@ -825,8 +825,9 @@ def cluster_labels(
     # Reattach the singleton documents (lbl = doc_id). The node-label
     # side is converged and checkpointed (graph-sized, broadcastable),
     # so each consumer pays one corpus scan + a broadcast-shaped join
-    # — never the propagation loop. Lazy checkpoint: the first action
-    # materializes it, later consumers (q93's cache hit) read blocks.
+    # — never the propagation loop. Under AQE this eager=False
+    # checkpoint still runs 3 jobs at build time (sf0.01); later
+    # consumers (q93's cache hit) read its blocks.
     full = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")

@@ -22,17 +22,21 @@ NZ_ZONE = "Pacific/Auckland"
 ISO_MS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"  # JS Date.toISOString shape
 
 
-def utc_offset_seconds(ts: Column, zone: str = NZ_ZONE) -> Column:
-    """UTC offset (seconds) of ``zone`` at instant ``ts`` via the JVM
-    tzdb — DST-correct for the *event* instant, independent of the
+def utc_offset_seconds(ts: Column, local: Column) -> Column:
+    """UTC offset (seconds) at instant ``ts`` of the zone that
+    ``local = from_utc_timestamp(ts, zone)`` shifted it into, via the
+    JVM tzdb — DST-correct for the *event* instant, independent of the
     session timezone (task.ts:101-105)."""
-    return F.unix_timestamp(F.from_utc_timestamp(ts, zone)) - F.unix_timestamp(ts)
+    return F.unix_timestamp(local) - F.unix_timestamp(ts)
 
 
-def nz_tz_name(ts: Column) -> Column:
+def nz_tz_name(ts: Column, local: Column | None = None) -> Column:
     """'NZST' | 'NZDT' for the event instant; 'NZT' fallback mirrors
-    the reference's defensive default (task.ts:104)."""
-    off = utc_offset_seconds(ts)
+    the reference's defensive default (task.ts:104). ``local`` is
+    ``from_utc_timestamp(ts, NZ_ZONE)`` when the caller has it bound."""
+    if local is None:
+        local = F.from_utc_timestamp(ts, NZ_ZONE)
+    off = utc_offset_seconds(ts, local)
     return (
         F.when(off == 12 * 3600, F.lit("NZST"))
         .when(off == 13 * 3600, F.lit("NZDT"))
@@ -64,15 +68,16 @@ def time_ago(ts: Column, now_ms: Column | int) -> Column:
     )
 
 
-def nz_local_time(ts: Column, now_ms: Column | int) -> Column:
-    """"dd/MM/yyyy, HH:mm NZST (10 hours ago)" (task.ts:128-138)."""
-    local = F.from_utc_timestamp(ts, NZ_ZONE)
+def nz_local_time(ts: Column, now_ms: Column | int, local: Column) -> Column:
+    """"dd/MM/yyyy, HH:mm NZST (10 hours ago)" (task.ts:128-138).
+    ``local`` is ``from_utc_timestamp(ts, NZ_ZONE)``; it is read three
+    times, so the caller binds it once as a column."""
     return F.concat(
         F.date_format(local, "dd/MM/yyyy"),
         F.lit(", "),
         F.date_format(local, "HH:mm"),
         F.lit(" "),
-        nz_tz_name(ts),
+        nz_tz_name(ts, local),
         F.lit(" ("),
         time_ago(ts, now_ms),
         F.lit(")"),

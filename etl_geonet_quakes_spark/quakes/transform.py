@@ -73,17 +73,19 @@ def explode_features(response_df: DataFrame) -> DataFrame:
 
 def validate_features(features_df: DataFrame) -> DataFrame:
     """Boundary validation replacing the reference's blind cast
-    (task.ts:183): rows missing required fields are rejected loudly
-    rather than silently mis-typed.
+    (task.ts:183): a row missing a required field fails the action
+    with ``SparkRuntimeException``, the boundary message and the
+    offending publicID, instead of being silently mis-typed.
 
-    The check is an ``assert_true`` folded into the row filter, so it
-    runs in the same scan and job as the transform and raises at action
-    time as ``SparkRuntimeException`` with the boundary message and the
-    offending publicID. The fields that downstream null-rejecting
-    predicates read (``mmi``, ``quality``, ``time``) carry the raise
-    themselves, so no filter order can drop an invalid row silently
-    (pinned under filter-reordering stress in test_quakes_golden; the
-    history is in OPTIMIZATION_quake_tick.md)."""
+    The check runs once per row as the input of a Generate,
+    ``inline(array(when(bad, raise_error(msg)).otherwise(struct(*cols))))``,
+    in the same scan and job as the transform. Every column downstream
+    is the Generate's output, and Catalyst never pushes a predicate on
+    a Generate's output below it, so no filter order can drop an
+    invalid row before the check raises (pinned under
+    filter-reordering stress in test_quakes_golden). The null test
+    appears in the plan once; the history is in
+    OPTIMIZATION_quake_tick.md."""
     required = [
         "properties.publicID",
         "properties.time",
@@ -98,59 +100,47 @@ def validate_features(features_df: DataFrame) -> DataFrame:
         "properties.mmi",
         "geometry.coordinates",
     ]
-    cond = None
-    for c in required:
-        this = F.col(c).isNull()
-        cond = this if cond is None else (cond | this)
     # geometry must carry at least [lon, lat]: the projection indexes
     # coordinates[0]/[1], which under ANSI semantics would throw a
-    # confusing runtime error instead of this boundary rejection
-    cond = cond | (F.size("geometry.coordinates") < 2)
-    # assert_true returns NULL for every surviving row (so the filter
-    # keeps all of them) and throws mid-scan on the first invalid one.
-    # `cond` is never NULL: each isNull() disjunct is two-valued, and
+    # confusing runtime error instead of this boundary rejection.
+    # `bad` is never NULL: each isNull() disjunct is two-valued, and
     # the size() term can only be NULL when coordinates is NULL — a
     # case the isNull() disjunct has already made TRUE.
+    bad = F.size("geometry.coordinates") < 2
+    for c in required:
+        bad = bad | F.col(c).isNull()
     msg = F.concat(
         F.lit("GeoNet feature failed boundary validation: null required field (publicID="),
         F.coalesce(F.col("properties.publicID"), F.lit("<null>")),
         F.lit(")"),
     )
-    # structural ordering guarantee: the predicate-feeding fields
-    # carry the raise themselves (see docstring). Types are taken
-    # from the input schema so the when-branches stay exact.
-    props_t = features_df.schema["properties"].dataType
-
-    def _guarded(field: str) -> Column:
-        dt = props_t[field].dataType.simpleString()
-        return F.when(~cond, F.col(f"properties.{field}")).otherwise(
-            F.raise_error(msg).cast(dt)
-        )
-
-    hardened = features_df.withColumn(
-        "properties",
-        F.col("properties")
-        .withField("mmi", _guarded("mmi"))
-        .withField("quality", _guarded("quality"))
-        .withField("time", _guarded("time")),
-    )
-    return hardened.filter(F.assert_true(~cond, msg).isNull())
-
-
-def _event_ts() -> Column:
-    # Wire format is ISO-8601 with millis + 'Z' (task.ts:68); session
-    # tz is UTC so to_timestamp parses the instant exactly.
-    return F.to_timestamp(F.col("properties.time"))
+    row = F.when(bad, F.raise_error(msg)).otherwise(F.struct(*features_df.columns))
+    return features_df.select(F.inline(F.array(row)))
 
 
 def transform_quakes(features_df: DataFrame, config: QuakeJobConfig) -> DataFrame:
-    """O4–O23 as one filter+projection (task.ts:187-249).
+    """O4–O23 as one filter and a few stacked projections
+    (task.ts:187-249).
 
     Input: exploded GeoNet features (schema.GEONET_FEATURE_SCHEMA).
     Output: CoT-ready features (schema.OUTPUT_FEATURE_SCHEMA).
+
+    Catalyst has no let-binding: every reference to a shared Column
+    copies its whole expression. Each value read more than once (the
+    event timestamp, the clock, the NZ-local timestamp, ``intensity``,
+    ``time_local``) is therefore bound once as a named column of a
+    lower projection; ``CollapseProject`` keeps a non-cheap alias that
+    is referenced more than once, so the binding survives optimization.
     """
-    now_ms = config.clock
-    ts = _event_ts()
+    # Wire format is ISO-8601 with millis + 'Z' (task.ts:68); session
+    # tz is UTC so to_timestamp parses the instant exactly.
+    bound = features_df.select(
+        "properties",
+        "geometry",
+        F.to_timestamp("properties.time").alias("_ts"),
+        config.clock.alias("_now"),
+    )
+    ts, now_ms, mmi = F.col("_ts"), F.col("_now"), F.col("properties.mmi")
 
     # O6/O7 — age filter: ageMinutes = (now − eventTime)/60000 (task.ts:190-193)
     age_minutes = (now_ms - F.unix_millis(ts)) / F.lit(60_000.0)
@@ -159,15 +149,22 @@ def transform_quakes(features_df: DataFrame, config: QuakeJobConfig) -> DataFram
     # null-rejecting `!=` here; nulls were rejected at the boundary.
     # O9 — MMI threshold: pushed down at the REST source (task.ts:176);
     # re-applied here so fixture replay and live runs are identical.
-    filtered = features_df.filter(
+    kept = bound.filter(
         (age_minutes <= F.lit(float(config.max_age_minutes)))
         & (F.col("properties.quality") != "deleted")
-        & (F.col("properties.mmi") >= F.lit(config.min_mmi))
+        & (mmi >= F.lit(config.min_mmi))
+    ).withColumns(
+        {
+            "_local": F.from_utc_timestamp(ts, timekit.NZ_ZONE),
+            # O14 (task.ts:225,236)
+            "_intensity": map_lookup(MMI_INTENSITY, mmi, DEFAULT_INTENSITY),
+        }
     )
-
-    mmi = F.col("properties.mmi")
-    intensity = map_lookup(MMI_INTENSITY, mmi, DEFAULT_INTENSITY)  # O14 (task.ts:225,236)
-    time_local = timekit.nz_local_time(ts, now_ms)  # O17-O20 (task.ts:128-138)
+    # O17-O20 (task.ts:128-138)
+    rows = kept.withColumn(
+        "_time_local", timekit.nz_local_time(ts, now_ms, F.col("_local"))
+    )
+    intensity, time_local = F.col("_intensity"), F.col("_time_local")
     stale = timekit.iso_utc_ms(F.timestamp_millis(now_ms + F.lit(STALE_MS)))  # O16
 
     # O22 — 8-line remarks block (task.ts:233-242). js_to_fixed, not
@@ -185,7 +182,7 @@ def transform_quakes(features_df: DataFrame, config: QuakeJobConfig) -> DataFram
         F.concat(F.lit("Information Quality: "), F.col("properties.quality")),
     )
 
-    return filtered.select(
+    return rows.select(
         # O10 — stable upsert key (task.ts:213)
         F.concat(F.lit("earthquake-"), F.col("properties.publicID")).alias("id"),
         F.lit("Feature").alias("type"),

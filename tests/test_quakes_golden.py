@@ -285,3 +285,48 @@ def test_pipeline_runs_no_python_worker(spark):
     executed = out._jdf.queryExecution().executedPlan().toString()
     assert "Generate" in executed
     assert "ArrowEvalPython" not in executed and "BatchEvalPython" not in executed
+
+
+def test_pipeline_plan_checks_once_and_compiles(spark):
+    """The boundary check is in the optimized plan once (one Generate
+    input, not inlined into guards and pushed predicates), and no
+    generated method reaches HotSpot's 8,000-byte huge-method limit,
+    above which the JIT never compiles it."""
+    out = run_pipeline(read_geojson(spark, FIXTURE, GEONET_RESPONSE_SCHEMA), KEEP_ALL)
+    qe = out._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("failed boundary validation") == 1
+    seq = qe.debug().codegenToSeq()
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+    assert sizes and max(sizes) < 8000, sizes
+
+
+@pytest.mark.parametrize("codegen", ["true", "false"])
+def test_flat_feature_frame_validates_under_threshold(spark, codegen):
+    """q187's input shape: flat GEONET_FEATURE_SCHEMA rows from the
+    Python data source, with no explode above them. A null mmi under
+    a restrictive min_mmi raises instead of being filtered out; a
+    valid frame passes validation unchanged."""
+    import json
+
+    from etl_geonet_quakes_spark.quakes.schema import GEONET_FEATURE_SCHEMA
+    from etl_geonet_quakes_spark.quakes.source import _parse_features
+    from etl_geonet_quakes_spark.quakes.transform import validate_features
+
+    with open(FIXTURE) as f:
+        data = json.load(f)
+    good = spark.createDataFrame(list(_parse_features(data)), GEONET_FEATURE_SCHEMA)
+    data["features"][0]["properties"]["mmi"] = None
+    bad = spark.createDataFrame(list(_parse_features(data)), GEONET_FEATURE_SCHEMA)
+    strict = QuakeJobConfig(min_mmi=5, max_age_minutes=1e12, now_utc_ms=NOW_MS)
+    old_cg = spark.conf.get("spark.sql.codegen.wholeStage")
+    try:
+        spark.conf.set("spark.sql.codegen.wholeStage", codegen)
+        with pytest.raises(Exception, match="boundary validation"):
+            transform_quakes(validate_features(bad), strict).collect()
+        assert validate_features(good).collect() == good.collect()
+        resp = read_geojson(spark, FIXTURE, GEONET_RESPONSE_SCHEMA)
+        expected = sorted(run_pipeline(resp, strict).collect())
+        got = sorted(transform_quakes(validate_features(good), strict).collect())
+        assert got == expected and len(got) == 5
+    finally:
+        spark.conf.set("spark.sql.codegen.wholeStage", old_cg)

@@ -39,7 +39,7 @@ EAGER = {
     "q40_dedup_ngram_jaccard": "bounded vocab probe runs at build time",
     "q38_dedup_minhash_lsh": "",
 # round 9: q02/q03's boundary-validation pre-flight count was folded
-# into the main pass (in-scan assert_true) — no eager note anymore.
+# into the main pass (an in-scan check) — no eager note anymore.
     "q350_harmonic_closeness": (
         "pair cache builds at first use; per-pivot BFS loop is lazy "
         "(plan is the final round)"
