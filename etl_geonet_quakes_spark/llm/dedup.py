@@ -437,6 +437,22 @@ def band_buckets(
     )
 
 
+def _band_pairs(buckets: DataFrame) -> DataFrame:
+    """q38's candidate stage: the self-EQUI-join of (doc_id, band,
+    bucket) rows on (band, bucket), one (doc_a < doc_b) row per shared
+    band — not yet deduplicated."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+    )
+
+
 def dedup_minhash_lsh(
     spark: SparkSession,
     sf_dir: str,
@@ -496,21 +512,10 @@ def dedup_minhash_lsh(
     # multiplies shuffle bytes by |bands| on both join sides; at 100 TB
     # that dominates the whole job. Arrays are re-attached afterwards,
     # for the (by-construction rare) candidate pairs only.
-    # r14 session 2 (guide §2.4 duplicated subtrees, §8 "materialize
-    # the proxy"): the bucket table is the LIGHTWEIGHT proxy (doc_id,
-    # band, bucket — ~24 B/doc/band) for the heavyweight signature
-    # computation (full text scan + 24 xxhash sweeps + banding).
-    # Without materialization the physical plan instantiates the
-    # full-corpus signature subtree once PER REFERENCE: both sides of
-    # the bucket self-join, and again inside each consumer of the
-    # candidate set (verified in plans/r14/q38_dedup_minhash_lsh_
-    # before.txt: four complete scan→shingle→minhash→band chains; the
-    # old in-code claim that ReuseExchange recovers the duplication
-    # only holds for the sort-merge shape, not the broadcast plan AQE
-    # actually picks at bench scale). One localCheckpoint collapses
-    # every copy; at cluster scale materializing the proxy is strictly
-    # cheaper than re-running the signature pass (guide §8's rule:
-    # decide with small rows, compute the heavy bytes once).
+    # The bucket table is the lightweight proxy (~24 B/doc/band) of the
+    # full-corpus signature pass, materialized so that pass runs once:
+    # unmaterialized, the plan repeats it for every reference to the
+    # buckets (OPTIMIZATION_r14.md).
     buckets = band_buckets(
         spread_single_split_scan(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -534,29 +539,16 @@ def dedup_minhash_lsh(
             (F.col("bn") <= saturated_bucket_cap) | (F.col("doc_id") == F.col("rep"))
         ).select("doc_id", "band", "bucket")
 
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    pair_cands = a.join(
-        b_,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-    )
+    pair_cands = _band_pairs(buckets)
     if star is not None:
         pair_cands = pair_cands.unionByName(star)
     cand_ids = (
         pair_cands.dropDuplicates(["doc_a", "doc_b"])
         # cand_ids feeds TWO consumers below (the broadcast id-probe
         # into documents and the final pair join); bounded by the
-        # candidate count, so the checkpoint is cheap at any scale.
-        # r14 session 2: with `buckets` now materialized the old
-        # "ReuseExchange shares it" note no longer applies (the
-        # broadcast-shaped plan never shared the dedup exchange), so
-        # materialize explicitly — the candidate join + dedup run
-        # once instead of once per consumer.
+        # candidate count, so the checkpoint is cheap at any scale and
+        # the candidate join + dedup run once instead of once per
+        # consumer (OPTIMIZATION_r14.md).
         .localCheckpoint()
     )
     # verify tier: re-shingle ONLY the candidate docs (a second tiny
@@ -576,8 +568,7 @@ def dedup_minhash_lsh(
     )
     # materialized before the broadcast: the table is referenced for
     # both pair sides, and each broadcast build would otherwise re-run
-    # the documents probe + shingling (r14 session 2, same rationale
-    # as `buckets` above; bounded by the candidate count)
+    # the documents probe + shingling (bounded by the candidate count)
     toks_small = F.broadcast(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -652,33 +643,20 @@ def _simhash_fingerprints(
     return counts.select("doc_id", sim.alias("sim"))
 
 
-def dedup_simhash(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3
-) -> DataFrame:
-    """SimHash near-dup pairs with Hamming distance ≤ k.
-
-    Pigeonhole blocking: split the 60-bit fingerprint into 4×15-bit
-    chunks; any pair within distance 3 matches on ≥1 chunk, so
-    candidates come from an equi-join on (chunk_idx, chunk_value) —
-    same shuffle-not-crossjoin shape as MinHash-LSH. Unlike LSH the
-    guarantee is EXACT (pigeonhole, not probability): the result is
-    the complete set of pairs at distance ≤ 3, which is why the DuckDB
-    all-pairs oracle in queries.py can hash-match it.
-
-    Features are distinct 3-word string shingles hashed with
-    md5_feature_hash — engine-independent, see that docstring."""
-    sh_rows = spread_single_split_scan(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", F.explode(shingles_str(F.col("text"))).alias("s"))
+def _simhash_document_fingerprints(docs: DataFrame) -> DataFrame:
+    """q39's front: (doc_id, text) → distinct string 3-shingles → md5
+    feature hashes → (doc_id, sim) fingerprints."""
+    sh_rows = docs.select(
+        "doc_id", F.explode(shingles_str(F.col("text"))).alias("s")
+    )
     hashed = sh_rows.select("doc_id", md5_feature_hash(F.col("s")).alias("h"))
-    # materialize the fingerprints BEFORE the self-join: the join keys
-    # are (chunk_idx, chunk_value), so the two sides do NOT share an
-    # exchange (verified in the physical plan — two independent
-    # fingerprint aggregation subtrees), and without this the md5 pass
-    # over every shingle (the dominant cost) runs twice. One (doc_id,
-    # sim) row per document — tiny to checkpoint at any scale.
-    fp = _simhash_fingerprints(hashed).select("doc_id", "sim").localCheckpoint()
+    return _simhash_fingerprints(hashed).select("doc_id", "sim")
 
+
+def _chunk_pairs(fp: DataFrame) -> DataFrame:
+    """q39's pigeonhole candidate stage: the (chunk_idx, chunk_value)
+    equi-join of 4×15-bit fingerprint chunks, one (doc_a < doc_b,
+    hamming) row per matching chunk, before the Hamming ≤ k filter."""
     chunks = fp.select(
         "doc_id",
         "sim",
@@ -698,18 +676,46 @@ def dedup_simhash(
     a = chunks.alias("a")
     b = chunks.alias("b")
     hamming = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim")))
+    return a.join(
+        b,
+        (F.col("a.ci") == F.col("b.ci"))
+        & (F.col("a.cv") == F.col("b.cv"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        hamming.alias("hamming"),
+    )
+
+
+def dedup_simhash(
+    spark: SparkSession, sf_dir: str, max_hamming: int = 3
+) -> DataFrame:
+    """SimHash near-dup pairs with Hamming distance ≤ k.
+
+    Pigeonhole blocking: split the 60-bit fingerprint into 4×15-bit
+    chunks; any pair within distance 3 matches on ≥1 chunk, so
+    candidates come from an equi-join on (chunk_idx, chunk_value) —
+    same shuffle-not-crossjoin shape as MinHash-LSH. Unlike LSH the
+    guarantee is EXACT (pigeonhole, not probability): the result is
+    the complete set of pairs at distance ≤ 3, which is why the DuckDB
+    all-pairs oracle in queries.py can hash-match it.
+
+    Features are distinct 3-word string shingles hashed with
+    md5_feature_hash — engine-independent, see that docstring."""
+    # materialize the fingerprints BEFORE the self-join: the join keys
+    # are (chunk_idx, chunk_value), so the two sides do NOT share an
+    # exchange (verified in the physical plan — two independent
+    # fingerprint aggregation subtrees), and without this the md5 pass
+    # over every shingle (the dominant cost) runs twice. One (doc_id,
+    # sim) row per document — tiny to checkpoint at any scale.
+    fp = _simhash_document_fingerprints(
+        spread_single_split_scan(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        )
+    ).localCheckpoint()
     return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
+        _chunk_pairs(fp)
         # r14 (guide §2.3 "project/filter before the exchange"): the
         # hamming bound is applied BEFORE the (doc_a, doc_b) dedup
         # shuffle — hamming is a pure function of the two fingerprints,
@@ -1004,6 +1010,19 @@ def oriented_dedup_edges(
     )
 
 
+def _oriented_wedges(o: DataFrame) -> DataFrame:
+    """q115's wedge join: pairs of oriented out-edges e1, e2 sharing a
+    source with e1.dst ≺ e2.dst, Σ_v C(outdeg(v), 2) rows."""
+    e1, e2 = o.alias("e1"), o.alias("e2")
+    # e1.dst ≺ e2.dst in the orientation's (deg, id) total order: the
+    # closing edge of wedge (src; y, z) is then exactly y→z
+    dst_lt = (F.col("e1.deg_dst") < F.col("e2.deg_dst")) | (
+        (F.col("e1.deg_dst") == F.col("e2.deg_dst"))
+        & (F.col("e1.dst") < F.col("e2.dst"))
+    )
+    return e1.join(e2, (F.col("e1.src") == F.col("e2.src")) & dst_lt)
+
+
 def graph_triangles(
     spark: SparkSession, sf_dir: str, threshold: float = 0.8
 ) -> DataFrame:
@@ -1029,15 +1048,9 @@ def graph_triangles(
     (renamed honestly — it can exceed 1 on dense graphs and is NOT a
     clustering coefficient; round-4 advisor item)."""
     o = oriented_dedup_edges(spark, sf_dir, threshold).localCheckpoint()
-    e1, e2, e3 = o.alias("e1"), o.alias("e2"), o.alias("e3")
-    # e1.dst ≺ e2.dst in the orientation's (deg, id) total order: the
-    # closing edge of wedge (src; y, z) is then exactly y→z
-    dst_lt = (F.col("e1.deg_dst") < F.col("e2.deg_dst")) | (
-        (F.col("e1.deg_dst") == F.col("e2.deg_dst"))
-        & (F.col("e1.dst") < F.col("e2.dst"))
-    )
+    e3 = o.alias("e3")
     tri = (
-        e1.join(e2, (F.col("e1.src") == F.col("e2.src")) & dst_lt)
+        _oriented_wedges(o)
         .join(
             e3,
             (F.col("e3.src") == F.col("e1.dst"))
@@ -2592,21 +2605,21 @@ def feature_hashing_audit(
 
 
 def graph_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
-    """Deterministic join/shuffle-volume metrics of the near-dup graph
-    suite — the quantities whose growth decides whether the graph
-    family's 100× claims hold (round-8 verdict item 4; the q38/q180
-    candidate-count precedent, tools/scale_curve.py):
+    """Join/shuffle volumes of the near-dup graph suite, read from the
+    operators' own output and stages — the quantities whose growth
+    decides whether the graph family's 100× claims hold:
 
     - ``n_pairs`` / ``n_vertices`` — pair-graph size; every consumer's
-      base edge volume.
+      base edge volume (q115's ``n_edges`` / ``n_vertices``).
     - ``pagerank_round_rows`` — rows entering q122's per-round dst-sum
       (= directed edges = 2·n_pairs, constant across rounds).
-    - ``tri_wedge_rows`` — q115's oriented wedge-join output,
+    - ``tri_wedge_rows`` — rows of q115's oriented wedge join,
       Σ_v C(outdeg(v), 2) under the (deg, id) orientation; the
       Chiba–Nishizeki bound says this stays ≤ O(E^1.5).
-    - ``linkpred_wedge_rows`` — q285/q201's UN-oriented middle-vertex
-      wedge volume, Σ_w C(deg(w), 2); the hub hazard the deg-cap
-      relief valve would bound at corpus scale.
+    - ``linkpred_wedge_rows`` — the UN-oriented middle-vertex wedge
+      volume Σ_w C(deg(w), 2) (q115's ``n_wedges``) that q285/q201's
+      joins pay; the hub hazard the deg-cap relief valve would bound
+      at corpus scale.
     - ``labelprop_labeled_r1/r2`` — q222's per-round frontier growth
       (vertices labeled in round r).
     - ``kcore_removed_r1..r4`` — q244's peel-round histogram; the
@@ -2614,23 +2627,8 @@ def graph_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
 
     Every value is a bounded aggregate (counts / ≤rounds-row
     histograms); nothing here collects data rows."""
-    pairs = dedup_pairs_cached(spark, sf_dir)
-    n_pairs = pairs.count()
-    sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count("*").alias("d"))
-    n_vertices = deg.count()
-    lp_wedges = deg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("w")
-    ).collect()[0]["w"]
-    tri_wedges = (
-        oriented_dedup_edges(spark, sf_dir)
-        .groupBy("src")
-        .agg(F.count("*").alias("d"))
-        .agg(F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("w"))
-        .collect()[0]["w"]
-    )
+    tri = graph_triangles(spark, sf_dir).first()
+    wedges = _oriented_wedges(oriented_dedup_edges(spark, sf_dir))
     lp_hist = {
         int(r["labeled_round"]): r["n"]
         for r in label_propagation(spark, sf_dir)
@@ -2648,11 +2646,11 @@ def graph_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
         .collect()
     }
     return {
-        "n_pairs": n_pairs,
-        "n_vertices": n_vertices,
-        "pagerank_round_rows": 2 * n_pairs,
-        "tri_wedge_rows": int(tri_wedges or 0),
-        "linkpred_wedge_rows": int(lp_wedges or 0),
+        "n_pairs": tri["n_edges"],
+        "n_vertices": tri["n_vertices"],
+        "pagerank_round_rows": 2 * tri["n_edges"],
+        "tri_wedge_rows": wedges.count(),
+        "linkpred_wedge_rows": tri["n_wedges"],
         "labelprop_labeled_r1": lp_hist.get(1, 0),
         "labelprop_labeled_r2": lp_hist.get(2, 0),
         "kcore_removed_r1": kc_hist.get(1, 0),
@@ -2663,14 +2661,11 @@ def graph_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def lsh_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
-    """Candidate-volume instrumentation for the two hash-blocked
-    near-dup generators (round-10 verdict item 6 — pinned growth
-    curves for the heavy candidate generators, the q180/q88 lesson
-    made regression-proof):
+    """Candidate volumes of the two hash-blocked near-dup generators,
+    counted on the operators' own candidate stages:
 
     - ``minhash_candidates`` — q38's distinct band-bucket pairs (a<b)
-      before the exact-Jaccard verify tier (the tools/scale_curve.py
-      measurement, now first-class),
+      before the exact-Jaccard verify tier,
     - ``simhash_candidates`` — q39's distinct chunk-match pairs (a<b)
       before the Hamming ≤ k verify: the pigeonhole equi-join's
       output volume, Σ over (chunk_idx, value) buckets of C(|b|, 2).
@@ -2679,54 +2674,12 @@ def lsh_volume_metrics(spark: SparkSession, sf_dir: str) -> dict:
     banded/blocked join is scale-safe iff candidates track true-pair
     structure, not corpus²."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    b = band_buckets(docs)
-    a, bb = b.alias("a"), b.alias("b")
-    minhash_candidates = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
-    hashed = docs.select(
-        "doc_id", F.explode(shingles_str(F.col("text"))).alias("s")
-    ).select("doc_id", md5_feature_hash(F.col("s")).alias("h"))
-    fp = _simhash_fingerprints(hashed).select("doc_id", "sim")
-    chunks = fp.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright("sim", 15 * i)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("cv"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "c.ci", "c.cv")
-    ca, cb = chunks.alias("a"), chunks.alias("b")
-    simhash_candidates = (
-        ca.join(
-            cb,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
     return {
-        "minhash_candidates": minhash_candidates,
-        "simhash_candidates": simhash_candidates,
+        "minhash_candidates": _band_pairs(band_buckets(docs)).distinct().count(),
+        "simhash_candidates": _chunk_pairs(_simhash_document_fingerprints(docs))
+        .select("doc_a", "doc_b")
+        .distinct()
+        .count(),
     }
 
 

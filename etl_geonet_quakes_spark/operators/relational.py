@@ -1300,6 +1300,30 @@ def regexp_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
+def _length_gated_name_pairs(names: DataFrame, max_dist: int) -> DataFrame:
+    """q88's distinct-tier join: ORDERED name pairs (name_a, name_b),
+    reflexive ones included, inside the lossless |Δlen| ≤ k gate."""
+    na, nb = names.alias("na"), names.alias("nb")
+    return na.join(
+        nb,
+        F.abs(F.length(F.col("na.p_name")) - F.length(F.col("nb.p_name")))
+        <= max_dist,
+    ).select(
+        F.col("na.p_name").alias("name_a"),
+        F.col("nb.p_name").alias("name_b"),
+    )
+
+
+def _qualifying_name_pairs(names: DataFrame, max_dist: int) -> DataFrame:
+    """The gated pairs that pass the Levenshtein kernel: q88's
+    broadcast table (name_a, name_b, edit_dist)."""
+    return (
+        _length_gated_name_pairs(names, max_dist)
+        .withColumn("edit_dist", F.levenshtein("name_a", "name_b").cast("long"))
+        .filter(F.col("edit_dist") <= max_dist)
+    )
+
+
 def string_distance_pairs(spark: SparkSession, sf_dir: str, max_dist: int = 4) -> DataFrame:
     """Edit-distance near-matches (fuzzy string dedup building block):
     part-name pairs within the same brand with Levenshtein ≤ k.
@@ -1340,21 +1364,7 @@ def string_distance_pairs(spark: SparkSession, sf_dir: str, max_dist: int = 4) -
     hatch. Distinct-tier and expansion volumes are pinned at two SFs
     in tests/test_scale_curve.py (string_distance_volume_metrics)."""
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
-    names = p.select("p_name").distinct()
-    na, nb = names.alias("na"), names.alias("nb")
-    dpairs = (
-        na.join(
-            nb,
-            F.abs(F.length(F.col("na.p_name")) - F.length(F.col("nb.p_name")))
-            <= max_dist,
-        )
-        .select(
-            F.col("na.p_name").alias("name_a"),
-            F.col("nb.p_name").alias("name_b"),
-        )
-        .withColumn("edit_dist", F.levenshtein("name_a", "name_b").cast("long"))
-        .filter(F.col("edit_dist") <= max_dist)
-    )
+    dpairs = _qualifying_name_pairs(p.select("p_name").distinct(), max_dist)
     a, b = p.alias("a"), p.alias("b")
     expanded = a.join(F.broadcast(dpairs), F.col("a.p_name") == F.col("name_a"))
     return (
@@ -1375,45 +1385,27 @@ def string_distance_pairs(spark: SparkSession, sf_dir: str, max_dist: int = 4) -
 
 def string_distance_volume_metrics(spark: SparkSession, sf_dir: str,
                                    max_dist: int = 4) -> dict:
-    """Scale-curve instrumentation for string_distance_pairs (the
-    round-9 `weak`, fixed round 10): the volumes that decide whether
-    the dedup-then-expand plan holds at 100×. Returns exact counts —
-    pinned at two SFs in tests/test_scale_curve.py:
+    """Scale-curve volumes of string_distance_pairs (q88), counted on
+    the operator's own stages and pinned in tests/test_scale_curve.py:
 
-    - n_rows: corpus rows (what the OLD plan's candidates grew as
-      (n_rows/25)² over),
+    - n_rows: corpus rows (what a brand-blocked self-join's
+      candidates would grow as (n_rows/25)² over),
     - n_distinct: |D|, the only input to the super-linear stage,
     - distinct_lev_pairs: unordered distinct-name pairs inside the
-      |Δlen| ≤ k gate = levenshtein evaluations actually paid,
+      |Δlen| ≤ k gate = levenshtein evaluations actually paid (the
+      ordered gate minus its |D| reflexive pairs, halved),
     - qualifying_ordered_pairs: broadcast table size (incl. reflexive),
     - output_pairs: final result rows — the Θ(output) floor the
       expansion stage is proportional to."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
+    p = load_table(spark, sf_dir, "part")
     names = p.select("p_name").distinct()
-    n_rows = p.count()
     n_distinct = names.count()
-    na, nb = names.alias("na"), names.alias("nb")
-    gated = na.join(
-        nb,
-        (
-            F.abs(F.length(F.col("na.p_name")) - F.length(F.col("nb.p_name")))
-            <= max_dist
-        )
-        & (F.col("na.p_name") < F.col("nb.p_name")),
-    )
-    distinct_lev_pairs = gated.count()
-    qual = (
-        gated.withColumn(
-            "d", F.levenshtein(F.col("na.p_name"), F.col("nb.p_name"))
-        )
-        .filter(F.col("d") <= max_dist)
-        .count()
-    )
+    gate = _length_gated_name_pairs(names, max_dist).count()
     return {
-        "n_rows": n_rows,
+        "n_rows": p.count(),
         "n_distinct": n_distinct,
-        "distinct_lev_pairs": distinct_lev_pairs,
-        "qualifying_ordered_pairs": 2 * qual + n_distinct,
+        "distinct_lev_pairs": (gate - n_distinct) // 2,
+        "qualifying_ordered_pairs": _qualifying_name_pairs(names, max_dist).count(),
         "output_pairs": string_distance_pairs(spark, sf_dir, max_dist).count(),
     }
 
@@ -6948,6 +6940,14 @@ def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DISTINCT-duration histogram (calendar-bounded ≤ 10⁴ rows
     regardless of corpus size), so everything downstream of the
     per-customer agg is scale-free."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    cached = _SURV_CACHE.get(key)
+    if cached is not None:
+        try:
+            cached.count()
+            return cached
+        except Exception:
+            del _SURV_CACHE[key]
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("d")
     )
@@ -6989,16 +6989,7 @@ def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d_events",
             (F.col("n_subjects") - F.col("before")).alias("n_risk"),
         )
-    )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SURV_CACHE.get(key)
-    if cached is not None:
-        try:
-            cached.count()
-            return cached
-        except Exception:
-            del _SURV_CACHE[key]
-    kt = kt.localCheckpoint()
+    ).localCheckpoint()
     _SURV_CACHE[key] = kt
     return kt
 
@@ -7896,6 +7887,76 @@ def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("join_name")
 
 
+def _apriori_baskets(
+    spark: SparkSession, sf_dir: str, rel_support: float
+) -> tuple[DataFrame, DataFrame, Column]:
+    """q278's basket table: one sorted DISTINCT brand array per order,
+    materialized once (every later stage reads it), with its one-row
+    ``n_baskets`` frame and the support threshold over that count."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    baskets = (
+        li.join(p, li.l_partkey == p.p_partkey)
+        .select(F.col("l_orderkey").alias("oid"),
+                F.col("p_brand").alias("item"))
+        .distinct()
+    )
+    ba = baskets.groupBy("oid").agg(
+        F.array_sort(F.collect_list("item")).alias("items")
+    ).localCheckpoint()
+    nb = ba.agg(F.count("*").alias("n_baskets"))
+    thresh = F.ceil(F.lit(float(rel_support)) * F.col("n_baskets"))
+    return ba, nb, thresh
+
+
+def _pair_explode(src: DataFrame, *extra: str) -> DataFrame:
+    """Every a < b pair of each row's sorted distinct ``items`` array,
+    carrying the ``extra`` columns. posexplode + slice keeps every
+    expression in whole-stage codegen; the higher-order-function form
+    it replaced was interpreted per element (OPTIMIZATION_r15.md)."""
+    carried = list(extra) if "items" in extra else [*extra, "items"]
+    return (
+        src.select(*carried, F.posexplode("items").alias("_pi", "a"))
+        .select(
+            *extra,
+            "a",
+            F.explode(
+                F.slice(F.col("items"), F.col("_pi") + 2, F.size("items"))
+            ).alias("b"),
+        )
+    )
+
+
+def _frequent_pairs(ba: DataFrame, nb: DataFrame, thresh: Column) -> DataFrame:
+    """L2: the basket pairs (a, b) whose support ``sup2`` meets the
+    threshold."""
+    return (
+        _pair_explode(ba)
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("sup2"))
+        .join(F.broadcast(nb), F.lit(True))
+        .filter(F.col("sup2") >= thresh)
+        .drop("n_baskets")
+    )
+
+
+def _candidate_triples(l2: DataFrame) -> DataFrame:
+    """Candidate triples (c2, c3, c1) joined from L2 on the shared first
+    item and pruned by the apriori property: (c2, c3) must be in L2."""
+    l2x = l2.select(F.col("a").alias("c1"), F.col("b").alias("c2"))
+    l2y = l2.select(F.col("a").alias("c1"), F.col("b").alias("c3"))
+    return (
+        l2x.join(l2y, "c1")
+        .filter(F.col("c2") < F.col("c3"))
+        .join(
+            l2.select(F.col("a").alias("c2"), F.col("b").alias("c3")),
+            ["c2", "c3"],
+        )
+    )
+
+
 def apriori_triples(spark: SparkSession, sf_dir: str,
                     rel_support: float = 0.01) -> DataFrame:
     """Apriori L2→L3 frequent-itemset mining over order baskets of
@@ -7914,72 +7975,12 @@ def apriori_triples(spark: SparkSession, sf_dir: str,
     third item checked against the basket's OWN item array.
     Everything is exact integers; support ratio is one division, 6dp.
 
-    r14 shape (guide §1.2/§2.4; identical output): the basket-array
-    table is built ONCE and eagerly materialized — the old plan
-    re-ran the lineitem⋈part join + distinct for the basket-count
-    subquery, both pair-explode branches and a FOURTH time as the
-    per-(order, item) membership join that verified c3. That join is
-    gone entirely: the pair explode carries its basket's sorted item
-    array, so c3 membership is one array_contains on the candidate-
-    matched rows (bounded by |cand| × support), and n_baskets is one
-    count of the materialized array table."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .select(F.col("l_orderkey").alias("oid"),
-                F.col("p_brand").alias("item"))
-        .distinct()
-    )
-    ba = baskets.groupBy("oid").agg(
-        F.array_sort(F.collect_list("item")).alias("items")
-    ).localCheckpoint()
-    nb = ba.agg(F.count("*").alias("n_baskets"))
-
-    def _pair_explode(src: DataFrame, *extra: str) -> DataFrame:
-        # r15 (guide §4.1, the q216 codegen lesson): the old
-        # flatten(transform(transform(…))) + filter built |items|²
-        # structs per basket through the INTERPRETED higher-order-
-        # function evaluator before keeping the a < b half. items is
-        # a sorted DISTINCT set, so value order == position order and
-        # "elements after position i" == "elements greater than
-        # items[i]": posexplode + slice generate exactly the same
-        # a < b pair multiset with every expression in whole-stage
-        # codegen (slice past the end yields an empty array, so the
-        # last element pairs with nothing, as before).
-        carried = list(extra) if "items" in extra else [*extra, "items"]
-        return (
-            src.select(*carried, F.posexplode("items").alias("_pi", "a"))
-            .select(
-                *extra,
-                "a",
-                F.explode(
-                    F.slice(F.col("items"), F.col("_pi") + 2, F.size("items"))
-                ).alias("b"),
-            )
-        )
-
-    thresh = F.ceil(F.lit(float(rel_support)) * F.col("n_baskets"))
-    l2 = (
-        _pair_explode(ba)
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("sup2"))
-        .join(F.broadcast(nb), F.lit(True))
-        .filter(F.col("sup2") >= thresh)
-        .drop("n_baskets")
-    )
-    l2x = l2.select(F.col("a").alias("c1"), F.col("b").alias("c2"))
-    l2y = l2.select(F.col("a").alias("c1"), F.col("b").alias("c3"))
-    cand = (
-        l2x.join(l2y, "c1")
-        .filter(F.col("c2") < F.col("c3"))
-        .join(
-            l2.select(F.col("a").alias("c2"), F.col("b").alias("c3")),
-            ["c2", "c3"],
-        )
-    )
+    The basket-array table is built once and materialized; the pair
+    explode carries each basket's item array, so the third item is
+    checked with array_contains instead of a membership join, and
+    n_baskets is one count of that table (OPTIMIZATION_r14.md)."""
+    ba, nb, thresh = _apriori_baskets(spark, sf_dir, rel_support)
+    cand = _candidate_triples(_frequent_pairs(ba, nb, thresh))
     triples = _pair_explode(ba, "items").join(
         F.broadcast(cand.select(F.col("c1").alias("a"),
                                 F.col("c2").alias("b"), "c3")),
@@ -8007,10 +8008,8 @@ def apriori_triples(spark: SparkSession, sf_dir: str,
 
 def apriori_volume_metrics(spark: SparkSession, sf_dir: str,
                            rel_support: float = 0.01) -> dict:
-    """Candidate-volume instrumentation for apriori_triples (round-10
-    verdict item 6: the heavy candidate generators get pinned growth
-    curves like the graph suite's). Mirrors the query's stages and
-    returns the volumes that decide its 100× posture:
+    """Candidate volumes of apriori_triples (q278), counted on the
+    operator's own stages — the volumes that decide its 100× posture:
 
     - ``n_baskets`` — corpus-side input (linear in orders),
     - ``pair_rows`` — the exploded 2-subset stream Σ C(|basket|, 2);
@@ -8021,144 +8020,49 @@ def apriori_volume_metrics(spark: SparkSession, sf_dir: str,
       item domain is the fixed brand set,
     - ``cand_triples`` — candidates AFTER the apriori prune; the
       broadcast table the counting scan verifies — bounded by
-      C(l2_items, 3) independent of corpus size.
-
-    All values are counts of the SAME dataflow apriori_triples runs
-    (stages re-derived; the query itself is untouched)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .select(F.col("l_orderkey").alias("oid"), F.col("p_brand").alias("item"))
-        .distinct()
-    )
-    n_baskets = baskets.select("oid").distinct().count()
-    ba = baskets.groupBy("oid").agg(
-        F.array_sort(F.collect_list("item")).alias("items")
-    )
-    pair_rows = int(
-        ba.select(
-            (F.size("items") * (F.size("items") - 1) / 2).cast("long").alias("c")
-        )
-        .agg(F.sum("c"))
-        .first()[0]
-    )
-    # mirrors apriori_triples' r15 codegen pair explode (same volumes)
-    pairs = ba.select(
-        "oid", "items", F.posexplode("items").alias("_pi", "a")
-    ).select(
-        "oid",
-        "a",
-        F.explode(
-            F.slice(F.col("items"), F.col("_pi") + 2, F.size("items"))
-        ).alias("b"),
-    )
-    import math as _math
-
-    thresh = _math.ceil(rel_support * n_baskets)
-    l2 = (
-        pairs.groupBy("a", "b")
-        .agg(F.count("*").alias("sup2"))
-        .filter(F.col("sup2") >= thresh)
-    )
-    l2_size = l2.count()
-    l2_items = (
-        l2.select(F.col("a").alias("i"))
-        .unionAll(l2.select(F.col("b").alias("i")))
-        .distinct()
-        .count()
-    )
-    l2x = l2.select(F.col("a").alias("c1"), F.col("b").alias("c2"))
-    l2y = l2.select(F.col("a").alias("c1"), F.col("b").alias("c3"))
-    cand_triples = (
-        l2x.join(l2y, "c1")
-        .filter(F.col("c2") < F.col("c3"))
-        .join(
-            l2.select(F.col("a").alias("c2"), F.col("b").alias("c3")),
-            ["c2", "c3"],
-        )
-        .count()
-    )
+      C(l2_items, 3) independent of corpus size."""
+    ba, nb, thresh = _apriori_baskets(spark, sf_dir, rel_support)
+    l2 = _frequent_pairs(ba, nb, thresh)
+    # L2 is brand-domain bounded (≤ 300 rows), so its items are read
+    # on the driver
+    pairs = l2.select("a", "b").collect()
     return {
-        "n_baskets": n_baskets,
-        "pair_rows": pair_rows,
-        "l2_size": l2_size,
-        "l2_items": l2_items,
-        "cand_triples": cand_triples,
+        "n_baskets": ba.count(),
+        "pair_rows": _pair_explode(ba).count(),
+        "l2_size": len(pairs),
+        "l2_items": len({item for pair in pairs for item in pair}),
+        "cand_triples": _candidate_triples(l2).count(),
     }
 
 
 def linkpred_volume_metrics(spark: SparkSession, sf_dir: str,
                             min_cooccur: int = 2,
                             n_buckets: int = 64) -> dict:
-    """Sampled-negative volume instrumentation for link_prediction_auc
-    (round-10 verdict item 6). Returns:
+    """Sampled-negative volumes of link_prediction_auc (q285), counted
+    on the operator's own stages and read from its output:
 
     - ``n_nodes`` / ``n_edges`` — graph size,
     - ``neg_candidate_pairs`` — same-md5-bucket pairs BEFORE the
       real-edge anti-join: Σ_b C(|bucket|, 2), the quantity the
       bucket equi-join pays; for balanced md5 buckets this is
       ≈ n²/(2B), and B ∝ n keeps the sample linear at 100 TB,
-    - ``n_negs`` — labeled negatives after the anti-join,
+    - ``n_negs`` — labeled negatives after the anti-join (q285's
+      ``n_neg``),
     - ``balance_ratio`` — neg_candidate_pairs / (n²/(2B)): how far
       the hash buckets sit from perfect balance (≈1 when balanced;
-      the certificate that no hot bucket re-introduces a quadratic).
-
-    Stages re-derived from the query's dataflow; the query itself is
-    untouched."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    copairs = (
-        li.alias("x")
-        .join(li.alias("y"), F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-        .filter(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .select(
-            F.col("x.l_orderkey").alias("oid"),
-            F.col("x.l_partkey").alias("u"),
-            F.col("y.l_partkey").alias("v"),
-        )
-        .distinct()
-    )
-    edges = (
-        copairs.groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_cooccur)
-        .select("u", "v")
-    )
-    n_edges = edges.count()
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    nodes = adj.select(F.col("u").alias("n")).distinct()
+      the certificate that no hot bucket re-introduces a quadratic)."""
+    edges = _copurchase_edges(spark, sf_dir, min_cooccur)
+    _, nodes = _copurchase_adjacency(edges)
     n_nodes = nodes.count()
-    nb = nodes.select(
-        "n",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("n").cast("string")), 1, 15), 16, 10
-            ).cast("long")
-            % n_buckets
-        ).alias("b"),
-    )
-    neg_candidate_pairs = int(
-        nb.groupBy("b")
-        .agg(F.count("*").alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2))
-        .first()[0]
-    )
-    n_negs = (
-        nb.alias("n1")
-        .join(nb.select(F.col("n").alias("m"), "b").alias("n2"), "b")
-        .filter(F.col("n") < F.col("m"))
-        .select(F.col("n").alias("u"), F.col("m").alias("v"))
-        .join(edges, ["u", "v"], "left_anti")
-        .count()
-    )
+    neg_candidate_pairs = _bucket_pairs(nodes, n_buckets).count()
     balanced = n_nodes * n_nodes / (2.0 * n_buckets)
     return {
         "n_nodes": n_nodes,
-        "n_edges": n_edges,
+        "n_edges": edges.count(),
         "neg_candidate_pairs": neg_candidate_pairs,
-        "n_negs": n_negs,
+        "n_negs": link_prediction_auc(
+            spark, sf_dir, min_cooccur, n_buckets
+        ).first()["n_neg"],
         "balance_ratio": round(neg_candidate_pairs / balanced, 3),
     }
 
@@ -8535,16 +8439,13 @@ def _copurchase_edges(
     ``min_cooccur`` orders) — the shared graph construction of
     q285/q290.
 
-    r14 shape (guide §2.3/§2.4; identical edge set): the old form
-    self-joined lineitem on l_orderkey and DISTINCTed the exploded
-    pair stream — two shuffles of the full lineitem projection plus
-    two shuffles of the pair stream (join output → distinct →
-    count). Now ONE shuffle groups lineitem by order into a sorted
-    distinct part array (basket width is bounded by order width, the
-    q278 basket argument), pairs explode from the array with no
-    shuffle and no per-order duplicates by construction, and the only
-    pair-stream shuffle is the (u, v) support count with map-side
-    partial aggregation.
+    ONE shuffle groups lineitem by order into a sorted distinct part
+    array (basket width is bounded by order width, the q278 basket
+    argument), pairs explode from the array with no shuffle and no
+    per-order duplicates by construction, and the only pair-stream
+    shuffle is the (u, v) support count with map-side partial
+    aggregation; it replaced a lineitem self-join plus DISTINCT
+    (OPTIMIZATION_r14.md; the codegen pair explode, OPTIMIZATION_r15.md).
 
     ``checkpoint`` (default) eagerly localCheckpoints the bounded
     edge list: both consumers reference edges several times
@@ -8560,11 +8461,8 @@ def _copurchase_edges(
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("ps")
     )
-    # r15 (guide §4.1): pair generation in whole-stage codegen —
     # posexplode + slice over the sorted distinct basket array emits
-    # exactly the u < v pairs (value order == position order), where
-    # the old flatten(transform(transform)) + filter built |ps|²
-    # structs per order through the interpreted HOF evaluator.
+    # exactly the u < v pairs (value order == position order)
     pairs = baskets.select(
         "ps", F.posexplode("ps").alias("_pi", "u")
     ).select(
@@ -8580,6 +8478,41 @@ def _copurchase_edges(
         .select("u", "v")
     )
     return edges.localCheckpoint() if checkpoint else edges
+
+
+def _copurchase_adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Both directions (u, v) of each co-purchase edge, and the graph's
+    node set (n)."""
+    adj = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    return adj, adj.select(F.col("u").alias("n")).distinct()
+
+
+def _bucket_pairs(nodes: DataFrame, n_buckets: int) -> DataFrame:
+    """Same-md5-bucket node pairs (u < v), bucket = md5(n) %
+    ``n_buckets``: q285's negative-sample candidates before the
+    real-edge anti-join."""
+    nb = nodes.select(
+        "n",
+        (
+            F.conv(
+                F.substring(F.md5(F.col("n").cast("string")), 1, 15),
+                16,
+                10,
+            ).cast("long")
+            % n_buckets
+        ).alias("b"),
+    )
+    return (
+        nb.alias("n1")
+        .join(
+            nb.select(F.col("n").alias("m"), "b").alias("n2"),
+            "b",
+        )
+        .filter(F.col("n") < F.col("m"))
+        .select(F.col("n").alias("u"), F.col("m").alias("v"))
+    )
 
 
 def link_prediction_auc(spark: SparkSession, sf_dir: str,
@@ -8610,10 +8543,7 @@ def link_prediction_auc(spark: SparkSession, sf_dir: str,
     negative anti-join) and the old plan re-ran the lineitem
     self-join for the ones AQE's exchange reuse missed."""
     edges = _copurchase_edges(spark, sf_dir, min_cooccur)
-    adj = edges.unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    nodes = adj.select(F.col("u").alias("n")).distinct()
+    adj, nodes = _copurchase_adjacency(edges)
     cn = (
         adj.alias("a")
         .join(adj.alias("b"), F.col("a.v") == F.col("b.v"))
@@ -8622,25 +8552,8 @@ def link_prediction_auc(spark: SparkSession, sf_dir: str,
         .agg(F.count("*").alias("score"))
     )
     pos = edges.withColumn("y", F.lit(1))
-    nb = nodes.select(
-        "n",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("n").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % n_buckets
-        ).alias("b"),
-    )
     negs = (
-        nb.alias("n1")
-        .join(
-            nb.select(F.col("n").alias("m"), "b").alias("n2"),
-            "b",
-        )
-        .filter(F.col("n") < F.col("m"))
-        .select(F.col("n").alias("u"), F.col("m").alias("v"))
+        _bucket_pairs(nodes, n_buckets)
         .join(edges, ["u", "v"], "left_anti")
         .withColumn("y", F.lit(0))
     )

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.parity_sweep import compare_one  # noqa: E402
+from tools.parity_sweep import compare_one, shared_oracles  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -64,6 +64,30 @@ def test_within_budget_stays_row_level(spark, con):
     assert entry["status"] == "match"
     assert entry["spark_rows"] == entry["oracle_rows"] == 1000
     assert "spark_checksum" not in entry
+
+
+def test_shared_oracle_sql_runs_once_per_sweep(spark, con):
+    """Entries whose oracle SQL differs only in whitespace (the
+    q38/q151 kind) run it once per sweep and both still compare."""
+
+    class CountingCon:
+        def __init__(self):
+            self.runs = 0
+
+        def sql(self, query):
+            self.runs += 1
+            return con.sql(query)
+
+    a, b = _synthetic_spec(50), _synthetic_spec(50)
+    b.oracle = "\n  " + a.oracle.replace(" ", "\n    ")
+    counting = CountingCon()
+    memo = shared_oracles({"a": a, "b": b, "c": _synthetic_spec(60)})
+    assert len(memo) == 1
+    for spec in (a, b):
+        entry = compare_one(spark, counting, spec, oracle_memo=memo)
+        assert entry["status"] == "match"
+        assert entry["oracle_rows"] == 50
+    assert counting.runs == 1
 
 
 def test_oversized_float_result_refuses_loudly(spark, con):

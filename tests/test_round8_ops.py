@@ -270,6 +270,24 @@ def test_kaplan_meier_survival_monotone(spark):
     assert all(a >= b for a, b in zip(risks, risks[1:]))
 
 
+def test_survival_table_memo_hit_builds_nothing(spark, monkeypatch):
+    """A memo hit returns the memoized life table before any of its
+    plan is built: once the first call has read ``orders``, load_table
+    raises, and a second call in the same session still succeeds."""
+    monkeypatch.setattr(rel, "_SURV_CACHE", {})
+    real, reads = rel.load_table, []
+
+    def load_once(*args, **kwargs):
+        if reads:
+            raise AssertionError("life table rebuilt on a memo hit")
+        reads.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(rel, "load_table", load_once)
+    first = rel._survival_risk_table(spark, SF)
+    assert rel._survival_risk_table(spark, SF) is first
+
+
 def test_assortativity_path_graph_is_minus_one(spark, tmp_path):
     """P3 path (A−B−C, no A−C edge): degree pairs across directed
     edges are (1,2),(2,1),(2,1),(1,2) ⇒ Newman r = −1 exactly. The

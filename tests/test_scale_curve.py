@@ -16,6 +16,8 @@ saturation constant must stay FLAT — pinned in SF03_* below."""
 
 from __future__ import annotations
 
+import collections
+import importlib
 import os
 import sys
 
@@ -50,21 +52,56 @@ def test_candidate_counts_pinned(spark, sf_dir, n_minhash, n_containment):
     b = dedup.band_buckets(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    a, bb = b.alias("a"), b.alias("b")
-    got_mh = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
+    got_mh = dedup._band_pairs(b).distinct().count()
     assert got_mh == n_minhash
     got_ct = dedup.containment_candidates(spark, sf_dir).count()
     assert got_ct == n_containment
+
+
+# (module, operator, its volume function, the operator's stages that
+# the volume function counts)
+STAGE_SOURCES = [
+    ("llm.dedup", "dedup_minhash_lsh", "lsh_volume_metrics",
+     ("_band_pairs",)),
+    ("llm.dedup", "dedup_simhash", "lsh_volume_metrics",
+     ("_simhash_document_fingerprints", "_chunk_pairs")),
+    ("llm.dedup", "graph_triangles", "graph_volume_metrics",
+     ("_oriented_wedges",)),
+    ("operators.relational", "string_distance_pairs",
+     "string_distance_volume_metrics",
+     ("_length_gated_name_pairs", "_qualifying_name_pairs")),
+    ("operators.relational", "apriori_triples", "apriori_volume_metrics",
+     ("_apriori_baskets", "_pair_explode", "_frequent_pairs",
+      "_candidate_triples")),
+    ("operators.relational", "link_prediction_auc", "linkpred_volume_metrics",
+     ("_copurchase_edges", "_copurchase_adjacency", "_bucket_pairs")),
+]
+
+
+@pytest.mark.parametrize("module,operator,volume,stages", STAGE_SOURCES)
+def test_volume_metrics_count_the_operators_own_stages(
+    spark, monkeypatch, module, operator, volume, stages
+):
+    """Single source: every stage a volume function counts is one its
+    operator runs, so a regression in the operator moves the pins. The
+    volume function must reach each stage itself, beyond the calls made
+    by any run of the operator inside it."""
+    mod = importlib.import_module(f"etl_geonet_quakes_spark.{module}")
+    calls = collections.Counter()
+    for name in (operator, *stages):
+        def counted(*args, _name=name, _real=getattr(mod, name), **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, counted)
+    sf = "/root/testdata/sf0.001"
+    getattr(mod, operator)(spark, sf)
+    by_operator = dict(calls)
+    assert all(by_operator.get(s, 0) > 0 for s in stages), by_operator
+    calls.clear()
+    getattr(mod, volume)(spark, sf)
+    for s in stages:
+        assert calls[s] > calls[operator] * by_operator[s], (s, dict(calls))
 
 
 def test_candidates_dominate_true_pairs_not_corpus(spark):

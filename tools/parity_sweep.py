@@ -28,6 +28,7 @@ status "checksum_match" — the scalable parity mode, counted as green.
 
 from __future__ import annotations
 
+import collections
 import json
 import os
 import sys
@@ -79,12 +80,42 @@ def _row_width(row) -> int:
     return total
 
 
+def _sql_key(sql: str) -> str:
+    return " ".join(sql.split())
+
+
+def shared_oracles(specs: dict) -> dict:
+    """An empty memo slot per oracle SQL that more than one of
+    ``specs`` runs (whitespace-normalized), for compare_one to fill:
+    within one sweep such entries run their oracle once."""
+    n = collections.Counter(
+        _sql_key(spec.oracle) for spec in specs.values() if spec.oracle
+    )
+    return {key: None for key, c in n.items() if c > 1}
+
+
+def _oracle_rows(con, sql: str, memo: dict | None) -> tuple:
+    """The oracle's normalized (columns, rows), taken from ``memo``
+    when it holds them and stored there when it has a slot for them."""
+    key = _sql_key(sql)
+    if memo and memo.get(key) is not None:
+        return memo[key]
+    res = con.sql(sql)
+    rows = _normalize(list(res.columns), res.fetchall())
+    if memo is not None and key in memo:
+        memo[key] = rows
+    return rows
+
+
 def compare_one(spark, con, spec, row_budget: int = ROW_BUDGET,
-                byte_budget: int = BYTE_BUDGET) -> dict:
+                byte_budget: int = BYTE_BUDGET,
+                oracle_memo: dict | None = None) -> dict:
     """Row-level Spark-vs-DuckDB compare for one registry spec, with
     the oversized-result checksum fallback. Returns the artifact
     entry dict (status 'match' / '*_mismatch' / 'rows_only' /
-    'checksum_match' / 'checksum_mismatch')."""
+    'checksum_match' / 'checksum_mismatch'). ``oracle_memo`` (from
+    shared_oracles) carries normalized oracle results between the
+    entries of one sweep; the checksum path always runs its own."""
     t0 = time.perf_counter()
     sdf = spec.fn(spark, SF_DIR)
     if not spec.oracle:
@@ -109,8 +140,7 @@ def compare_one(spark, con, spec, row_budget: int = ROW_BUDGET,
         entry["sec"] = round(time.perf_counter() - t0, 3)
         return entry
     s_named, s_data = _normalize(sdf.columns, [tuple(r) for r in capped])
-    res = con.sql(spec.oracle)
-    d_named, d_data = _normalize(list(res.columns), res.fetchall())
+    d_named, d_data = _oracle_rows(con, spec.oracle, oracle_memo)
     entry = {
         "spark_rows": len(s_data),
         "oracle_rows": len(d_data),
@@ -173,12 +203,13 @@ def main() -> None:
         )
 
     specs = _selected_specs()
+    oracle_memo = shared_oracles(specs)
     results: dict[str, dict] = {}
     n_ok = n_bad = n_rows_only = n_err = 0
     t_sweep = time.perf_counter()
     for name, spec in specs.items():
         try:
-            entry = compare_one(spark, con, spec)
+            entry = compare_one(spark, con, spec, oracle_memo=oracle_memo)
             results[name] = entry
             if entry["status"] in ("match", "checksum_match"):
                 n_ok += 1

@@ -20,8 +20,6 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from etl_geonet_quakes_spark.io import load_table  # noqa: E402
 from etl_geonet_quakes_spark.llm import dedup  # noqa: E402
 from etl_geonet_quakes_spark.queries import SPECS  # noqa: E402
@@ -39,18 +37,7 @@ def minhash_candidates(spark, sf_dir) -> int:
     b = dedup.band_buckets(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    a, bb = b.alias("a"), b.alias("b")
-    return (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
+    return dedup._band_pairs(b).distinct().count()
 
 
 def main() -> None:
