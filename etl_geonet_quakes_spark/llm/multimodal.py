@@ -65,21 +65,17 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def _encode_stage(
-    d: DataFrame, encode, *, spread: bool, out: str = "payload binary"
-) -> DataFrame:
+def _encode_stage(d: DataFrame, encode, *, out: str = "payload binary") -> DataFrame:
     """Synthesis stage shared by every codec: ``doc_id`` plus the
     ``out`` column, ``encode(doc_id, *rest)`` per row of ``d`` (whose
     first column is ``doc_id``; values arrive as Python objects).
 
-    ``spread`` repartitions ``d`` to defaultParallelism first. At
-    fixture scale the doc_id projection is ONE split, which serializes
-    the Python codec; the repartition spreads it across all cores
-    where the codec's work outweighs the extra shuffle stage (at real
-    scale the scan has many splits and AQE would coalesce, so this is
-    bench-scale parallelism, not a data shuffle)."""
-    if spread:
-        d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
+    The stage keeps row order: each batch's rows come out in input
+    order, and so do ``_decode_stage``'s. Ordering is the caller's
+    job: sort ``d`` on ``doc_id`` below the stage (``_doc_ids``) and
+    the decoded features come out ordered with no sort above the
+    Python stages, so neither codec runs a second time for a range
+    sample (OPTIMIZATION_media_order.md)."""
     name = out.split()[0]
     cols = d.columns
 
@@ -119,7 +115,7 @@ def _decode_stage(df: DataFrame, decode, schema: str) -> DataFrame:
 
 
 def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents").select("doc_id")
+    return load_table(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id")
 
 
 def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,9 +249,7 @@ def synthesize_ppm_media(
         px = bytes((doc_id * 31 + k) % 256 for k in range(width * height * 3))
         return b"P6\n%d %d\n255\n" % (width, height) + px
 
-    # not spread: this codec is too cheap to pay for the extra shuffle
-    # stage (measured, OPTIMIZATION_r14.md "media synth")
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=False)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _ppm_features(buf: bytes):
@@ -303,10 +297,7 @@ def media_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end real-codec path: synthesize P6 files → parse them
     back with the stdlib-only decoder → per-channel means, ordered.
     Oracle side replays the closed-form pixel spec, never the bytes."""
-    return (
-        decode_ppm_features(synthesize_ppm_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_ppm_features(synthesize_ppm_media(spark, sf_dir))
 
 
 _WAV_SCHEMA = (
@@ -333,9 +324,7 @@ def synthesize_wav_media(
         )
         return b"RIFF" + struct.pack("<I", len(body)) + body
 
-    # not spread: this codec is too cheap to pay for the extra shuffle
-    # stage (measured, OPTIMIZATION_r14.md "media synth")
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=False)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _wav_features(buf: bytes):
@@ -385,10 +374,7 @@ def media_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end real-audio path: synthesize RIFF/WAVE files → parse
     them back with the stdlib chunk-walking decoder → duration/mean/
     RMS, ordered. The audio twin of media_ppm_decode (q96)."""
-    return (
-        decode_wav_features(synthesize_wav_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_wav_features(synthesize_wav_media(spark, sf_dir))
 
 
 _PNG_SCHEMA = (
@@ -498,7 +484,7 @@ def synthesize_png_media(
     inverted by the decoder — a filter-math bug cannot cancel out,
     because the oracle replays the RAW pixel spec, never the bytes."""
     encode = partial(_png_encode_rgb, width=width, height=height, mult=37)
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _png_features(buf: bytes):
@@ -543,10 +529,7 @@ def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (all five adaptive filters across the corpus) → parse them
     back with the stdlib decoder → per-channel means, ordered. Oracle
     side replays the closed-form pixel spec, never the bytes."""
-    return (
-        decode_png_features(synthesize_png_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_png_features(synthesize_png_media(spark, sf_dir))
 
 
 # Adam7 interlacing (round 13): the PNG spec's seven-pass progressive
@@ -643,7 +626,7 @@ def synthesize_png_interlaced_media(
     mod 5, so all five filters appear across passes and the
     per-pass prior-row state is exercised."""
     encode = partial(_png_encode_adam7, width=width, height=height)
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _png_interlaced_features(buf: bytes):
@@ -690,11 +673,7 @@ def decode_png_interlaced_features(df: DataFrame) -> DataFrame:
 def media_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end Adam7 path (q389): synthesize interlace=1 PNGs →
     seven-pass de-interlacing decode → exact channel sums, ordered."""
-    return (
-        decode_png_interlaced_features(
-            synthesize_png_interlaced_media(spark, sf_dir)
-        ).orderBy("doc_id")
-    )
+    return decode_png_interlaced_features(synthesize_png_interlaced_media(spark, sf_dir))
 
 
 def synthesize_html_data_uri_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -710,7 +689,7 @@ def synthesize_html_data_uri_media(spark: SparkSession, sf_dir: str) -> DataFram
             f'<img src="data:image/png;base64,{b64}"/></body></html>'
         )
 
-    return _encode_stage(_doc_ids(spark, sf_dir), page, spread=True, out="html string")
+    return _encode_stage(_doc_ids(spark, sf_dir), page, out="html string")
 
 
 def media_data_uri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,7 +709,7 @@ def media_data_uri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("payload"),
     )
-    return decode_png_features(payloads).orderBy("doc_id")
+    return decode_png_features(payloads)
 
 
 def media_resize(spark: SparkSession, sf_dir: str, out_len: int = 16) -> DataFrame:
@@ -1567,7 +1546,7 @@ def synthesize_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode(doc_id: int) -> bytes:
         return _jpeg_encode_gray(_jpeg_444_planes(doc_id, 31, 1)[0].reshape(-1), 16, 16)
 
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _jpeg_gray_features(buf: bytes):
@@ -1594,10 +1573,7 @@ def media_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DCT-format sibling of q98's PNG (lossless) path; the lossy
     general case is pinned in tests against an independent
     transform-layer reference."""
-    return (
-        decode_jpeg_features(synthesize_jpeg_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_jpeg_features(synthesize_jpeg_media(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1633,7 +1609,7 @@ def synthesize_jpeg_color_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode(doc_id: int) -> bytes:
         return _jpeg_encode_ycc444(_jpeg_444_planes(doc_id, 31, 3), 16, 16)
 
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def _jpeg_plane_features(buf: bytes, sampling: list):
@@ -1662,10 +1638,7 @@ def media_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end real color-JPEG path: synthesize 4:4:4 interleaved
     baseline JPEGs → general decoder (per-component DC predictors,
     stream-parsed tables) → exact per-plane features, ordered."""
-    return (
-        decode_jpeg_color_features(synthesize_jpeg_color_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_jpeg_color_features(synthesize_jpeg_color_media(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1734,7 +1707,7 @@ def synthesize_jpeg_420_media(
             *_jpeg_420_planes(doc_id, mult), 32, 32, restart_interval=restart_interval
         )
 
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def decode_jpeg_420_features(df: DataFrame) -> DataFrame:
@@ -1752,10 +1725,7 @@ def media_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end 4:2:0 path (q383): synthesize subsampled baseline
     JPEGs → general decoder (MCU = 4 Y + Cb + Cr data units, native-
     resolution planes) → exact per-plane features, ordered."""
-    return (
-        decode_jpeg_420_features(synthesize_jpeg_420_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_jpeg_420_features(synthesize_jpeg_420_media(spark, sf_dir))
 
 
 def media_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1767,11 +1737,8 @@ def media_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrestarted stream — restarts change the WIRE layout, never the
     image — under a distinct value formula (mult=37) so q383/q384
     results are not textually interchangeable."""
-    return (
-        decode_jpeg_420_features(
-            synthesize_jpeg_420_media(spark, sf_dir, mult=37, restart_interval=1)
-        )
-        .orderBy("doc_id")
+    return decode_jpeg_420_features(
+        synthesize_jpeg_420_media(spark, sf_dir, mult=37, restart_interval=1)
     )
 
 
@@ -2027,7 +1994,7 @@ def synthesize_jpeg_progressive_media(spark: SparkSession, sf_dir: str) -> DataF
     def encode(doc_id: int) -> bytes:
         return _jpeg_encode_progressive(_jpeg_444_planes(doc_id, 41, 3), 16, 16)
 
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def synthesize_jpeg_prog420_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2042,7 +2009,7 @@ def synthesize_jpeg_prog420_media(spark: SparkSession, sf_dir: str) -> DataFrame
             _jpeg_420_planes(doc_id, 43), 32, 32, sampling=_SAMPLING_420
         )
 
-    return _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
+    return _encode_stage(_doc_ids(spark, sf_dir), encode)
 
 
 def media_jpeg_prog420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2050,11 +2017,7 @@ def media_jpeg_prog420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed — what a typical camera/web progressive JPEG is. The
     4:2:0 feature contract applies (three components sampled
     (2,2),(1,1),(1,1), native-resolution planes)."""
-    return (
-        decode_jpeg_420_features(
-            synthesize_jpeg_prog420_media(spark, sf_dir)
-        ).orderBy("doc_id")
-    )
+    return decode_jpeg_420_features(synthesize_jpeg_prog420_media(spark, sf_dir))
 
 
 def media_jpeg_prog_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2071,8 +2034,8 @@ def media_jpeg_prog_restart_decode(spark: SparkSession, sf_dir: str) -> DataFram
             sampling=_SAMPLING_420, restart_interval=1,
         )
 
-    payloads = _encode_stage(_doc_ids(spark, sf_dir), encode, spread=True)
-    return decode_jpeg_420_features(payloads).orderBy("doc_id")
+    payloads = _encode_stage(_doc_ids(spark, sf_dir), encode)
+    return decode_jpeg_420_features(payloads)
 
 
 def media_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2083,11 +2046,7 @@ def media_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     features. The 4:4:4 color contract applies (three components,
     1x1 sampled): a sequential-only decoder cannot read these
     payloads at all."""
-    return (
-        decode_jpeg_color_features(
-            synthesize_jpeg_progressive_media(spark, sf_dir)
-        ).orderBy("doc_id")
-    )
+    return decode_jpeg_color_features(synthesize_jpeg_progressive_media(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2160,19 +2119,15 @@ def _warc_gzip_payloads(d: DataFrame) -> DataFrame:
     oracle's hdr||text hash matches for non-ASCII content too. A
     NULL / non-string text yields a NULL payload (a poisoned row the
     decoder marks invalid) instead of failing the whole Spark task."""
-    return _encode_stage(d, _warc_record, spread=False)
+    return _encode_stage(d, _warc_record)
 
 
 def synthesize_warc_gzip_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per document: a two-member concatenated gzip payload — a
     WARC-ish record header member and the document text member —
     exactly the member layout a WET shard has."""
-    # unlike the image synths' 8-byte doc_id projections, this spread
-    # moves the text column (~KB/row); at real scale the scan has many
-    # splits and the spread should be dropped, since shuffling corpus
-    # text just to spread a cheap gzip is waste
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _encode_stage(d, _warc_record, spread=True)
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").orderBy("doc_id")
+    return _encode_stage(d, _warc_record)
 
 
 def _warc_features(buf: bytes):
@@ -2197,10 +2152,7 @@ def decode_warc_gzip_features(df: DataFrame) -> DataFrame:
 def media_warc_gzip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end WARC-layout path (q388): synthesize concatenated
     gzip members → member-walking decode → exact features, ordered."""
-    return (
-        decode_warc_gzip_features(synthesize_warc_gzip_media(spark, sf_dir))
-        .orderBy("doc_id")
-    )
+    return decode_warc_gzip_features(synthesize_warc_gzip_media(spark, sf_dir))
 
 
 def media_warc_gzip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2215,9 +2167,9 @@ def media_warc_gzip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_geonet_quakes_spark.streaming.windows import _run_to_memory
 
     batch = load_table(spark, sf_dir, "documents")
-    # not spread: the per-micro-batch shuffle of the text column costs
-    # more than the gzip stage it would spread (measured,
-    # OPTIMIZATION_r14.md "q391/q392 stream-side repartition")
+    # no shuffle before the gzip stage: per micro-batch it costs more
+    # than the stage (OPTIMIZATION_r14.md "q391/q392 stream-side
+    # repartition")
     stream = (
         spark.readStream.schema(batch.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2276,8 +2228,8 @@ def media_warc_stream_upsert_expiry(spark: SparkSession, sf_dir: str) -> DataFra
         )
         if keep is not None:
             stream = stream.filter(keep)
-        # not spread: the stateful publish pipeline would pay the
-        # extra stage twice per crawl (measured, OPTIMIZATION_r14.md
+        # no shuffle before the gzip stage: the stateful publish
+        # pipeline would pay it twice per crawl (OPTIMIZATION_r14.md
         # "q391/q392 stream-side repartition")
         snap = (
             decode_warc_gzip_features(_warc_gzip_payloads(stream))

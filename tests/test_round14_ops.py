@@ -124,23 +124,3 @@ def test_minhash_signature_agg_equals_transform_fold(spark):
     assert a == b
     assert a[2] == [None] * n_hashes  # null-shingle doc keeps its row
 
-
-def test_media_synth_stages_are_parallel(spark):
-    """r14-s5: the one-split doc_id projection serialized the Python
-    codec stages; the HEAVY synths (PNG family, data-URI — ~2 s of
-    single-thread codec work at sf0.1) must spread across
-    defaultParallelism partitions like the JPEG synths already did.
-    PPM/WAV stay un-repartitioned deliberately: their codec work is
-    too cheap to pay for the extra shuffle stage (interleaved A/B
-    regression, see the call-site comments)."""
-    from etl_geonet_quakes_spark.llm import multimodal as mm
-
-    expected = spark.sparkContext.defaultParallelism
-    for synth in (
-        mm.synthesize_png_media,
-        mm.synthesize_png_interlaced_media,
-        mm.synthesize_html_data_uri_media,
-    ):
-        assert synth(spark, SF_DIR).rdd.getNumPartitions() == expected, synth
-    for synth in (mm.synthesize_ppm_media, mm.synthesize_wav_media):
-        assert synth(spark, SF_DIR).rdd.getNumPartitions() == 1, synth
