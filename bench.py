@@ -25,24 +25,7 @@ from etl_geonet_quakes_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Names follow the round-2 registry renumbering (queries._FINAL_ORDER;
-# old→new table in COVERAGE.md). Round-1 BENCH keys for the same
-# queries, for cross-round comparison:
-#   q01_pricing_summary          = q01_pricing_summary (unchanged)
-#   q58_join_revenue_by_segment  = was q10_join_revenue_by_segment
-#   q59_join_dim_chain           = was q11_join_dim_chain
-#   q66_window_topk              = was q20_window_topk
-#   q50_sessionization           = was q23_sessionization
-#   q81_time_window_tumbling     = was q36_time_window_tumbling
-#   q41_dedup_exact              = was q40_dedup_exact
-#   q40_dedup_ngram_jaccard      = was q41_dedup_ngram_jaccard
-#   q38_dedup_minhash_lsh        = was q42_dedup_minhash_lsh
-#   q43_similarity_bruteforce    = was q50_similarity_bruteforce
-#   q22_token_stats              = was q60_token_stats
-#   q26_token_frequency_topk     = was q64_token_frequency_topk
-# New to the bench this round: as-of join, RANGE frame, tf-idf, IVF
-# ANN, SimHash, dedup clustering, corpus pipeline (previously
-# unbenched families).
+# Query names predating round 2 map to these through COVERAGE.md's old→new table.
 HEADLINE = [
     "q01_pricing_summary",
     "q58_join_revenue_by_segment",

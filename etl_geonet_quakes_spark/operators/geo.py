@@ -25,7 +25,6 @@ similarity join.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,13 +36,6 @@ from etl_geonet_quakes_spark.io import load_table
 POI_LAT = -41.2889
 POI_LON = 174.7772
 EARTH_RADIUS_KM = 6371.0
-
-_FIXTURE_JSON = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "tests",
-    "fixtures",
-    "geonet_quakes.json",
-)
 
 
 def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
@@ -81,10 +73,10 @@ def quake_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sf_dir`` is unused (the fixture is the geo source, as in
     q02/q03) but kept for the registry signature."""
     from etl_geonet_quakes_spark.io import read_geojson
-    from etl_geonet_quakes_spark.quakes import GEONET_RESPONSE_SCHEMA
+    from etl_geonet_quakes_spark.quakes import GEONET_FIXTURE_JSON, GEONET_RESPONSE_SCHEMA
     from pyspark.sql import Window
 
-    raw = read_geojson(spark, _FIXTURE_JSON, GEONET_RESPONSE_SCHEMA)
+    raw = read_geojson(spark, GEONET_FIXTURE_JSON, GEONET_RESPONSE_SCHEMA)
     f = raw.select(F.explode("features").alias("f")).select(
         F.col("f.properties.publicID").alias("public_id"),
         F.col("f.geometry.coordinates").getItem(0).alias("lon"),

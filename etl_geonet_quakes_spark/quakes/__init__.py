@@ -16,6 +16,8 @@ Maps /root/reference/task.ts one-to-one onto Spark:
   omission contract (task.ts:195-203,251-256).
 """
 
+import os
+
 from etl_geonet_quakes_spark.quakes.schema import (  # noqa: F401
     GEONET_RESPONSE_SCHEMA,
     MMI_ICONS,
@@ -25,4 +27,13 @@ from etl_geonet_quakes_spark.quakes.transform import (  # noqa: F401
     QuakeJobConfig,
     explode_features,
     transform_quakes,
+)
+
+# The repo's GeoNet fixture: the quake queries, their DuckDB oracles and
+# the fixture-replay stream all read this one file.
+GEONET_FIXTURE_JSON = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "fixtures",
+    "geonet_quakes.json",
 )

@@ -30,6 +30,7 @@ from etl_geonet_quakes_spark.io import (
     scratch_dir,
     write_version,
 )
+from etl_geonet_quakes_spark.quakes import GEONET_FIXTURE_JSON
 from etl_geonet_quakes_spark.quakes.schema import (
     GEONET_RESPONSE_SCHEMA,
     OUTPUT_FEATURE_SCHEMA,
@@ -107,14 +108,7 @@ def stream_quakes_via_source(
     from etl_geonet_quakes_spark.quakes import source as geonet_source
 
     geonet_source.register(spark)
-    fixture = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        os.pardir,
-        "tests",
-        "fixtures",
-        "geonet_quakes.json",
-    )
-    with open(fixture, "r", encoding="utf-8") as fh:
+    with open(GEONET_FIXTURE_JSON, "r", encoding="utf-8") as fh:
         full = json.load(fh)
     base = scratch_dir("quake_stream_src_")
     snapdir = os.path.join(base, "snaps")

@@ -4,11 +4,12 @@ SHADOWED q221's implementation via a key collision (caught and removed
 in-session, commit 07369df). This makes that incident class fail CI:
 
 1. STATIC (ast): replay queries.py's module-level SPECS mutations in
-   source order — the initial dict literal, the _FINAL_ORDER
-   renumbering rebuild, and every ``SPECS[<const>] = `` append — and
-   assert no key is ever assigned twice within its live namespace
-   (Python dicts and dict literals both shadow silently, so neither
-   the runtime dict nor a set() check can see the overwrite).
+   source order — the one dict literal, then every
+   ``SPECS[<const>] = `` append — and assert no key is ever assigned
+   twice (Python dicts and dict literals both shadow silently, so
+   neither the runtime dict nor a set() check can see the overwrite).
+   Any other whole-dict rebind of SPECS (a second literal, a renaming
+   comprehension) fails as unrecognized.
 2. STATIC: no other mutation mechanism exists (non-constant subscript
    keys, SPECS.update/setdefault, augmented assigns) — anything the
    replay in (1) cannot track is itself a failure.
@@ -73,19 +74,6 @@ def _module_statements():
         return ast.parse(f.read()).body
 
 
-def _final_order_new_names(stmts) -> list[str]:
-    for node in stmts:
-        target = None
-        if isinstance(node, ast.Assign) and len(node.targets) == 1:
-            target = node.targets[0]
-        elif isinstance(node, ast.AnnAssign) and node.value is not None:
-            target = node.target
-        if isinstance(target, ast.Name) and target.id == "_FINAL_ORDER":
-            pairs = ast.literal_eval(node.value)
-            return [new for _, new in pairs]
-    raise AssertionError("_FINAL_ORDER literal not found in queries.py")
-
-
 def test_specs_keys_assigned_exactly_once():
     """Replay every module-level SPECS mutation in source order; a
     key assigned while already live is the q221-shadowing bug."""
@@ -102,19 +90,12 @@ def test_specs_keys_assigned_exactly_once():
         for t in targets:
             if isinstance(t, ast.Name) and t.id == "SPECS":
                 n_mutations += 1
-                if isinstance(node.value, ast.Dict):
+                if isinstance(node.value, ast.Dict) and n_mutations == 1:
                     keys = [k.value for k in node.value.keys]
                     assert all(isinstance(k, str) for k in keys)
                     dup = [k for k, c in collections.Counter(keys).items() if c > 1]
                     assert not dup, f"duplicate keys in SPECS dict literal: {dup}"
                     live = set(keys)
-                elif isinstance(node.value, ast.DictComp):
-                    # the renumbering rebuild: live namespace becomes
-                    # _FINAL_ORDER's new names (uniqueness asserted
-                    # inline in queries.py; re-asserted here)
-                    new = _final_order_new_names(stmts)
-                    assert len(set(new)) == len(new)
-                    live = set(new)
                 else:
                     raise AssertionError(
                         f"unrecognized SPECS rebind at line {node.lineno}: "

@@ -204,9 +204,9 @@ def test_quake_geo_distances_and_cells(spark, sf_dir):
     assert dists == sorted(dists) and all(d >= 0 for d in dists)
     # haversine column algebra ≡ python reference on the raw fixture
     from etl_geonet_quakes_spark.io import read_geojson
-    from etl_geonet_quakes_spark.quakes import GEONET_RESPONSE_SCHEMA
+    from etl_geonet_quakes_spark.quakes import GEONET_FIXTURE_JSON, GEONET_RESPONSE_SCHEMA
 
-    raw = read_geojson(spark, geo._FIXTURE_JSON, GEONET_RESPONSE_SCHEMA)
+    raw = read_geojson(spark, GEONET_FIXTURE_JSON, GEONET_RESPONSE_SCHEMA)
     feats = raw.selectExpr("explode(features) AS f").select(
         F.col("f.properties.publicID").alias("pid"),
         F.col("f.geometry.coordinates")[0].alias("lon"),
