@@ -536,7 +536,7 @@ def cluster_sample(spark: SparkSession, sf_dir: str, k: int = 2) -> DataFrame:
     training mix may want, while still capping any boilerplate
     clique's contribution at k.
 
-    Reuses the converged CC labels (cluster_labels cache — the q93
+    Builds the converged CC labels (cluster_labels — the q93
     path) + the q134 hash-rank reservoir WITHIN each cluster; emits
     the kept docs with their cluster and rank. Shuffles are
     label-keyed; the rank window partitions by cluster (bounded by
@@ -676,7 +676,7 @@ def leakage_safe_folds(
     pair crosses folds — pinned by
     test_leakage_safe_folds_never_split_a_cluster.
 
-    Shape: CC labels from the shared memoized pair graph (q45's
+    Shape: CC labels from the checkpointed pair graph (q45's
     iterative min-label propagation), one md5 projection, one fold
     hash agg."""
     from etl_geonet_quakes_spark.llm.dedup import cluster_labels, md5_feature_hash

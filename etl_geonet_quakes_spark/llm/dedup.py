@@ -34,57 +34,17 @@ from pyspark.sql import functions as F
 from etl_geonet_quakes_spark.io import load_table
 from etl_geonet_quakes_spark.llm.text import ngram_join, tokens
 
-# Session-scoped memo caches, keyed by Spark applicationId so entries
-# can never outlive the JVM whose checkpoint blocks / shuffle files
-# back them. Both memoize DETERMINISTIC derivations of a read-only
-# input path, so a hit is exact, not stale:
-#   - _VOCAB_PROBE_CACHE: the <=64-vocab strategy probe of
-#     dedup_ngram_jaccard (two tiny jobs otherwise serialized into the
-#     build path of every caller: q40, q45, q93).
-#   - _LABELS_CACHE: converged connected-component labels per
-#     (sf_dir, threshold). dedup_keep_canonical layers on these instead
-#     of re-running pair generation + the whole propagation loop —
-#     at 100 TB the keep-list must not rerun the most expensive job in
-#     the pipeline. dedup_clusters itself always recomputes (it IS the
-#     measurement of the CC operator) and refreshes the cache.
-#   - _PAIRS_CACHE: the materialized near-dup PAIR GRAPH per
-#     (sf_dir, threshold) — the shared input of every graph consumer
-#     (CC labels, triangles, PageRank, BFS). A production pipeline
-#     materializes the pair graph once and fans analytics out from
-#     it; rebuilding it per query would re-run shingling + the LSH/
-#     bucket join 4x. q40 (the pair operator itself) does NOT use
-#     the cache, so the operator's cost stays measured.
-_VOCAB_PROBE_CACHE: dict[tuple[str, str], tuple[int, list[str]]] = {}
-_LABELS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-def dedup_pairs_cached(
+def dedup_pair_graph(
     spark: SparkSession, sf_dir: str, threshold: float = 0.8
 ) -> DataFrame:
-    """Session-memoized (doc_a, doc_b) near-dup pair graph,
-    localCheckpointed on first build — the _LABELS_CACHE contract
-    (deterministic algorithm + read-only input ⇒ exact hits; cheap
-    count probe evicts entries whose checkpoint blocks died)."""
-    key = (_app_key(spark), sf_dir, threshold)
-    if key in _PAIRS_CACHE:
-        cached = _PAIRS_CACHE[key]
-        try:
-            cached.count()
-            return cached
-        except Exception:
-            del _PAIRS_CACHE[key]
-    pairs = (
+    """The (doc_a, doc_b) near-dup pair graph, localCheckpointed: the
+    shared input of every graph consumer (CC labels, triangles,
+    PageRank, BFS), which each branch it several times."""
+    return (
         dedup_ngram_jaccard(spark, sf_dir, threshold)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    _PAIRS_CACHE[key] = pairs
-    return pairs
-
-
-def _app_key(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,25 +60,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def spread_single_split_scan(df: DataFrame) -> DataFrame:
-    """Guide §2.5 "input skew: one huge unsplittable file …
-    repartition immediately after the read", GATED on the scan's
-    actual split count (r15).
-
-    The sf fixtures are single-row-group parquet files, so a scan of
-    ``documents`` plans as ONE task and every corpus map stage before
-    the first exchange — shingle builds, hash passes, and crucially
-    the map-side PARTIAL aggregation feeding the first shuffle — runs
-    on one core while the other 31 idle (measured: the q39
-    fingerprint pass 2.5–3.3 s single-split vs 1.9–2.3 s spread; the
-    q125/q216 candidate stage 2.1–2.4 → 1.8–2.1 s; identical rows).
+    """Repartition a scan right after the read when it has fewer
+    splits than the session has cores (input skew: one unsplittable
+    file), so the corpus map stages before the first exchange do not
+    run on one core. Measurements in OPTIMIZATION_r15.md.
 
     The repartition only fires when the scan cannot already feed
-    every core, so it is scale-adaptive by construction: on a real
-    deployment where the input has ≥ cores splits this helper is an
-    exact no-op (no exchange added) — unlike the constant
-    ``repartition(defaultParallelism)`` the media synths carry with a
-    bench-scale-only annotation. The probe compiles the (projected)
-    scan plan once; it launches no job.
+    every core: where the input has ≥ cores splits this helper is an
+    exact no-op (no exchange added). The probe compiles the
+    (projected) scan plan once; it launches no job.
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -209,27 +159,22 @@ def dedup_ngram_jaccard(
     # silently nulls tokens it has never seen, so the ≤64 decision
     # has to be proven over the FULL corpus, not sampled. (A sample
     # can only over-estimate ≤64-ness, never under-estimate it.)
-    probe_key = (_app_key(spark), sf_dir)
-    if probe_key in _VOCAB_PROBE_CACHE:
-        sample_vocab, vocab = _VOCAB_PROBE_CACHE[probe_key]
-    else:
-        sample_vocab = (
-            base.limit(1000)
-            .select(F.explode(tokens(F.col("text"))).alias("token"))
+    sample_vocab = (
+        base.limit(1000)
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        .distinct()
+        .limit(65)
+        .count()
+    )
+    vocab = []
+    if sample_vocab <= 64:
+        vocab = [
+            r["token"]
+            for r in base.select(F.explode(tokens(F.col("text"))).alias("token"))
             .distinct()
             .limit(65)
-            .count()
-        )
-        vocab = []
-        if sample_vocab <= 64:
-            vocab = [
-                r["token"]
-                for r in base.select(F.explode(tokens(F.col("text"))).alias("token"))
-                .distinct()
-                .limit(65)
-                .collect()
-            ]
-        _VOCAB_PROBE_CACHE[probe_key] = (sample_vocab, vocab)
+            .collect()
+        ]
 
     if sample_vocab <= 64 and len(vocab) <= 64:
         # token → precomputed single-bit mask (python-side; bit 63
@@ -734,8 +679,6 @@ def cluster_labels(
     sf_dir: str,
     threshold: float = 0.8,
     max_iters: int = 20,
-    *,
-    reuse_cached: bool = True,
 ) -> DataFrame:
     """Converged connected-component labels (doc_id, lbl) over the
     near-dup pair graph — the shared core of dedup_clusters and
@@ -744,47 +687,18 @@ def cluster_labels(
     singleton documents rejoin as lbl = doc_id after convergence. The
     node labels are localCheckpointed every round and the returned
     corpus-complete frame is checkpointed too, so
-    downstream consumers never replay the propagation loop.
-
-    ``reuse_cached=True`` serves a previously converged result for the
-    same (session, sf_dir, threshold) — exact, because the input path
-    is read-only and the algorithm is deterministic. Pass False to
-    force a fresh run (dedup_clusters does, so the operator's cost is
-    always measured, never hidden behind the memo).
-
-    Cache hits are probed (cheap count) before being handed out: the
-    cached lineage is truncated to non-reliable localCheckpoint blocks,
-    so on a multi-executor cluster a lost executor invalidates them —
-    a dead entry is evicted and recomputed instead of failing every
-    later consumer unrecoverably. (In local mode blocks live in the
-    driver JVM and the probe always succeeds.)"""
-    key = (_app_key(spark), sf_dir, threshold)
-    if reuse_cached and key in _LABELS_CACHE:
-        cached = _LABELS_CACHE[key]
-        try:
-            cached.count()
-            return cached
-        except Exception:
-            # checkpoint blocks gone (executor loss / eviction):
-            # recompute below rather than serving a poisoned handle
-            del _LABELS_CACHE[key]
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    downstream consumers never replay the propagation loop."""
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = edges.localCheckpoint()
 
-    # r14 (guide §1.2/§2.3): propagate labels over the EDGE-INCIDENT
-    # nodes only. A document with no near-dup edge has no neighbor,
-    # so its label is doc_id at every round by construction — carrying
-    # the whole corpus through the loop shuffled |corpus| rows per
-    # round to compute nothing (at 100 TB the duplicate graph is
-    # orders of magnitude smaller than the corpus). Singletons rejoin
-    # after convergence via the left join below; per-round identical
-    # labels ⇒ identical fixpoint ⇒ identical result. The changed-row
-    # convergence count is unaffected (singletons contributed 0).
-    # edges already holds both orientations, so src covers every
-    # endpoint.
+    # Propagate labels over the EDGE-INCIDENT nodes only: a document
+    # with no near-dup edge keeps lbl = doc_id at every round, so it
+    # rejoins after convergence (left join below) with an identical
+    # result (OPTIMIZATION_r14.md). edges holds both orientations, so
+    # src covers every endpoint.
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -832,9 +746,8 @@ def cluster_labels(
     # side is converged and checkpointed (graph-sized, broadcastable),
     # so each consumer pays one corpus scan + a broadcast-shaped join
     # — never the propagation loop. Under AQE this eager=False
-    # checkpoint still runs 3 jobs at build time (sf0.01); later
-    # consumers (q93's cache hit) read its blocks.
-    full = (
+    # checkpoint still runs 3 jobs at build time (sf0.01).
+    return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .join(labels, "doc_id", "left")
@@ -843,8 +756,6 @@ def cluster_labels(
         )
         .localCheckpoint(eager=False)
     )
-    _LABELS_CACHE[key] = full
-    return full
 
 
 def dedup_clusters(
@@ -873,9 +784,7 @@ def dedup_clusters(
     At 100 TB this is the standard large-graph CC shape (cf.
     Kiveris et al., "Connected Components in MapReduce"), bounded by
     the edge list, which near-dup blocking already made sparse."""
-    labels = cluster_labels(
-        spark, sf_dir, threshold, max_iters, reuse_cached=False
-    )
+    labels = cluster_labels(spark, sf_dir, threshold, max_iters)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "lbl")
@@ -894,10 +803,8 @@ def dedup_keep_canonical(
     answer "what groups exist", this answers "which rows survive":
     the output IS the post-dedup keep-list to join the corpus against.
 
-    Shape: cluster labels (see cluster_labels — REUSED from the
-    session cache when q45 already converged them for the same
-    (sf_dir, threshold); the keep-list must not rerun the most
-    expensive job in the pipeline) → filter to self-representing rows
+    Shape: cluster labels (see cluster_labels; converged once per
+    call, checkpointed) → filter to self-representing rows
     → one equi-join back to documents for the surviving rows'
     metadata. The join is keyed on doc_id, so at 100 TB it
     co-partitions with the corpus scan; no new shuffle shape beyond
@@ -988,7 +895,7 @@ def oriented_dedup_edges(
     most 2√E of those), so wedges joined at the source fall to
     Σ out-deg² ≤ O(E^1.5) — the classic bound (Chiba–Nishizeki;
     Suri & Vassilvitskii's MapReduce formulation)."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     deg = (
         pairs.select(F.col("doc_a").alias("v"))
         .unionAll(pairs.select(F.col("doc_b").alias("v")))
@@ -1187,7 +1094,7 @@ def graph_pagerank(
     the same DataFrame object every round) reuse shuffle stages, so
     checkpoints bought nothing and cost a materialization each — the
     upstream ``pairs`` frame is already checkpointed inside
-    dedup_pairs_cached, which is the one that matters. (For an
+    dedup_pair_graph, which is the one that matters. (For an
     unbounded-iteration loop the one-round-deep checkpoint discipline
     of the q45 CC loop still applies; at a fixed 5 rounds it is
     overhead.) At 100 TB the per-round shuffles are edge/vertex-keyed;
@@ -1202,7 +1109,7 @@ def graph_pagerank(
     float drift cannot compound (the kmeans_train/q118 convention).
     Reference capability: dedup-graph diagnostics over the upsert-key
     contract (task.ts:195-203) at corpus scale."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -1471,7 +1378,7 @@ def graph_bfs(
     the frontier's out-edges — the standard Pregel BFS in DataFrame
     algebra. Fixed max_hops is the replay contract (distances are
     exact small ints; nothing floats)."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(
@@ -1510,8 +1417,8 @@ def link_prediction_common_neighbors(
     probably near-dups the pairwise pass missed' (transitive
     boilerplate families), the classic graph-completion score.
 
-    Shape: symmetric edge list (built once from the shared pair-graph
-    memo); wedges u–w–v enumerate via one edge⋈edge equi-join on the
+    Shape: symmetric edge list (built once from the checkpointed pair
+    graph); wedges u–w–v enumerate via one edge⋈edge equi-join on the
     middle vertex with u < v (each unordered candidate once); a
     broadcast/key-partitioned ANTI join removes already-connected
     pairs; degrees join back for the Jaccard denominator
@@ -1532,7 +1439,7 @@ def link_prediction_common_neighbors(
     wedge appears in sym, so its degree row exists. ``sym`` — bounded
     at 2·|pairs| — is localCheckpointed once for its three consumers
     (both wedge sides + deg) instead of re-unioning per reference."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     sym = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(
@@ -1867,7 +1774,7 @@ def weighted_shortest_path(
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(tokens(F.col("text"))).alias("tk")
     )
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("tk").alias("tk_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("tk").alias("tk_b"))
     wedges = (
@@ -2352,7 +2259,7 @@ def label_propagation(
     instead of re-annotating.
 
     Graph = the q40/q45 edge set (same-source token-Jaccard ≥
-    ``threshold``, via the session-memoized pair cache). seed_mod
+    ``threshold``, via the checkpointed pair graph). seed_mod
     must be COPRIME to the fixture's duplicate-cluster id stride
     (20) or every near-dup neighbor of a seed is itself a seed and
     propagation is vacuously empty — measured, not assumed: mod 7
@@ -2367,7 +2274,7 @@ def label_propagation(
     hash-exact. Output: every document with its final label (NULL =
     never reached) and the round that labeled it (0 = seed)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(
@@ -2441,7 +2348,7 @@ def kcore_decomposition(
     one degree agg + two anti joins, shuffles bounded by the live
     edge set, which only shrinks; per-round localCheckpoint truncates
     the iterative lineage (the q122/q146 loop discipline)."""
-    pairs = dedup_pairs_cached(spark, sf_dir)
+    pairs = dedup_pair_graph(spark, sf_dir)
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(
@@ -2508,10 +2415,10 @@ def degree_assortativity(
     Σd_v, Σd_u·d_v, Σd_u², Σd_v²); r assembles in one double
     expression — deterministic, rounded 6dp; a degree-regular graph
     (zero variance) yields NULL via an explicit guard. The pair
-    graph itself is the session-cached banded build
-    (dedup_pairs_cached); degrees join back broadcast (vertex count
+    graph itself is the checkpointed banded build
+    (dedup_pair_graph); degrees join back broadcast (vertex count
     ≪ edge count)."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     directed = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionAll(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
@@ -2709,7 +2616,7 @@ def harmonic_closeness(
     (pivot, v) min-agg; fixed max_hops is the replay contract.
     Reference capability: dedup-graph diagnostics over the
     upsert-key contract (task.ts:195-203) at corpus scale."""
-    pairs = dedup_pairs_cached(spark, sf_dir, threshold)
+    pairs = dedup_pair_graph(spark, sf_dir, threshold)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(

@@ -6913,12 +6913,6 @@ def kruskal_wallis(spark: SparkSession, sf_dir: str,
     )
 
 
-#: Session-memoized life tables keyed (applicationId, sf_dir) — the
-#: dedup._PAIRS_CACHE contract (deterministic builder + read-only
-#: input ⇒ exact hits; count probe evicts dead checkpoints).
-_SURV_CACHE: dict = {}
-
-
 def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared life-table builder for the survival estimators (q257
     Kaplan–Meier product-limit, q300 Nelson–Aalen cumulative
@@ -6926,28 +6920,17 @@ def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     order customers right-censored at corpus end), reduced to the
     event-time frame (t_days, d_events, n_risk).
 
-    Round-9: the result is locally CHECKPOINTED and session-memoized
-    (_SURV_CACHE). Every consumer branches this frame at least twice
-    (estimator + totals), and five queries (q257/q299/q305/q343/q360
-    via the 2-group variant's shared upstream) rebuild it — without
-    the checkpoint each branch replays the corpus-scale per-customer
-    agg, so at 100 TB one query paid 2–3 orders scans. The table
-    itself is calendar-bounded (≤ 10⁴ rows), so the checkpoint is
-    trivially cheap.
+    The result is locally CHECKPOINTED: every consumer branches this
+    frame at least twice (estimator + totals), and without the
+    checkpoint each branch replays the corpus-scale per-customer agg.
+    The table itself is calendar-bounded (≤ 10⁴ rows), so the
+    checkpoint is cheap.
 
     The heavy stage is the one custkey shuffle for first/second
     order; the at-risk counts come from an exclusive prefix sum over
     the DISTINCT-duration histogram (calendar-bounded ≤ 10⁴ rows
     regardless of corpus size), so everything downstream of the
     per-customer agg is scale-free."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SURV_CACHE.get(key)
-    if cached is not None:
-        try:
-            cached.count()
-            return cached
-        except Exception:
-            del _SURV_CACHE[key]
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("d")
     )
@@ -6981,7 +6964,7 @@ def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("dur").alias("t_days"))
         .agg(F.count("*").alias("d_events"))
     )
-    kt = (
+    return (
         ev.join(at_risk, ev.t_days == at_risk.dur)
         .join(F.broadcast(n_total), F.lit(True))
         .select(
@@ -6990,8 +6973,6 @@ def _survival_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_subjects") - F.col("before")).alias("n_risk"),
         )
     ).localCheckpoint()
-    _SURV_CACHE[key] = kt
-    return kt
 
 
 def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:

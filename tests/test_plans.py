@@ -399,3 +399,44 @@ def test_partition_pruning_static_and_dynamic(spark, sf_dir, tmp_path):
         .count()
     )
     assert n == expect
+
+
+# PLANS.md rows checked against the code, so a plan change cannot leave
+# the committed table stale: q01 (the ordered-output floor), q243 (whose
+# row once drifted unnoticed) and the consumers of the shared dedup and
+# life-table builders.
+PINNED_PLAN_ROWS = [
+    "q01_pricing_summary",
+    "q243_duplicate_ngram_rate",
+    "q45_dedup_clusters",
+    "q93_dedup_keep_canonical",
+    "q154_cluster_sample",
+    "q257_kaplan_meier",
+    "q299_nelson_aalen",
+    "q350_harmonic_closeness",
+    "q360_weibull_fit",
+]
+
+
+@pytest.fixture(scope="module")
+def committed_plans():
+    import re
+
+    from tools.plan_report import PLANS_MD
+
+    with open(PLANS_MD) as f:
+        text = f.read()
+    sf_dir = re.search(r"Generated by `tools/plan_report.py` at `([^`]+)`", text).group(1)
+    rows = {ln.split(" | ", 1)[0][2:]: ln for ln in text.splitlines() if ln.startswith("| q")}
+    return sf_dir, rows
+
+
+@pytest.mark.parametrize("name", PINNED_PLAN_ROWS)
+def test_plans_md_row_matches_code(spark, committed_plans, name):
+    """Regenerate this query's PLANS.md line at the table's own SF and
+    compare it with the committed one (`python tools/plan_report.py`
+    rewrites the table)."""
+    from tools.plan_report import plan_row
+
+    sf_dir, rows = committed_plans
+    assert plan_row(spark, name, sf_dir) == rows[name]

@@ -73,7 +73,7 @@ def test_link_prediction_path_graph(spark, tmp_path_factory):
     b_txt = " ".join(w)
     c_txt = " ".join(w[2:] + ["cc1", "cc2"])
     d = _write_docs(spark, tmp_path_factory, [(0, a_txt), (1, b_txt), (2, c_txt)], "lp")
-    pairs = {(r["doc_a"], r["doc_b"]) for r in dd.dedup_pairs_cached(spark, d, 0.8).collect()}
+    pairs = {(r["doc_a"], r["doc_b"]) for r in dd.dedup_pair_graph(spark, d, 0.8).collect()}
     assert pairs == {(0, 1), (1, 2)}, pairs
     out = dd.link_prediction_common_neighbors(spark, d).collect()
     assert len(out) == 1
@@ -412,7 +412,7 @@ def test_leakage_safe_folds_never_split_a_cluster(spark, tmp_path_factory):
             F.pmod(md5_feature_hash(F.col("lbl").cast("string")), F.lit(5)).alias("fold"),
         ).collect()
     }
-    pairs = [(r["doc_a"], r["doc_b"]) for r in dd.dedup_pairs_cached(spark, d, 0.8).collect()]
+    pairs = [(r["doc_a"], r["doc_b"]) for r in dd.dedup_pair_graph(spark, d, 0.8).collect()]
     assert len(pairs) >= 3 + 2  # both families connected
     for a, b in pairs:
         assert folds[a] == folds[b], (a, b, folds[a], folds[b])

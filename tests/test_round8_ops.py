@@ -270,22 +270,30 @@ def test_kaplan_meier_survival_monotone(spark):
     assert all(a >= b for a, b in zip(risks, risks[1:]))
 
 
-def test_survival_table_memo_hit_builds_nothing(spark, monkeypatch):
-    """A memo hit returns the memoized life table before any of its
-    plan is built: once the first call has read ``orders``, load_table
-    raises, and a second call in the same session still succeeds."""
-    monkeypatch.setattr(rel, "_SURV_CACHE", {})
-    real, reads = rel.load_table, []
+@pytest.mark.parametrize(
+    "module, builder, stage",
+    [
+        (rel, "_survival_risk_table", "load_table"),
+        (dedup, "cluster_labels", "dedup_ngram_jaccard"),
+        (dedup, "dedup_pair_graph", "dedup_ngram_jaccard"),
+    ],
+    ids=["life_table", "cluster_labels", "pair_graph"],
+)
+def test_back_to_back_calls_each_build_their_input(spark, monkeypatch, module, builder, stage):
+    """The engine keeps no state between queries: two calls in one
+    session each build their own input (the life table reads only
+    ``orders``; the labels and the pair graph each run the pair
+    operator)."""
+    real, calls = getattr(module, stage), []
 
-    def load_once(*args, **kwargs):
-        if reads:
-            raise AssertionError("life table rebuilt on a memo hit")
-        reads.append(args)
+    def counted(*args, **kwargs):
+        calls.append(args)
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(rel, "load_table", load_once)
-    first = rel._survival_risk_table(spark, SF)
-    assert rel._survival_risk_table(spark, SF) is first
+    monkeypatch.setattr(module, stage, counted)
+    for _ in range(2):
+        getattr(module, builder)(spark, SF)
+    assert len(calls) == 2
 
 
 def test_assortativity_path_graph_is_minus_one(spark, tmp_path):

@@ -29,28 +29,29 @@ from etl_geonet_quakes_spark.queries import SPECS  # noqa: E402
 from etl_geonet_quakes_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+PLANS_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
+)
 
 # Queries whose construction executes jobs by design (iterative
 # convergence loops, adaptive strategy probes, stream drains) — their
 # plans are still captured, the note just explains the extra cost.
 EAGER = {
     "q45_dedup_clusters": "iterative CC loop runs at build time",
-    "q93_dedup_keep_canonical": "reuses the CC loop",
+    "q93_dedup_keep_canonical": "runs its own CC loop at build time",
     "q40_dedup_ngram_jaccard": "bounded vocab probe runs at build time",
     "q38_dedup_minhash_lsh": "",
-# round 9: q02/q03's boundary-validation pre-flight count was folded
-# into the main pass (an in-scan check) — no eager note anymore.
     "q350_harmonic_closeness": (
-        "pair cache builds at first use; per-pivot BFS loop is lazy "
+        "pair graph checkpointed at build; per-pivot BFS loop is lazy "
         "(plan is the final round)"
     ),
     "q357_markov_power": (
         "bounded (from,to,first) count table checkpointed at build; "
         "n_users is its re-aggregation"
     ),
-    "q257_kaplan_meier": "life table checkpointed at first use (shared _SURV_CACHE)",
-    "q299_nelson_aalen": "reuses the checkpointed life table",
-    "q360_weibull_fit": "reuses the checkpointed life table",
+    "q257_kaplan_meier": "life table checkpointed at build",
+    "q299_nelson_aalen": "life table checkpointed at build",
+    "q360_weibull_fit": "life table checkpointed at build",
     "q115_graph_triangles": (
         "oriented edge list checkpointed at build. BNLJ intended: "
         "single-row aggregates crossed. DEGREE-ORIENTED wedge join "
@@ -58,17 +59,16 @@ EAGER = {
         "giant-clique/hub skew — pinned in test_edge_corpora.py"
     ),
     "q118_kmeans_train": "Lloyd rounds 1..n-1 run at build time (driver-state loop); plan is the final round",
-    "q154_cluster_sample": "reuses the converged CC label cache (the q93 path)",
+    "q154_cluster_sample": "runs its own CC loop at build time (the q93 path)",
     "q152_power_iteration": "matvec rounds 1..n-1 run at build time (driver-state loop, 64 doubles); plan is the final round",
     "q151_stream_dedup_minhash": (
         "availableNow micro-batch replay runs at build time "
         "(foreachBatch incremental index); the returned frame is the "
         "materialized union of per-batch emissions"
     ),
-    # r14 optimization round: multi-reference intermediates are now
-    # eagerly localCheckpointed at build (guide §1.2/§2.4 — stop
-    # re-running corpus-scale subtrees per consumer); plan captured
-    # is the post-materialization consumer query.
+    # Multi-reference intermediates are localCheckpointed at build so
+    # consumers do not re-run corpus-scale subtrees (OPTIMIZATION_r14.md);
+    # the plan captured is the post-materialization consumer query.
     "q125_dedup_prefix": "candidate pairs checkpointed at build (verify tier re-shingles candidates only)",
     "q180_dedup_containment": "candidate pairs checkpointed at build (verify tier re-shingles candidates only)",
     "q215_cross_corpus_dedup": "candidate pairs checkpointed at build (verify tier re-shingles candidates only)",
@@ -115,48 +115,48 @@ BNLJ_INTENDED = {
 }
 
 
+def _qnum(name: str) -> tuple[int, str]:
+    # numeric order, not registry-dict insertion order (q219/q220
+    # were registered out of sequence; the report reads in query order)
+    m = re.match(r"q(\d+)", name)
+    return (int(m.group(1)) if m else 10**9, name)
+
+
+def plan_row(spark, name: str, sf_dir: str) -> str:
+    """The PLANS.md table line for registry entry ``name``, built at
+    ``sf_dir``."""
+    try:
+        df = SPECS[name].fn(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        p = buf.getvalue()
+    except Exception as ex:  # streaming fns that need a sink etc.
+        return f"| {name} | — | — | — | (unplannable here: {type(ex).__name__}) |"
+    n_ex = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
+    joins = sorted(
+        set(
+            re.findall(
+                r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
+                r"BroadcastNestedLoopJoin|CartesianProduct)",
+                p,
+            )
+        )
+    )
+    pushed = bool(re.search(r"PushedFilters: \[(?!\])", p))
+    jtxt = ", ".join(j.replace("Join", "") for j in joins) or "—"
+    flag = "CARTESIAN" if "CartesianProduct" in p else ""
+    note = EAGER.get(name, "") or BNLJ_INTENDED.get(name, "")
+    note_full = " ".join(x for x in (flag, note) if x)
+    return f"| {name} | {n_ex} | {jtxt} | {'yes' if pushed else '—'} | {note_full} |"
+
+
 def main() -> None:
     spark = get_spark("plan-report", master="local[8]", shuffle_partitions=8)
-    rows = []
-    # numeric order, not registry-dict insertion order (q219/q220
-    # were registered out of sequence; the report should still read
-    # in query order)
-    def _qnum(item):
-        import re as _re
-
-        m = _re.match(r"q(\d+)", item[0])
-        return (int(m.group(1)) if m else 10**9, item[0])
-
-    for name, spec in sorted(SPECS.items(), key=_qnum):
-        try:
-            df = spec.fn(spark, SF_DIR)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            p = buf.getvalue()
-        except Exception as ex:  # streaming fns that need a sink etc.
-            rows.append((name, None, f"(unplannable here: {type(ex).__name__})"))
-            continue
-        n_ex = len(re.findall(r"^\(\d+\) Exchange", p, re.M))
-        joins = sorted(
-            {
-                m
-                for m in re.findall(
-                    r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-                    r"BroadcastNestedLoopJoin|CartesianProduct)",
-                    p,
-                )
-            }
-        )
-        pushed = bool(
-            re.search(r"PushedFilters: \[(?!\])", p)
-        )
-        flags = []
-        if "CartesianProduct" in p:
-            flags.append("CARTESIAN")
-        note = EAGER.get(name, "") or BNLJ_INTENDED.get(name, "")
-        rows.append((name, (n_ex, joins, pushed, flags), note))
-
+    names = sorted(SPECS, key=_qnum)
+    lines = [plan_row(spark, name, SF_DIR) for name in names]
+    plannable = sum(1 for ln in lines if "(unplannable here" not in ln)
+    cart = [n for n, ln in zip(names, lines) if "CARTESIAN" in ln]
     out = [
         "# PLANS — physical-plan audit of every registry query",
         "",
@@ -170,31 +170,16 @@ def main() -> None:
         "",
         "| query | Ex | joins | pushed | notes |",
         "|---|---|---|---|---|",
-    ]
-    for name, info, note in rows:
-        if info is None:
-            out.append(f"| {name} | — | — | — | {note} |")
-            continue
-        n_ex, joins, pushed, flags = info
-        jtxt = ", ".join(j.replace("Join", "") for j in joins) or "—"
-        ftxt = " ".join(flags)
-        note_full = " ".join(x for x in (ftxt, note) if x)
-        out.append(
-            f"| {name} | {n_ex} | {jtxt} | {'yes' if pushed else '—'} "
-            f"| {note_full} |"
-        )
-    cart = [r[0] for r in rows if r[1] and "CARTESIAN" in r[1][3]]
-    out += [
+        *lines,
         "",
-        f"**Summary:** {len(rows)} queries planned; "
-        f"{sum(1 for r in rows if r[1])} plannable; "
+        f"**Summary:** {len(lines)} queries planned; "
+        f"{plannable} plannable; "
         f"cartesian products: {cart if cart else 'none'}.",
         "",
     ]
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(PLANS_MD, "w") as f:
         f.write("\n".join(out))
-    print(f"PLANS.md written: {len(rows)} queries")
+    print(f"PLANS.md written: {len(lines)} queries")
 
 
 if __name__ == "__main__":
