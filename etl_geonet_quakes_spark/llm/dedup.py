@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_geonet_quakes_spark.io import load_table
@@ -39,9 +39,10 @@ def dedup_pair_graph(
 ) -> DataFrame:
     """The (doc_a, doc_b) near-dup pair graph, localCheckpointed: the
     shared input of every graph consumer (CC labels, triangles,
-    PageRank, BFS), which each branch it several times."""
+    PageRank, BFS), which each branch it several times. Unordered: no
+    consumer reads the pair order, so none pays for a sort."""
     return (
-        dedup_ngram_jaccard(spark, sf_dir, threshold)
+        _ngram_jaccard_pairs(spark, sf_dir, threshold)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
@@ -78,10 +79,6 @@ def spread_single_split_scan(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     return df.repartition(par)
-
-
-def _distinct_tokens(col: Column) -> Column:
-    return F.array_distinct(tokens(col))
 
 
 def shingles_str(col: Column, n: int = 3) -> Column:
@@ -134,82 +131,32 @@ def dedup_ngram_jaccard(
     (or a member and an adjacent block) are not listed — at high τ
     near-transitivity makes the rep edge carry the cluster.
 
-    Two physical strategies, chosen adaptively, identical results:
-
-    - **bitmask** (vocabulary ≤ 64 distinct tokens): dictionary-encode
-      each token to a bit, a document's token SET becomes one int64;
-      |A∩B| = bit_count(A&B), |A∪B| = bit_count(A|B). The pairwise
-      work drops from O(|A|+|B|) array hashing to three ALU ops — the
-      classic dictionary-encoding win on low-cardinality columns. The
-      ≤64 probe reads at most 65 rows of a distinct scan.
-    - **array** (general case): array_intersect/array_union sizes.
-
-    Either way the score is one integer division in double space
-    (bit-reproducible), blocking on ``source`` keeps the self-join
-    from going quadratic, and a provable size-ratio prune
+    The score is |A∩B| / |A∪B| over the distinct token sets
+    (array_intersect/array_union sizes), one integer division in
+    double space (bit-reproducible); blocking on ``source`` keeps the
+    self-join from going quadratic, and a provable size-ratio prune
     (J ≤ min/max) sits inside the join condition so hopeless pairs
     die before the set work runs.
     """
-    base = load_table(spark, sf_dir, "documents")
-    # Two-stage probe so strategy choice never full-scans at 100 TB:
-    # a 1000-document slice showing ≥65 distinct tokens proves the
-    # corpus is NOT ≤64-vocab → array path, probe cost one limited
-    # scan. Only when the sample looks tiny does the exact
-    # explode+distinct probe run — it must, because the bitmask map
-    # silently nulls tokens it has never seen, so the ≤64 decision
-    # has to be proven over the FULL corpus, not sampled. (A sample
-    # can only over-estimate ≤64-ness, never under-estimate it.)
-    sample_vocab = (
-        base.limit(1000)
-        .select(F.explode(tokens(F.col("text"))).alias("token"))
-        .distinct()
-        .limit(65)
-        .count()
-    )
-    vocab = []
-    if sample_vocab <= 64:
-        vocab = [
-            r["token"]
-            for r in base.select(F.explode(tokens(F.col("text"))).alias("token"))
-            .distinct()
-            .limit(65)
-            .collect()
-        ]
+    return _ngram_jaccard_pairs(
+        spark, sf_dir, threshold, saturated_block_cap
+    ).orderBy("doc_a", "doc_b")
 
-    if sample_vocab <= 64 and len(vocab) <= 64:
-        # token → precomputed single-bit mask (python-side; bit 63
-        # wraps to the signed long representation)
-        def bit_mask(i: int) -> int:
-            v = 1 << i
-            return v - (1 << 64) if v >= 1 << 63 else v
 
-        pairs: list[F.Column] = []
-        for i, t in enumerate(sorted(vocab)):
-            pairs.extend([F.lit(t), F.lit(bit_mask(i)).cast("long")])
-        bit_map = F.create_map(*pairs)
-        mask = F.aggregate(
-            F.transform(
-                _distinct_tokens(F.col("text")),
-                lambda t: F.element_at(bit_map, t),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        )
-        d = spread_single_split_scan(
-            base.select("doc_id", "source", "text")
-        ).select("doc_id", "source", mask.alias("m")).withColumn(
-            "n", F.bit_count("m")
-        )
-        inter = F.bit_count(F.col("a.m").bitwiseAND(F.col("b.m")))
-        union = F.bit_count(F.col("a.m").bitwiseOR(F.col("b.m")))
-    else:
-        d = spread_single_split_scan(
-            base.select("doc_id", "source", "text")
-        ).select(
-            "doc_id", "source", _distinct_tokens(F.col("text")).alias("toks")
-        ).withColumn("n", F.size("toks"))
-        inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-        union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
+def _ngram_jaccard_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float,
+    saturated_block_cap: int | None = None,
+) -> DataFrame:
+    """dedup_ngram_jaccard's (doc_a, doc_b, jaccard) pairs, unordered."""
+    d = spread_single_split_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    ).select(
+        "doc_id", "source", F.array_distinct(tokens(F.col("text"))).alias("toks")
+    ).withColumn("n", F.size("toks"))
+    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
+    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
 
     # Second blocking key: log-scale SIZE buckets. J ≥ τ forces
     # min(|A|,|B|)/max(|A|,|B|) ≥ τ, so with bucket width ln(base),
@@ -293,7 +240,7 @@ def dedup_ngram_jaccard(
     )
     if star is not None:
         out = out.unionByName(star)
-    return out.filter(F.col("jaccard") >= threshold).orderBy("doc_a", "doc_b")
+    return out.filter(F.col("jaccard") >= threshold)
 
 
 def _minhash_signature_array(tok_col: Column, n_hashes: int) -> Column:
@@ -698,42 +645,40 @@ def cluster_labels(
     # with no near-dup edge keeps lbl = doc_id at every round, so it
     # rejoins after convergence (left join below) with an identical
     # result (OPTIMIZATION_r14.md). edges holds both orientations, so
-    # src covers every endpoint.
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint()
+    # src covers every endpoint, and the first step (every label
+    # starts as doc_id) is one groupBy over the edge list.
+    stepped = (
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
+        .select(F.col("src").alias("doc_id"), F.col("src").alias("old_lbl"), "lbl")
     )
-    converged = False
     for _ in range(max_iters):
+        # fixpoint = zero labels changed this round, counted while the
+        # round's checkpoint runs. A changed-row count (not a label-sum
+        # comparison) stays overflow-free at any doc_id scale and is
+        # sound under ANSI arithmetic.
+        changed = Observation()
+        labels = (
+            stepped.observe(
+                changed,
+                F.count(F.when(F.col("lbl") != F.col("old_lbl"), 1)).alias("n"),
+            )
+            .localCheckpoint()
+            .select("doc_id", "lbl")
+        )
+        if changed.get["n"] == 0:
+            break
         nbr_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        stepped = (
-            labels.join(nbr_min, labels.doc_id == nbr_min.src, "left")
-            .select(
-                "doc_id",
-                F.col("lbl").alias("old_lbl"),
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            )
-            # eager=False does not defer the work here: under AQE the
-            # call itself runs the round's shuffle stages (6 jobs at
-            # sf0.01) and the convergence count below runs 2 more, so
-            # a round costs 8 jobs
-            .localCheckpoint(eager=False)
+        stepped = labels.join(nbr_min, labels.doc_id == nbr_min.src).select(
+            "doc_id",
+            F.col("lbl").alias("old_lbl"),
+            F.least("lbl", "nbr_lbl").alias("lbl"),
         )
-        # fixpoint = zero labels changed this round. A changed-row
-        # count (not a label-sum comparison) stays overflow-free at
-        # any doc_id scale and is sound under ANSI arithmetic.
-        changed = stepped.filter(F.col("lbl") != F.col("old_lbl")).count()
-        labels = stepped.select("doc_id", "lbl")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
+    else:
         # Falling through with partial propagation would silently emit
         # SPLIT clusters (wrong reps/sizes) — fail loudly instead; the
         # caller can raise max_iters for pathologically deep chains.
@@ -745,8 +690,7 @@ def cluster_labels(
     # Reattach the singleton documents (lbl = doc_id). The node-label
     # side is converged and checkpointed (graph-sized, broadcastable),
     # so each consumer pays one corpus scan + a broadcast-shaped join
-    # — never the propagation loop. Under AQE this eager=False
-    # checkpoint still runs 3 jobs at build time (sf0.01).
+    # — never the propagation loop.
     return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.parity_sweep import compare_one, shared_oracles  # noqa: E402
+from tools.parity_sweep import compare_one, shared_oracles, sweep  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -203,3 +203,24 @@ def test_null_placement_changes_checksum(spark, con):
     )
     entry = compare_one(spark, con, spec, row_budget=50)
     assert entry["status"] == "checksum_mismatch"
+
+
+def test_sweep_writes_each_finished_entry(spark, con, tmp_path):
+    """The artifact is on disk after every entry, so a sweep stopped
+    mid-way keeps what it matched: the second entry reads the file
+    while it is being compared and finds the first one there."""
+    import json
+
+    out = tmp_path / "PARITY.json"
+    seen = []
+
+    def read_then_build(spark, sf_dir):
+        seen.append(json.loads(out.read_text()))
+        return _synthetic_spec(20).fn(spark, sf_dir)
+
+    second = SimpleNamespace(fn=read_then_build, oracle=_synthetic_spec(20).oracle)
+    artifact = sweep(spark, con, {"a": _synthetic_spec(10), "b": second}, str(out))
+    assert seen[0]["n_done"] == 1 and seen[0]["queries"]["a"]["status"] == "match"
+    assert artifact["n_match"] == artifact["n_done"] == artifact["n_total"] == 2
+    assert json.loads(out.read_text())["queries"] == artifact["queries"]
+    assert not (tmp_path / "PARITY.json.tmp").exists()

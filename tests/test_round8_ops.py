@@ -274,8 +274,8 @@ def test_kaplan_meier_survival_monotone(spark):
     "module, builder, stage",
     [
         (rel, "_survival_risk_table", "load_table"),
-        (dedup, "cluster_labels", "dedup_ngram_jaccard"),
-        (dedup, "dedup_pair_graph", "dedup_ngram_jaccard"),
+        (dedup, "cluster_labels", "_ngram_jaccard_pairs"),
+        (dedup, "dedup_pair_graph", "_ngram_jaccard_pairs"),
     ],
     ids=["life_table", "cluster_labels", "pair_graph"],
 )
@@ -294,6 +294,29 @@ def test_back_to_back_calls_each_build_their_input(spark, monkeypatch, module, b
     for _ in range(2):
         getattr(module, builder)(spark, SF)
     assert len(calls) == 2
+
+
+def test_cluster_labels_converges_exactly_at_max_iters(spark, tmp_path):
+    """A path graph 1−2−…−5 needs 5 propagation rounds: doc 1's label
+    reaches doc 5 in round 4, and round 5 changes nothing. Doc i holds
+    the 11 tokens t_i..t_{i+10}, so neighbours score 10/12 ≥ 0.8 and
+    docs two apart 9/13 < 0.8; doc 6 shares no token and stays a
+    singleton."""
+    base = str(tmp_path / "path")
+    texts = {i: " ".join(f"t{j}" for j in range(i, i + 11)) for i in range(1, 6)}
+    texts[6] = " ".join(f"u{j}" for j in range(11))
+    spark.createDataFrame(
+        [(i, s, "en", "src", len(s)) for i, s in texts.items()],
+        "doc_id: long, text: string, lang: string, source: string, "
+        "n_chars: long",
+    ).write.parquet(f"{base}/documents.parquet")
+    labels = {
+        r["doc_id"]: r["lbl"]
+        for r in dedup.cluster_labels(spark, base, max_iters=5).collect()
+    }
+    assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 6}
+    with pytest.raises(RuntimeError, match="did not converge within 4 rounds"):
+        dedup.cluster_labels(spark, base, max_iters=4)
 
 
 def test_assortativity_path_graph_is_minus_one(spark, tmp_path):

@@ -181,6 +181,56 @@ def _selected_specs() -> dict:
     return {n: SPECS[n] for n in names}
 
 
+def _artifact(specs: dict, results: dict, sweep_sec: float) -> dict:
+    n = collections.Counter(entry["status"] for entry in results.values())
+    n_ok = n["match"] + n["checksum_match"]
+    return {
+        "metric": "oracle_parity_sweep",
+        "sf_dir": SF_DIR,
+        "n_match": n_ok,
+        "n_mismatch": len(results) - n_ok - n["rows_only"] - n["error"],
+        "n_error": n["error"],
+        "n_rows_only": n["rows_only"],
+        "n_done": len(results),
+        "n_total": len(specs),
+        "selection": os.environ.get("SPARK_GRAFT_QUERIES"),
+        "row_budget": ROW_BUDGET,
+        "sweep_sec": round(sweep_sec, 3),
+        "queries": results,
+    }
+
+
+def sweep(spark, con, specs: dict, out_path: str) -> dict:
+    """Compare every spec in order and return the artifact. The
+    artifact is rewritten at ``out_path`` after each entry (temp file
+    plus ``os.replace``), so a sweep that is stopped keeps every
+    result it finished."""
+    oracle_memo = shared_oracles(specs)
+    results: dict[str, dict] = {}
+    t_sweep = time.perf_counter()
+    for name, spec in specs.items():
+        try:
+            results[name] = compare_one(spark, con, spec, oracle_memo=oracle_memo)
+        except Exception as exc:  # record loudly, keep sweeping
+            results[name] = {
+                "status": "error",
+                "err": f"{type(exc).__name__}: {exc}"[:300],
+            }
+        tmp = f"{out_path}.tmp"
+        with open(tmp, "w") as f:
+            f.write(
+                json.dumps(_artifact(specs, results, time.perf_counter() - t_sweep))
+                + "\n"
+            )
+        os.replace(tmp, out_path)
+        print(
+            f"# {name}: {results[name]['status']}"
+            f" ({len(results)}/{len(specs)})",
+            file=sys.stderr,
+        )
+    return _artifact(specs, results, time.perf_counter() - t_sweep)
+
+
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else (
         f"PARITY_sf{SF_DIR.rstrip('/').rsplit('sf', 1)[-1]}.json"
@@ -202,50 +252,7 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    specs = _selected_specs()
-    oracle_memo = shared_oracles(specs)
-    results: dict[str, dict] = {}
-    n_ok = n_bad = n_rows_only = n_err = 0
-    t_sweep = time.perf_counter()
-    for name, spec in specs.items():
-        try:
-            entry = compare_one(spark, con, spec, oracle_memo=oracle_memo)
-            results[name] = entry
-            if entry["status"] in ("match", "checksum_match"):
-                n_ok += 1
-            elif entry["status"] == "rows_only":
-                n_rows_only += 1
-            elif entry["status"] == "error":
-                n_err += 1
-            else:
-                n_bad += 1
-        except Exception as exc:  # record loudly, keep sweeping
-            results[name] = {
-                "status": "error",
-                "err": f"{type(exc).__name__}: {exc}"[:300],
-            }
-            n_err += 1
-        print(
-            f"# {name}: {results[name]['status']}"
-            f" ({len(results)}/{len(specs)})",
-            file=sys.stderr,
-        )
-
-    artifact = {
-        "metric": "oracle_parity_sweep",
-        "sf_dir": SF_DIR,
-        "n_match": n_ok,
-        "n_mismatch": n_bad,
-        "n_error": n_err,
-        "n_rows_only": n_rows_only,
-        "n_total": len(specs),
-        "selection": os.environ.get("SPARK_GRAFT_QUERIES"),
-        "row_budget": ROW_BUDGET,
-        "sweep_sec": round(time.perf_counter() - t_sweep, 3),
-        "queries": results,
-    }
-    with open(out_path, "w") as f:
-        f.write(json.dumps(artifact) + "\n")
+    artifact = sweep(spark, con, _selected_specs(), out_path)
     print(
         json.dumps(
             {
@@ -257,11 +264,11 @@ def main() -> None:
             }
         )
     )
-    if n_bad or n_err:
-        bad = {
-            k: v["status"] for k, v in results.items()
-            if v["status"] not in ("match", "checksum_match", "rows_only")
-        }
+    bad = {
+        k: v["status"] for k, v in artifact["queries"].items()
+        if v["status"] not in ("match", "checksum_match", "rows_only")
+    }
+    if bad:
         print(f"NON-MATCHES: {json.dumps(bad)}", file=sys.stderr)
         sys.exit(1)
 

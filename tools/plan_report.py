@@ -34,12 +34,11 @@ PLANS_MD = os.path.join(
 )
 
 # Queries whose construction executes jobs by design (iterative
-# convergence loops, adaptive strategy probes, stream drains) — their
+# convergence loops, build-time checkpoints, stream drains) — their
 # plans are still captured, the note just explains the extra cost.
 EAGER = {
-    "q45_dedup_clusters": "iterative CC loop runs at build time",
+    "q45_dedup_clusters": "CC loop runs at build time (one checkpoint per round)",
     "q93_dedup_keep_canonical": "runs its own CC loop at build time",
-    "q40_dedup_ngram_jaccard": "bounded vocab probe runs at build time",
     "q38_dedup_minhash_lsh": "",
     "q350_harmonic_closeness": (
         "pair graph checkpointed at build; per-pivot BFS loop is lazy "
